@@ -7,25 +7,24 @@ gives the DuckDB-equivalent SQL for hash-matched correctness.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_for_data_streaming_and_analysis_spark.catalog import load_tables
 from lakehouse_for_data_streaming_and_analysis_spark.plans import star
 from lakehouse_for_data_streaming_and_analysis_spark.queries import (
     advanced,
-    hypothesis,
     analytics,
     charts,
     curation,
-    decision,
-    lmstats,
     datapipe,
+    decision,
+    hypothesis,
+    lmstats,
     observability,
     olap,
     pipeline,
     product,
+    registry,
     relational,
     sketches,
     textprep,
@@ -623,6 +622,11 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
+# The two star-schema queries, registered like any queries module.
+_STAR = registry.module()
+
+
+@_STAR.q("star_revenue_by_nation_month", star.STAR_REVENUE_ORACLE)
 def _q_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     return star.star_revenue_by_nation_month(
@@ -630,6 +634,7 @@ def _q_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_STAR.q("star_filtered_dim_subquery", star.STAR_FILTERED_DIM_ORACLE)
 def _q_star_filtered_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     return star.star_filtered_dim_subquery(
@@ -637,84 +642,37 @@ def _q_star_filtered_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        "star_revenue_by_nation_month": _q_star_revenue,
-        "star_filtered_dim_subquery": _q_star_filtered_dim,
-    }
-    out.update(relational.QUERIES)
-    out.update(datapipe.QUERIES)
-    out.update(pipeline.QUERIES)
-    out.update(analytics.QUERIES)
-    out.update(charts.QUERIES)
-    out.update(observability.QUERIES)
-    out.update(olap.QUERIES)
-    out.update(advanced.QUERIES)
-    out.update(curation.QUERIES)
-    out.update(decision.QUERIES)
-    out.update(timeseries.QUERIES)
-    out.update(lmstats.QUERIES)
-    out.update(product.QUERIES)
-    out.update(training.QUERIES)
-    out.update(textprep.QUERIES)
-    out.update(windowlab.QUERIES)
-    out.update(sketches.QUERIES)
-    out.update(hypothesis.QUERIES)
-    return _rotation_order(out)
+# Registry order: queries() keeps it outside the verification window.
+MODULES = (
+    _STAR,
+    relational,
+    datapipe,
+    pipeline,
+    analytics,
+    charts,
+    observability,
+    olap,
+    advanced,
+    curation,
+    decision,
+    timeseries,
+    lmstats,
+    product,
+    training,
+    textprep,
+    windowlab,
+    sketches,
+    hypothesis,
+)
+
+
+def queries() -> dict[str, registry.Query]:
+    return _rotation_order(registry.merge(MODULES))
 
 
 def oracle_sql() -> dict[str, str]:
-    out = {
-        "star_revenue_by_nation_month": star.STAR_REVENUE_ORACLE,
-        "star_filtered_dim_subquery": star.STAR_FILTERED_DIM_ORACLE,
-    }
-    out.update(relational.ORACLES)
-    out.update(datapipe.ORACLES)
-    out.update(pipeline.ORACLES)
-    out.update(analytics.ORACLES)
-    out.update(charts.ORACLES)
-    out.update(observability.ORACLES)
-    out.update(olap.ORACLES)
-    out.update(advanced.ORACLES)
-    out.update(curation.ORACLES)
-    out.update(decision.ORACLES)
-    out.update(timeseries.ORACLES)
-    out.update(lmstats.ORACLES)
-    out.update(product.ORACLES)
-    out.update(training.ORACLES)
-    out.update(textprep.ORACLES)
-    out.update(windowlab.ORACLES)
-    out.update(sketches.ORACLES)
-    out.update(hypothesis.ORACLES)
-    # fixture-bound oracles, computed at call time so they always
-    # derive their literals (deflate ratios / IRLS model coefficients)
-    # from the sf dir the caller oracles against
-    # (SPARK_GRAFT_SIM_SF_DIR; driver contract default sf0.01)
-    co = lmstats._compression_oracle()
-    if co is not None:
-        out["compression_ratio_quality"] = co
-    qo = training._classifier_oracle()
-    if qo is not None:
-        out["quality_classifier_scores"] = qo
-    mo = training._bpe_merges_oracle()
-    if mo is not None:
-        out["bpe_vocab_merges"] = mo
-    to = training._bpe_tokenize_oracle()
-    if to is not None:
-        out["bpe_tokenize_docs"] = to
-    go = analytics._garch_oracle()
-    if go is not None:
-        out["garch_volatility"] = go
-    ro = analytics._residual_garch_oracle()
-    if ro is not None:
-        out["arima_garch_residual_fit"] = ro
-    oo = analytics._garch_order_oracle()
-    if oo is not None:
-        out["garch_order_grid"] = oo
-    ao = analytics._arima_order_oracle()
-    if ao is not None:
-        out["arima_order_search"] = ao
-    po = pipeline._pyds_oracle()
-    if po is not None:
-        out["pyds_tick_ingest"] = po
-    return out
+    """Every module's oracles. The fixture-bound ones are computed now,
+    so they always derive their literals (deflate ratios, IRLS model
+    coefficients, GARCH/ARIMA fits) from the sf dir the caller oracles
+    against (SPARK_GRAFT_SIM_SF_DIR, default sf0.01)."""
+    return registry.oracle_sql(MODULES)

@@ -50,55 +50,66 @@ _SCHEMA_CACHE: dict = {}
 # served a stale JVM handle.
 _DF_CACHE: dict = {}
 
-# (sf_dir, table) -> total parquet row-group count (driver-side footer
-# metadata, read once). The row-group count IS the scan's usable
-# parallelism for parquet: splits that contain no row-group midpoint
-# produce zero rows, so a single-row-group file runs every downstream
-# expression in ONE task no matter how many byte-range splits Spark
-# carves. Used to gate ``fanout`` (below).
-_ROWGROUP_CACHE: dict = {}
+# (path, size, mtime_ns) of one parquet file -> (row groups, rows) from
+# its footer (metadata only, never a data job). The row-group count IS the scan's
+# usable parallelism for parquet: splits that contain no row-group
+# midpoint produce zero rows, so a single-row-group file runs every
+# downstream expression in ONE task no matter how many byte-range
+# splits Spark carves. Used to gate ``fanout`` (below). Keyed per file
+# on its stat, so a file rewritten in place is read again.
+_FOOTER_CACHE: dict = {}
+
+
+def _footer_stats(path: str) -> tuple[int, int]:
+    """(row groups, rows) of the parquet data at ``path``: one file, or
+    a directory walked recursively (hive-partitioned layouts) skipping
+    the ``_``/``.``-prefixed entries Spark itself ignores."""
+    if os.path.isdir(path):
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            files += [
+                os.path.join(root, f)
+                for f in names
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            ]
+    else:
+        files = [path]
+    groups = rows = 0
+    for f in files:
+        st = os.stat(f)
+        key = (f, st.st_size, st.st_mtime_ns)
+        stats = _FOOTER_CACHE.get(key)
+        if stats is None:
+            import pyarrow.parquet as pq
+
+            md = pq.ParquetFile(f).metadata
+            stats = _FOOTER_CACHE[key] = (md.num_row_groups, md.num_rows)
+        groups += stats[0]
+        rows += stats[1]
+    return groups, rows
 
 
 def _scan_row_groups(path: str) -> int:
-    n = _ROWGROUP_CACHE.get(path)
-    if n is None:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            files = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith("_")
-            ]
-        else:
-            files = [path]
-        n = sum(pq.ParquetFile(f).num_row_groups for f in files)
-        _ROWGROUP_CACHE[path] = n
-    return n
+    return _footer_stats(path)[0]
 
 
 def table_rows(sf_dir: str, name: str) -> int:
     """Row count from the parquet footer (driver-side metadata, cached
-    via the same footer read as the row-group count) — a free size
-    signal for scale-adaptive partitioning decisions; never a data
-    job."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (path, "rows")
-    n = _ROWGROUP_CACHE.get(key)
-    if n is None:
-        import pyarrow.parquet as pq
+    with the row-group count) — a free size signal for scale-adaptive
+    partitioning decisions; never a data job."""
+    return _footer_stats(os.path.join(sf_dir, f"{name}.parquet"))[1]
 
-        if os.path.isdir(path):
-            files = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith("_")
-            ]
-        else:
-            files = [path]
-        n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        _ROWGROUP_CACHE[key] = n
-    return n
+
+def partitions_for(
+    spark: SparkSession, sf_dir: str, table: str, bytes_per_row: int, floor: int
+) -> int:
+    """The one size-derived partition count: ``table``'s rows at
+    ``bytes_per_row`` over 64 MiB partitions (fewer, larger partitions
+    for small working sets), capped at 2x cores, floored at ``floor``."""
+    par = spark.sparkContext.defaultParallelism
+    rows = table_rows(sf_dir, table)
+    return max(floor, min(rows * bytes_per_row // (64 << 20) + 1, 2 * par))
 
 
 def fanout_if_narrow(

@@ -11,26 +11,14 @@ DuckDB agree bit-for-bit after ROUND.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..analytics import cv, metrics, timeseries
 from ..catalog import load_table
+from . import registry
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, q = registry.module()
 
 
 # Shared hourly series: one row per (event_type, hour).
@@ -598,7 +586,8 @@ def ar_forecast_intervals(spark, sf_dir):
     )
 
 
-@q("garch_volatility")
+# oracle=lambda: the fixture-bound oracle is defined further down
+@q("garch_volatility", oracle=lambda: _garch_oracle())
 def garch_volatility(spark, sf_dir):
     """X6: GARCH(1,1) volatility fit on hourly pct-returns."""
     h = hourly_series(spark, sf_dir)
@@ -656,7 +645,7 @@ def cv_fold_rmse(spark, sf_dir):
     )
 
 
-@q("arima_order_search")
+@q("arima_order_search", oracle=lambda: _arima_order_oracle())
 def arima_order_search(spark, sf_dir):
     """X5: per-series auto-ARIMA (p, d, q) selection — d by repeated
     unit-root tests, (p, q) by an AIC grid over Hannan-Rissanen
@@ -668,7 +657,7 @@ def arima_order_search(spark, sf_dir):
     )
 
 
-@q("garch_order_grid")
+@q("garch_order_grid", oracle=lambda: _garch_order_oracle())
 def garch_order_grid(spark, sf_dir):
     """X6: per-series GARCH(p, q) order chosen by AIC across
     {(1,1),(1,2),(2,1),(2,2)} (reference: test5.ipynb cell 10's
@@ -682,7 +671,7 @@ def garch_order_grid(spark, sf_dir):
     return timeseries.garch_order_by_group(rets, ["event_type"], "ds", "r")
 
 
-@q("arima_garch_residual_fit")
+@q("arima_garch_residual_fit", oracle=lambda: _residual_garch_oracle())
 def arima_garch_residual_fit(spark, sf_dir):
     """X6: two-stage ARIMA-GARCH — AR(2) mean model per series, then
     GARCH(1,1) on the AR residuals with the 1-step conditional sigma

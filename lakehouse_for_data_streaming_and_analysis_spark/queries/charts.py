@@ -12,16 +12,14 @@ volume24h/is_current) — the same stand-in the SCD-2 queries use.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..semantic.charts import ChartQuery, Metric
+from . import registry
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
+QUERIES, ORACLES, q = registry.module()
 
 # Deterministic coin-dim stand-in (reference dimcoin columns:
 # Sourcecode/spark/populate_dim.py:112-129).
@@ -258,9 +256,8 @@ def _mk_query(spec: ChartQuery, dataset: str):
 
 
 for _name, _spec, _dataset in SLICES:
-    QUERIES[_name] = _mk_query(_spec, _dataset)
-    ORACLES[_name] = _spec.to_sql(
-        "events" if _dataset == "events" else COINDIM_SQL
+    q(_name, _spec.to_sql("events" if _dataset == "events" else COINDIM_SQL))(
+        _mk_query(_spec, _dataset)
     )
 
 
@@ -313,12 +310,9 @@ def _inner_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@q("chart_two_level_reagg", _TWO_LEVEL_SPEC.to_sql(_INNER_STAR_SQL))
 def chart_two_level_reagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.3 entry point 3, faithfully: outer per-grain MAX re-aggregation
     wrapped around the inner star-join virtual dataset — one spec
     compiled onto the inner DataFrame."""
     return _TWO_LEVEL_SPEC.to_df(_inner_star(spark, sf_dir))
-
-
-QUERIES["chart_two_level_reagg"] = chart_two_level_reagg
-ORACLES["chart_two_level_reagg"] = _TWO_LEVEL_SPEC.to_sql(_INNER_STAR_SQL)

@@ -18,27 +18,15 @@ Portability rules shared with datapipe.py:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import text as textfns
 from ..functions import vectors
+from . import registry
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, q = registry.module()
 
 
 def _pbucket(c: Column, mod: int) -> Column:

@@ -10,27 +10,15 @@ xxhash64 production variants.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import text as textfns
 from ..operators import dedup, similarity
+from . import registry
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, q = registry.module()
 
 
 _TOKS_SQL = "string_split_regex(lower(trim(text)), '\\s+')"
@@ -819,6 +807,7 @@ def _kmeans_oracle(k: int = 8, iters: int = 4) -> str:
        GROUP BY a.cluster_id ORDER BY a.cluster_id"""
 
 
+@q("kmeans_embedding_clusters", _kmeans_oracle())
 def kmeans_embedding_clusters(spark, sf_dir, k: int = 8, iters: int = 4):
     """Lloyd's k-means over the embedding column, Spark-first and
     deterministic (oracle: the same 4 rounds unrolled as CTEs in
@@ -927,10 +916,6 @@ def kmeans_embedding_clusters(spark, sf_dir, k: int = 8, iters: int = 4):
         )
         .orderBy("cluster_id")
     )
-
-
-QUERIES["kmeans_embedding_clusters"] = kmeans_embedding_clusters
-ORACLES["kmeans_embedding_clusters"] = _kmeans_oracle()
 
 
 # Explicit portable HyperLogLog: m=256 buckets (p=8, ~6.5% rsd), md5
@@ -1815,7 +1800,7 @@ def _ann_recall_oracle() -> str:
     return "WITH " + ",\n       ".join(ctes) + f"\n       {u}"
 
 
-@q("ann_recall_audit")
+@q("ann_recall_audit", _ann_recall_oracle())
 def ann_recall_audit(spark, sf_dir):
     """Recall@5 of every approximate-nearest-neighbor path against
     the exact brute-force baseline, in ONE audit: for each method
@@ -1859,9 +1844,6 @@ def ann_recall_audit(spark, sf_dir):
         )
         rows = agg if rows is None else rows.unionByName(agg)
     return rows
-
-
-ORACLES["ann_recall_audit"] = _ann_recall_oracle()
 
 
 @q(

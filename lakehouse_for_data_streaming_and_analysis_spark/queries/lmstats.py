@@ -18,26 +18,14 @@ across engines, which is 12 orders of magnitude below the rounding.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import text as textfns
+from . import registry
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, q = registry.module()
 
 
 _TOKS_SQL = "string_split_regex(lower(trim(text)), '\\s+')"
@@ -513,7 +501,7 @@ def _compression_oracle() -> str | None:
 # registered WITHOUT a static oracle: the fixture-bound oracle is
 # recomputed per oracle_sql() call (see __spark_entry__), so a harness
 # that points SPARK_GRAFT_SIM_SF_DIR elsewhere gets matching literals
-@q("compression_ratio_quality")
+@q("compression_ratio_quality", oracle=_compression_oracle)
 def compression_ratio_quality(spark, sf_dir):
     """Compression-ratio quality gate (the RefinedWeb/Dolma-class
     signal the n-gram proxies approximate): deflate every document

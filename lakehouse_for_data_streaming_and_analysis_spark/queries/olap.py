@@ -11,26 +11,14 @@ oracle equality).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import fanout_if_narrow, load_table
+from ..catalog import fanout_if_narrow, load_table, partitions_for
 from ..operators import graphs, sessions
+from . import registry
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, q = registry.module()
 
 
 _REV = "ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2)"
@@ -452,6 +440,23 @@ _SIMHASH_SIMS_SQL = """
 """
 
 
+# The iterative graph queries run ~10-20 tiny jobs each (one shuffle
+# join + aggregate + localCheckpoint per round). Their per-round
+# shuffle state is O(vertices) ~ O(input rows) at ~16 B per (node,
+# label/rank) row, so the pin is partitions_for(16 B/row, floor 4):
+# every bench SF lands on the measured-best 4 (sf0.1: pagerank 3.0 ->
+# 2.3 s, label_propagation 2.5 -> 2.1 s, dedup_components 3.6 ->
+# 2.1 s; 4 beat 8 and 32) and a large graph gets up to 2x-cores
+# rounds. The pin binds only the work materialized INSIDE the query
+# function — each round's eager localCheckpoint, where the per-round
+# shuffles live; the small final frame plans at the session default.
+# Values are partition-count-independent: min-label and component
+# joins are exact, and pagerank's per-round sums feed ROUND(rank, 8).
+def _graph_width(table: str):
+    """``shuffle=`` sizing rule of the iterative graph queries."""
+    return lambda spark, sf_dir: partitions_for(spark, sf_dir, table, 16, 4)
+
+
 @q(
     "dedup_components",
     f"""WITH RECURSIVE {_SIMHASH_SIMS_SQL.strip()},
@@ -468,6 +473,7 @@ _SIMHASH_SIMS_SQL = """
        labels AS (SELECT node, MIN(label) AS component FROM reach GROUP BY 1)
        SELECT component, COUNT(*) AS n_docs
        FROM labels GROUP BY 1 HAVING COUNT(*) >= 2""",
+    shuffle=_graph_width("documents"),
 )
 def dedup_components(spark, sf_dir):
     """Duplicate GROUPS from near-dup PAIRS: connected components over
@@ -531,7 +537,7 @@ def _pagerank_oracle(alpha: float = 0.85, n_iters: int = 5) -> str:
        ORDER BY ROUND(rank, 8) DESC, node ASC LIMIT 50"""
 
 
-@q("pagerank_user_influence", _pagerank_oracle())
+@q("pagerank_user_influence", _pagerank_oracle(), shuffle=_graph_width("events"))
 def pagerank_user_influence(spark, sf_dir):
     """User-influence ranking: PageRank (alpha=.85, 5 power
     iterations, dangling-mass redistribution) over the temporal
@@ -586,6 +592,7 @@ def pagerank_user_influence(spark, sf_dir):
               COUNT(*) - 1 AS n_dropped,
               CAST(SUM(n_chars) AS BIGINT) AS total_chars
        FROM ranked GROUP BY component""",
+    shuffle=_graph_width("documents"),
 )
 def neardup_canonical_selection(spark, sf_dir):
     """Canonical-representative selection — the step after near-dup
@@ -999,7 +1006,7 @@ def _label_prop_oracle(n_rounds: int = 3) -> str:
        FROM ({rounds_union})"""
 
 
-@q("label_propagation_rounds", _label_prop_oracle())
+@q("label_propagation_rounds", _label_prop_oracle(), shuffle=_graph_width("events"))
 def label_propagation_rounds(spark, sf_dir):
     """Community coarsening trace: 3 synchronous rounds of min-label
     propagation over the symmetric user hand-off graph, reporting per
@@ -2023,55 +2030,3 @@ def sessionization_gap_sensitivity(spark, sf_dir):
         ).alias("mean_events_per_session"),
         F.max("n_sessions").cast("long").alias("max_sessions_per_user"),
     )
-
-
-# r10 OPT (guide §2.2/§1.2): the iterative graph queries run ~10-20
-# tiny jobs each (one shuffle join + aggregate + localCheckpoint per
-# round over a few thousand labels); 32 shuffle partitions per round
-# is pure scheduling overhead at that volume (measured at sf0.1:
-# pagerank 3.0 -> 2.3 s, label_propagation 2.5 -> 2.1 s,
-# dedup_components 3.6 -> 2.1 s; parts=4 beat 8 and 32).
-#
-# r11 (VERDICT r10 #4): the width is now DERIVED FROM THE DATA instead
-# of a fixed 4 — "a few thousand labels" is an sf0.1 fact, not a
-# property of pagerank. The per-round shuffle state is O(vertices) ~
-# O(input rows) at ~16 B per (node, label/rank) row, so width =
-# clamp(rows * 16 B / 64 MB-per-partition, 4, 2x cores): every bench
-# SF lands on the measured-best 4, a 100 TB graph gets cluster-width
-# rounds (capped by parallelism — the same bound a static conf would
-# give — with guide §2.2's fewer-larger-partitions preference).
-# $SPARK_GRAFT_STREAM_PARTS still overrides. NOTE (ADVICE r10 #5):
-# the pin binds only the work materialized INSIDE the query function —
-# each round's eager localCheckpoint, which is where all the per-round
-# shuffles live; the small final frame the harness executes afterwards
-# plans at the session default, by design. Values are partition-
-# count-independent: min-label and component joins are exact, and
-# pagerank's per-round sums feed ROUND(rank, 8) with the documented
-# cross-engine margin (re-verified against the oracle at three SFs).
-from ..catalog import table_rows as _table_rows  # noqa: E402
-from .pipeline import _pinned_shuffle as _r10_pinned_shuffle  # noqa: E402
-
-
-def _graph_parts(spark, sf_dir: str, table: str) -> str:
-    rows = _table_rows(sf_dir, table)
-    par = spark.sparkContext.defaultParallelism
-    return str(max(4, min(rows * 16 // (64 << 20) + 1, 2 * par)))
-
-
-def _with_low_shuffle(fn, table: str):
-    def wrapped(spark, sf_dir):
-        with _r10_pinned_shuffle(spark, _graph_parts(spark, sf_dir, table)):
-            return fn(spark, sf_dir)
-
-    wrapped.__name__ = fn.__name__
-    wrapped.__doc__ = fn.__doc__
-    return wrapped
-
-
-for _name, _tbl in (
-    ("pagerank_user_influence", "events"),
-    ("label_propagation_rounds", "events"),
-    ("dedup_components", "documents"),
-    ("neardup_canonical_selection", "documents"),
-):
-    QUERIES[_name] = _with_low_shuffle(QUERIES[_name], _tbl)

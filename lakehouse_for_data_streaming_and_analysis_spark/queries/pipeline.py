@@ -13,28 +13,22 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..dims import scd2
 from ..sources import batch as batch_sources
+from . import registry
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
+QUERIES, ORACLES, q = registry.module()
 
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+# shuffle=2 on the transaction-log audits: they build multi-commit
+# scratch tables from a few thousand rows, so their cost is ~10 small
+# Spark jobs each and 32 shuffle partitions per join/agg is pure
+# scheduling overhead (the same sizing rationale as the streaming
+# runs, and exactly the knob a real deployment sets to cluster width).
 
 
 _SCD2_HASH = (
@@ -50,7 +44,8 @@ def _atomic_build(replay_dir: str):
     empty guard would then serve a half-built replay forever. Build
     into a tmp sibling and atomically rename (the pattern
     _ensure_ticks_capture already uses), so the final dir existing IS
-    the completion marker."""
+    the completion marker. os.rename onto an EMPTY dir succeeds, so an
+    empty dir left by an older non-atomic build is replaced."""
     tmp = f"{replay_dir}.tmp-{uuid.uuid4().hex}"
     os.makedirs(tmp, exist_ok=True)
     try:
@@ -60,37 +55,16 @@ def _atomic_build(replay_dir: str):
         except OSError:
             # lost a build race: another process renamed first — its
             # completed dir wins, this build is discarded
-            if not os.path.isdir(replay_dir):
+            if not _replay_ready(replay_dir):
                 raise
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-@contextmanager
-def _pinned_shuffle(spark, n: str = "2"):
-    """Pin shuffle/state partitions for a bench-scale streaming run.
-    Stateful operators open one state store per shuffle partition per
-    micro-batch; at this volume 32 stores are pure fixed cost. Sized
-    up, this is the knob that matches state-partition count to
-    executor count (same rationale as stream_stream_attribution_join,
-    now shared). $SPARK_GRAFT_STREAM_PARTS overrides the pin — the
-    sweep knob tools/scaling_streams.py uses to show throughput vs
-    state-partition count.
-
-    r10 OPT: default 4 -> 2 (measured sweep at sf0.1, steal-bracketed:
-    the stream-stream joins open 4 state stores per partition per
-    micro-batch, and halving the partitions cut the attribution joins
-    ~4.9 -> ~3.5 s with every other drain neutral; parts=1 was worse —
-    the data batches lose their remaining parallelism). Production
-    sizes this UP with executor count via the env knob; outputs are
-    partition-count-independent (append-mode joins/aggregates)."""
-    n = os.environ.get("SPARK_GRAFT_STREAM_PARTS", n)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+def _replay_ready(replay_dir: str) -> bool:
+    """The one "replay already built" check: the dir exists and is
+    non-empty (the atomic rename makes a non-empty dir a complete one)."""
+    return os.path.isdir(replay_dir) and bool(os.listdir(replay_dir))
 
 
 def _replay_dir(sf_dir: str, tag: str) -> str:
@@ -115,7 +89,7 @@ def _replay_dir(sf_dir: str, tag: str) -> str:
 def _ensure_bronze_replay(spark, sf_dir: str) -> str:
     ev = load_table(spark, sf_dir, "events")
     replay_dir = _replay_dir(sf_dir, "bronze")
-    if not os.path.isdir(replay_dir):
+    if not _replay_ready(replay_dir):
         with _atomic_build(replay_dir) as tmp:
             # 4 part files -> micro-batches (order irrelevant: complete
             # mode, no watermark)
@@ -154,7 +128,7 @@ def _pin_replay_mtimes(replay_dir: str, ts_col: str = "ts") -> None:
 def _ensure_attr_replay(spark, sf_dir: str) -> str:
     ev = load_table(spark, sf_dir, "events")
     replay_dir = _replay_dir(sf_dir, "attr")
-    if not os.path.isdir(replay_dir):
+    if not _replay_ready(replay_dir):
         with _atomic_build(replay_dir) as tmp:
             # 2 non-overlapping time-range files -> 2 in-order
             # micro-batches
@@ -170,7 +144,7 @@ def _ensure_dedup_replay(spark, sf_dir: str) -> str:
         "event_id", "user_id", "event_type", "value"
     )
     replay_dir = _replay_dir(sf_dir, "dedup")
-    if not os.path.isdir(replay_dir):
+    if not _replay_ready(replay_dir):
         with _atomic_build(replay_dir) as tmp:
             dup = ev.filter(F.col("event_id") % 11 == 0)
             # originals in files 0-2, redeliveries land in a separate
@@ -285,7 +259,7 @@ def streaming_bronze_final_state(spark, sf_dir):
         )
     )
     tbl = f"bronze_final_state_{sf_tag}"
-    with _pinned_shuffle(spark):
+    with registry.pinned_shuffle(spark):
         q_handle = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -360,7 +334,7 @@ def stream_stream_attribution_join(spark, sf_dir):
         & (F.col("click_ts") <= F.col("purchase_ts")),
     )
     tbl = f"attribution_join_{sf_tag}"
-    with _pinned_shuffle(spark):
+    with registry.pinned_shuffle(spark):
         handle = (
             joined.writeStream.outputMode("append")
             .format("memory")
@@ -406,7 +380,7 @@ def _ensure_outer_attr_replay(spark, sf_dir: str) -> str:
     # bump busts scratch dirs cached under the old 6-file layout —
     # the cache key is the fixture fingerprint, not the builder logic.
     replay_dir = _replay_dir(sf_dir, "outerattr3")
-    if os.path.isdir(replay_dir):
+    if _replay_ready(replay_dir):
         return replay_dir
     with _atomic_build(replay_dir) as tmp:
         ev.repartitionByRange(2, "ts").sortWithinPartitions("ts").write.mode(
@@ -521,7 +495,7 @@ def stream_stream_outer_attribution(spark, sf_dir):
         "left_outer",
     )
     tbl = f"outer_attribution_{sf_tag}"
-    with _pinned_shuffle(spark):
+    with registry.pinned_shuffle(spark):
         handle = (
             joined.writeStream.outputMode("append")
             .format("memory")
@@ -634,7 +608,7 @@ def stream_stream_full_outer_attribution(spark, sf_dir):
         "full_outer",
     )
     tbl = f"full_outer_attribution_{sf_tag}"
-    with _pinned_shuffle(spark):
+    with registry.pinned_shuffle(spark):
         handle = (
             joined.writeStream.outputMode("append")
             .format("memory")
@@ -899,7 +873,9 @@ def hot_key_diagnosis(spark, sf_dir):
     )
 
 
-ORACLES["scd2_as_of_snapshot"] = f"""
+@q(
+    "scd2_as_of_snapshot",
+    f"""
     WITH dim AS ({ORACLES["scd2_dimension_evolution"]})
     SELECT DATE '2024-01-15' AS as_of, surrogate_key, coin_id, name, supply
     FROM dim WHERE start_date <= DATE '2024-01-15'
@@ -908,9 +884,8 @@ ORACLES["scd2_as_of_snapshot"] = f"""
     SELECT DATE '2024-02-15', surrogate_key, coin_id, name, supply
     FROM dim WHERE start_date <= DATE '2024-02-15'
              AND DATE '2024-02-15' < end_date
-"""
-
-
+""",
+)
 def scd2_as_of_snapshot(spark, sf_dir):
     """Temporal dimension read — the query SCD-2 exists to answer:
     the dimension AS OF a date, reconstructed from validity intervals
@@ -947,9 +922,6 @@ def scd2_as_of_snapshot(spark, sf_dir):
         )
 
     return snap("2024-01-15").unionByName(snap("2024-02-15"))
-
-
-QUERIES["scd2_as_of_snapshot"] = scd2_as_of_snapshot
 
 
 @q(
@@ -1003,7 +975,7 @@ def streaming_dedup_final_state(spark, sf_dir):
         .alias("total_value"),
     )
     tbl = f"dedup_final_state_{sf_tag}"
-    with _pinned_shuffle(spark):
+    with registry.pinned_shuffle(spark):
         q_handle = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -1081,7 +1053,7 @@ def streaming_session_final_state(spark, sf_dir):
         "user_id", F.session_window("ts", "12 hours").alias("sw")
     ).agg(F.count(F.lit(1)).alias("n_events"))
     tbl = f"session_final_state_{sf_tag}"
-    with _pinned_shuffle(spark):
+    with registry.pinned_shuffle(spark):
         q_handle = (
             sess.writeStream.outputMode("complete")
             .format("memory")
@@ -1131,6 +1103,7 @@ def streaming_session_final_state(spark, sf_dir):
               CAST(n_rows AS BIGINT) AS n_rows,
               CAST(ROUND(tp, 2) AS DOUBLE) AS total_price
        FROM stats""",
+    shuffle=2,
 )
 def deltalog_snapshot_audit(spark, sf_dir):
     """End-to-end audit of the Deltaish transaction log
@@ -1221,7 +1194,7 @@ def _ensure_ticks_capture(sf_dir: str) -> str:
     import uuid
 
     target = _replay_dir(sf_dir, "pydsticks")
-    if os.path.isdir(target) and os.listdir(target):
+    if _replay_ready(target):
         return target
     import pyarrow.parquet as pq
 
@@ -1286,7 +1259,7 @@ def _pyds_oracle() -> str | None:
        FROM t GROUP BY 1"""
 
 
-@q("pyds_tick_ingest")
+@q("pyds_tick_ingest", oracle=_pyds_oracle)
 def pyds_tick_ingest(spark, sf_dir):
     """S1/S7/S8 as a FIRST-CLASS Spark source: ingest the reference's
     tick wire format through the registered Spark 4 Python DataSource
@@ -1353,7 +1326,7 @@ def streaming_state_audit(spark, sf_dir):
     sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     tbl = f"state_audit_{sf_tag}_{uuid.uuid4().hex[:8]}"
     try:
-        with _pinned_shuffle(spark):
+        with registry.pinned_shuffle(spark):
             q_handle = (
                 spark.readStream.schema(ev.schema)
                 .option("maxFilesPerTrigger", 2)
@@ -1423,6 +1396,7 @@ def streaming_state_audit(spark, sf_dir):
        SELECT change_type, CAST(n_rows AS BIGINT) AS n_rows,
               CAST(ROUND(tp, 2) AS DOUBLE) AS total_price
        FROM u""",
+    shuffle=2,
 )
 def deltalog_cdf_merge_feed(spark, sf_dir):
     """Change Data Feed end-to-end (Delta's AddCDCFile surface,
@@ -1494,6 +1468,7 @@ def deltalog_cdf_merge_feed(spark, sf_dir):
        SELECT entity, CAST(n_rows AS BIGINT) AS n_rows,
               CAST(ROUND(tp, 2) AS DOUBLE) AS total_price
        FROM u""",
+    shuffle=2,
 )
 def deltalog_clone_divergence(spark, sf_dir):
     """SHALLOW CLONE divergence audit (delta/table.py shallow_clone):
@@ -1568,6 +1543,7 @@ def deltalog_clone_divergence(spark, sf_dir):
               g.min_rid, g.max_rid, g.n_rid
        FROM allr CROSS JOIN g
        GROUP BY 1, g.min_rid, g.max_rid, g.n_rid""",
+    shuffle=2,
 )
 def deltalog_identity_generated(spark, sf_dir):
     """GENERATED ALWAYS AS + IDENTITY columns end-to-end
@@ -1656,6 +1632,7 @@ def deltalog_identity_generated(spark, sf_dir):
        SELECT change_type, CAST(n_rows AS BIGINT) AS n_rows,
               CAST(ROUND(tp, 2) AS DOUBLE) AS total_price
        FROM u""",
+    shuffle=2,
 )
 def cdf_stream_consume(spark, sf_dir):
     """The change feed consumed AS A STREAM (sources/cdf_stream.py —
@@ -1705,10 +1682,10 @@ def cdf_stream_consume(spark, sf_dir):
         # is 3 groups (memory sink holds 3 rows — scale-safe, unlike a
         # memory sink of the raw feed), and the parquet round-trip
         # drops out. Same aggregation expressions, same 3 output rows
-        # (oracle-verified); _pinned_shuffle keeps the tiny aggregate
+        # (oracle-verified); pinned_shuffle keeps the tiny aggregate
         # from opening 32 state stores.
         tbl = f"cdf_consume_{uuid.uuid4().hex[:12]}"
-        with _pinned_shuffle(spark):
+        with registry.pinned_shuffle(spark):
             q_handle = (
                 spark.readStream.format("deltaish_cdf")
                 .option("path", t.path)
@@ -1762,6 +1739,7 @@ def cdf_stream_consume(spark, sf_dir):
               CAST(n_orders AS BIGINT) AS n_orders,
               CAST(ROUND(tp, 2) AS DOUBLE) AS total_price
        FROM agg""",
+    shuffle=2,
 )
 def cdf_incremental_view_maintenance(spark, sf_dir):
     """Incremental view maintenance from the change feed — the reason
@@ -1857,6 +1835,7 @@ def cdf_incremental_view_maintenance(spark, sf_dir):
               CAST(n_rows AS BIGINT) AS n_rows,
               CAST(ROUND(tp, 2) AS DOUBLE) AS total_price
        FROM u""",
+    shuffle=2,
 )
 def deltalog_mor_delete_audit(spark, sf_dir):
     """Merge-on-read DELETE end-to-end (delta/table.py delete(mode=
@@ -1936,6 +1915,7 @@ def deltalog_mor_delete_audit(spark, sf_dir):
               CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2)
                    AS DOUBLE) AS total_price
        FROM upd GROUP BY 1""",
+    shuffle=2,
 )
 def deltalog_update_audit(spark, sf_dir):
     """Row-level UPDATE end-to-end (delta/table.py update): create a
@@ -2015,6 +1995,7 @@ def deltalog_update_audit(spark, sf_dir):
               CAST(ROUND(tp, 2) AS DOUBLE) AS total_price,
               TRUE AS pruned_scan
        FROM u""",
+    shuffle=2,
 )
 def deltalog_skipping_audit(spark, sf_dir):
     """Predicate data skipping on the row-level write paths
@@ -2102,6 +2083,7 @@ def deltalog_skipping_audit(spark, sf_dir):
        SELECT kind, label, CAST(n AS BIGINT) AS n_rows,
               CAST(ROUND(tp, 2) AS DOUBLE) AS total_price
        FROM u""",
+    shuffle=2,
 )
 def deltalog_replace_where_audit(spark, sf_dir):
     """INSERT OVERWRITE ... replaceWhere end-to-end (delta/table.py
@@ -2197,6 +2179,7 @@ def deltalog_replace_where_audit(spark, sf_dir):
                    AS DOUBLE) AS total_price,
               TRUE AS untouched_intact
        FROM final GROUP BY 1""",
+    shuffle=2,
 )
 def deltalog_dynamic_overwrite_audit(spark, sf_dir):
     """Dynamic partition overwrite end-to-end (delta/table.py
@@ -2322,6 +2305,7 @@ def _skipping_state(t, stage: str, pruned: bool):
        UNION ALL
        SELECT 'final', CAST(COUNT(*) AS BIGINT),
               CAST(ROUND(SUM(p), 2) AS DOUBLE) FROM fin""",
+    shuffle=2,
 )
 def deltalog_merge_matrix_audit(spark, sf_dir):
     """Full-matrix MERGE INTO end-to-end (delta/table.py merge_into):
@@ -2436,6 +2420,7 @@ def deltalog_merge_matrix_audit(spark, sf_dir):
               CAST(ROUND(SUM(price), 2) AS DOUBLE) AS total_price,
               CAST(COUNT(o_orderstatus) AS BIGINT) AS n_status
        FROM allr GROUP BY 1""",
+    shuffle=2,
 )
 def deltalog_column_mapping_audit(spark, sf_dir):
     """Column-mapping DDL end-to-end (delta/table.py
@@ -2537,6 +2522,7 @@ def deltalog_column_mapping_audit(spark, sf_dir):
               CAST(ROUND(SUM(CAST(price AS DECIMAL(18,2))), 2)
                    AS DOUBLE) AS total_price
        FROM final GROUP BY 1""",
+    shuffle=2,
 )
 def deltalog_row_tracking_audit(spark, sf_dir):
     """Row tracking end-to-end (delta/table.py enable_row_tracking /
@@ -2642,6 +2628,7 @@ def deltalog_row_tracking_audit(spark, sf_dir):
               CAST(ROUND(tp, 2) AS DOUBLE) AS total_price,
               TRUE AS ts_travel_ok
        FROM u""",
+    shuffle=2,
 )
 def deltalog_time_travel_audit(spark, sf_dir):
     """Time travel by VERSION and by TIMESTAMP (delta/table.py read /
@@ -2739,6 +2726,7 @@ def deltalog_time_travel_audit(spark, sf_dir):
               CAST(ROUND(tp, 2) AS DOUBLE) AS total_price,
               TRUE AS history_preserved
        FROM u""",
+    shuffle=2,
 )
 def deltalog_restore_audit(spark, sf_dir):
     """RESTORE TABLE ... TO VERSION AS OF (delta/table.py restore):
@@ -2829,6 +2817,7 @@ def deltalog_restore_audit(spark, sf_dir):
               CAST(ROUND(tp, 2) AS DOUBLE) AS total_price,
               TRUE AS resumed_from_checkpoint
        FROM u""",
+    shuffle=2,
 )
 def deltalog_checkpoint_audit(spark, sf_dir):
     """Parquet log checkpoints (delta/log.py write_checkpoint /
@@ -2919,6 +2908,7 @@ def deltalog_checkpoint_audit(spark, sf_dir):
               TRUE AS dry_run_matched,
               TRUE AS old_version_unreadable
        FROM u""",
+    shuffle=2,
 )
 def deltalog_vacuum_audit(spark, sf_dir):
     """VACUUM end-to-end (delta/table.py vacuum): create an 8-file
@@ -3020,6 +3010,7 @@ def deltalog_vacuum_audit(spark, sf_dir):
                    AS DOUBLE) AS total_price,
               TRUE AS strict_append_refused
        FROM fin GROUP BY 1""",
+    shuffle=2,
 )
 def deltalog_schema_evolution_audit(spark, sf_dir):
     """Schema evolution through the transaction log (delta/table.py
@@ -3095,6 +3086,7 @@ def deltalog_schema_evolution_audit(spark, sf_dir):
               TRUE AS violating_write_refused,
               TRUE AS violating_constraint_refused
        FROM fin""",
+    shuffle=2,
 )
 def deltalog_check_constraint_audit(spark, sf_dir):
     """CHECK constraints through the log (delta/table.py
@@ -3173,6 +3165,7 @@ def deltalog_check_constraint_audit(spark, sf_dir):
               TRUE AS state_invariant,
               TRUE AS both_dims_selective
        FROM base""",
+    shuffle=2,
 )
 def deltalog_zorder_audit(spark, sf_dir):
     """Z-ORDER end-to-end (delta/table.py zorder_by): a table laid
@@ -3276,6 +3269,7 @@ def snap0_rows(snap) -> int:
               TRUE AS surviving_log_contiguous,
               TRUE AS cleaned_history_raises
        FROM fin""",
+    shuffle=2,
 )
 def deltalog_log_cleanup_audit(spark, sf_dir):
     """Log metadata cleanup end-to-end (delta/log.py
@@ -3383,6 +3377,7 @@ def deltalog_log_cleanup_audit(spark, sf_dir):
               CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2)
                    AS DOUBLE) AS total_price
        FROM fin GROUP BY 1""",
+    shuffle=2,
 )
 def deltalog_merge_evolution_audit(spark, sf_dir):
     """MERGE ... WITH SCHEMA EVOLUTION end-to-end (delta/table.py
@@ -3482,6 +3477,7 @@ def deltalog_merge_evolution_audit(spark, sf_dir):
                    AS DOUBLE) AS total_price,
               TRUE AS feature_listed_v7
        FROM fin GROUP BY 1""",
+    shuffle=2,
 )
 def deltalog_column_defaults_audit(spark, sf_dir):
     """Column DEFAULTs end-to-end (delta/table.py set_column_default,
@@ -3568,6 +3564,7 @@ def deltalog_column_defaults_audit(spark, sf_dir):
                           FROM kept), 2) AS DOUBLE) AS total_price_after,
               TRUE AS read_failed_before_repair,
               TRUE AS dry_run_reported_only""",
+    shuffle=2,
 )
 def deltalog_fsck_audit(spark, sf_dir):
     """FSCK REPAIR TABLE end-to-end (delta/table.py fsck): a
@@ -3648,6 +3645,7 @@ def deltalog_fsck_audit(spark, sf_dir):
               TRUE AS parts_carry_state,
               TRUE AS incomplete_set_refuses
        FROM fin""",
+    shuffle=2,
 )
 def deltalog_multipart_checkpoint_audit(spark, sf_dir):
     """Multi-part classic checkpoints end-to-end (delta/log.py
@@ -3734,6 +3732,7 @@ def deltalog_multipart_checkpoint_audit(spark, sf_dir):
               TRUE AS manifest_carries_state,
               TRUE AS torn_sidecar_degrades
        FROM fin""",
+    shuffle=2,
 )
 def deltalog_v2_checkpoint_audit(spark, sf_dir):
     """v2Checkpoint table feature end-to-end (delta/log.py
@@ -3829,6 +3828,7 @@ def deltalog_v2_checkpoint_audit(spark, sf_dir):
               TRUE AS rewrite_refuses_stale_read,
               TRUE AS metadata_change_blocks_append
        FROM fin""",
+    shuffle=2,
 )
 def deltalog_occ_conflict_audit(spark, sf_dir):
     """Optimistic-concurrency semantics end-to-end (delta/table.py
@@ -3940,6 +3940,7 @@ def deltalog_occ_conflict_audit(spark, sf_dir):
               TRUE AS compaction_not_data_change,
               TRUE AS time_travel_preserved
        FROM fin""",
+    shuffle=2,
 )
 def deltalog_compaction_audit(spark, sf_dir):
     """OPTIMIZE bin-packing end-to-end: eight 50-row appends leave a
@@ -4026,6 +4027,7 @@ def deltalog_compaction_audit(spark, sf_dir):
               TRUE AS narrow_files_upcast,
               TRUE AS narrowing_refuses
        FROM fin""",
+    shuffle=2,
 )
 def deltalog_type_widening_audit(spark, sf_dir):
     """typeWidening table feature end-to-end (delta/table.py
@@ -4106,6 +4108,7 @@ def deltalog_type_widening_audit(spark, sf_dir):
               TRUE AS full_removes_aged_orphan,
               TRUE AS fresh_orphan_protected
        FROM fin""",
+    shuffle=2,
 )
 def deltalog_vacuum_lite_audit(spark, sf_dir):
     """VACUUM LITE vs FULL (delta/table.py vacuum(mode=...)): LITE
@@ -4191,6 +4194,7 @@ def deltalog_vacuum_lite_audit(spark, sf_dir):
               TRUE AS validates_after_rewrite,
               TRUE AS tamper_refuses
        FROM fin""",
+    shuffle=2,
 )
 def deltalog_checksum_audit(spark, sf_dir):
     """VERSION_CHECKSUM (.crc) files end-to-end (delta/log.py
@@ -4280,6 +4284,7 @@ def deltalog_checksum_audit(spark, sf_dir):
               TRUE AS indexed_col_prunes,
               TRUE AS unindexed_col_keeps_all
        FROM fin""",
+    shuffle=2,
 )
 def deltalog_stats_columns_audit(spark, sf_dir):
     """delta.dataSkippingNumIndexedCols end-to-end (delta/table.py
@@ -4376,6 +4381,7 @@ def deltalog_stats_columns_audit(spark, sf_dir):
               TRUE AS survives_checkpoint_and_cleanup,
               TRUE AS reserved_domains_refused
        FROM fin""",
+    shuffle=2,
 )
 def deltalog_domain_metadata_audit(spark, sf_dir):
     """domainMetadata actions end-to-end (spec: named metadata
@@ -4458,6 +4464,7 @@ def deltalog_domain_metadata_audit(spark, sf_dir):
               TRUE AS rerun_carries_both,
               TRUE AS append_blocked_past_protocol_change
        FROM base""",
+    shuffle=2,
 )
 def deltalog_protocol_conflict_audit(spark, sf_dir):
     """ProtocolChangedException semantics end-to-end (the round-8
@@ -4564,6 +4571,7 @@ def deltalog_protocol_conflict_audit(spark, sf_dir):
               TRUE AS purge_materializes,
               TRUE AS corrupt_inline_refused
        FROM kept""",
+    shuffle=2,
 )
 def deltalog_inline_dv_audit(spark, sf_dir):
     """INLINE deletion vectors (storageType 'i' — the spec's
@@ -4697,61 +4705,3 @@ def deltalog_inline_dv_audit(spark, sf_dir):
         "inline_dv_applied boolean, purge_materializes boolean, "
         "corrupt_inline_refused boolean",
     )
-
-
-def _with_pinned_shuffle(fn):
-    def wrapped(spark, sf_dir):
-        with _pinned_shuffle(spark):
-            return fn(spark, sf_dir)
-
-    wrapped.__name__ = fn.__name__
-    wrapped.__doc__ = fn.__doc__
-    return wrapped
-
-
-# The transaction-log audits build multi-commit scratch tables from a
-# few thousand rows: their cost is ~10 small Spark jobs each, so 32
-# shuffle partitions per join/agg is pure scheduling overhead (the
-# same sizing rationale as the streaming runs above — and exactly the
-# knob a real deployment sets to cluster width).
-for _name in (
-    "deltalog_snapshot_audit",
-    "deltalog_cdf_merge_feed",
-    "deltalog_clone_divergence",
-    "deltalog_identity_generated",
-    "cdf_stream_consume",
-    "cdf_incremental_view_maintenance",
-    "deltalog_mor_delete_audit",
-    "deltalog_update_audit",
-    "deltalog_merge_matrix_audit",
-    "deltalog_column_mapping_audit",
-    "deltalog_row_tracking_audit",
-    "deltalog_time_travel_audit",
-    "deltalog_restore_audit",
-    "deltalog_checkpoint_audit",
-    "deltalog_vacuum_audit",
-    "deltalog_schema_evolution_audit",
-    "deltalog_check_constraint_audit",
-    "deltalog_zorder_audit",
-    "deltalog_log_cleanup_audit",
-    "deltalog_merge_evolution_audit",
-    "deltalog_column_defaults_audit",
-    "deltalog_fsck_audit",
-    "deltalog_multipart_checkpoint_audit",
-    "deltalog_stats_columns_audit",
-    "deltalog_v2_checkpoint_audit",
-    "deltalog_checksum_audit",
-    "deltalog_vacuum_lite_audit",
-    "deltalog_type_widening_audit",
-    "deltalog_occ_conflict_audit",
-    "deltalog_compaction_audit",
-    "deltalog_domain_metadata_audit",
-    "deltalog_protocol_conflict_audit",
-    "deltalog_inline_dv_audit",
-    # r10 OPT: three lifecycle audits that predate the list and were
-    # still paying 32-partition shuffles per tiny commit
-    "deltalog_skipping_audit",
-    "deltalog_dynamic_overwrite_audit",
-    "deltalog_replace_where_audit",
-):
-    QUERIES[_name] = _with_pinned_shuffle(QUERIES[_name])

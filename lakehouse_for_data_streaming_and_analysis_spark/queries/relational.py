@@ -14,28 +14,16 @@ Determinism rules used throughout (the driver hash-compares values):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_tables
 from ..dims import generators
 from ..functions import datetime_fns, finance, hashing
 from ..operators import aggregates, joins, sets, windows
+from . import registry
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, q = registry.module()
 
 
 # ---------------------------------------------------------------- P: scans/filters

@@ -33,25 +33,13 @@ exact-rank verification side is test-scale-only scaffolding.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from . import registry
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, q = registry.module()
 
 
 # alpha = 0.01 -> gamma = (1+a)/(1-a) = 101/99, pinned as an explicit

@@ -10,29 +10,17 @@ and ``tests/test_classifier.py``.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..analytics import classifier
-from ..catalog import load_table
+from ..catalog import load_table, partitions_for
 from ..functions import text as textfns
 from ..operators import bpe
+from . import registry
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, q = registry.module()
 
 
 _MERGE_SCHEMA = T.StructType(
@@ -46,7 +34,8 @@ _MERGE_SCHEMA = T.StructType(
 )
 
 
-@q("bpe_vocab_merges")
+# oracle=lambda: the fixture-bound oracle is defined further down
+@q("bpe_vocab_merges", oracle=lambda: _bpe_merges_oracle())
 def bpe_vocab_merges(spark, sf_dir, n_merges: int = 24):
     """Learn the first ``n_merges`` BPE merges over the documents
     corpus (see operators/bpe.py for the scale topology: one
@@ -100,7 +89,7 @@ def classifier_features(docs: DataFrame) -> DataFrame:
 XCOLS = ["x_len", "x_sw_ratio", "x_distinct_ratio", "x_mean_tok_len"]
 
 
-@q("quality_classifier_scores")
+@q("quality_classifier_scores", oracle=lambda: _classifier_oracle())
 def quality_classifier_scores(spark, sf_dir, iters: int = 10):
     """Distill the rule-based quality gate into a learned linear
     scorer: label docs with the heuristic gate, train L2-regularized
@@ -127,18 +116,9 @@ def quality_classifier_scores(spark, sf_dir, iters: int = 10):
     # emitted scores are ROUND(_, 4) and re-verified vs the oracle at
     # three SFs, and tests/test_classifier.py pins the trajectory vs
     # the dense replay at 1e-6.
-    from ..catalog import table_rows
-
-    _parts = max(
-        1,
-        min(
-            table_rows(sf_dir, "documents") * 48 // (64 << 20) + 1,
-            2 * spark.sparkContext.defaultParallelism,
-        ),
-    )
     raw = (
         classifier_features(docs)
-        .repartition(_parts)
+        .repartition(partitions_for(spark, sf_dir, "documents", 48, 1))
         .localCheckpoint(eager=True)
     )
     feats = classifier.standardize(raw, XCOLS)
@@ -152,7 +132,7 @@ def quality_classifier_scores(spark, sf_dir, iters: int = 10):
     )
 
 
-@q("bpe_tokenize_docs")
+@q("bpe_tokenize_docs", oracle=lambda: _bpe_tokenize_oracle())
 def bpe_tokenize_docs(spark, sf_dir, n_merges: int = 24):
     """The APPLY side of the tokenizer — the operation that actually
     runs at 100 TB (training the vocab is offline; segmenting the

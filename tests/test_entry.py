@@ -25,10 +25,16 @@ def test_entry_smoke(spark):
     ]
 
 
+@pytest.fixture(scope="module")
+def oracles() -> dict[str, str]:
+    # computed once: the fixture-bound oracles refit their models on
+    # every oracle_sql() call
+    return entrymod.oracle_sql()
+
+
 @pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, duck, sf_dir, name):
+def test_query_matches_oracle(spark, duck, sf_dir, oracles, name):
     fn = entrymod.queries()[name]
-    oracles = entrymod.oracle_sql()
     df = fn(spark, sf_dir)
     if name in oracles:
         assert_matches_oracle(df, duck, oracles[name])

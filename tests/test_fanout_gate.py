@@ -7,11 +7,10 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
 from lakehouse_for_data_streaming_and_analysis_spark.catalog import (
     _scan_row_groups,
     load_table,
+    table_rows,
 )
 
 from .conftest import SF_DIR
@@ -46,18 +45,52 @@ def test_wide_scan_skips_fanout(spark, tmp_path):
     assert df.count() == src.count()
 
 
+def _pyarrow_footers(path: str) -> tuple[int, int]:
+    import pyarrow.parquet as pq
+
+    files = [path]
+    if os.path.isdir(path):
+        files = [
+            os.path.join(root, f)
+            for root, _, names in os.walk(path)
+            for f in names
+            if f.endswith(".parquet")
+        ]
+    mds = [pq.ParquetFile(f).metadata for f in files]
+    return sum(m.num_row_groups for m in mds), sum(m.num_rows for m in mds)
+
+
 def test_row_group_count_matches_pyarrow(spark, tmp_path):
     import pyarrow.parquet as pq
 
-    sf_dir = str(tmp_path)
-    dest = os.path.join(sf_dir, "nation.parquet")
-    load_table(spark, SF_DIR, "nation").repartition(3).write.mode(
-        "overwrite"
-    ).parquet(dest)
-    files = [
-        os.path.join(dest, f)
-        for f in os.listdir(dest)
-        if f.endswith(".parquet")
-    ]
-    expect = sum(pq.ParquetFile(f).num_row_groups for f in files)
-    assert _scan_row_groups(dest) == expect
+    nation = load_table(spark, SF_DIR, "nation")
+
+    def check(sf_dir: str) -> None:
+        dest = os.path.join(sf_dir, "nation.parquet")
+        groups, rows = _pyarrow_footers(dest)
+        assert _scan_row_groups(dest) == groups
+        assert table_rows(sf_dir, "nation") == rows
+
+    # flat directory of part files
+    flat = str(tmp_path / "flat")
+    nation.repartition(3).write.parquet(os.path.join(flat, "nation.parquet"))
+    check(flat)
+
+    # hive-partitioned nested layout: the data files sit one level down
+    nested = str(tmp_path / "nested")
+    nation.write.partitionBy("n_regionkey").parquet(
+        os.path.join(nested, "nation.parquet")
+    )
+    assert _pyarrow_footers(os.path.join(nested, "nation.parquet"))[1] == 25
+    check(nested)
+
+    # one file rewritten in place: the cached footer must not be served
+    single = str(tmp_path / "single")
+    os.makedirs(single)
+    path = os.path.join(single, "nation.parquet")
+    tbl = pq.read_table(os.path.join(SF_DIR, "nation.parquet"))
+    pq.write_table(tbl, path, row_group_size=5)
+    check(single)
+    pq.write_table(tbl.slice(0, 10), path, row_group_size=10)
+    assert _pyarrow_footers(path) == (1, 10)
+    check(single)

@@ -145,7 +145,7 @@ def main() -> None:
     name = "stream_stream_attribution_join"
     for parts in ("1", "4", "16"):
         spark.conf.set("spark.sql.shuffle.partitions", parts)
-        # the query pins its own shuffle conf inside _pinned_shuffle;
+        # the query pins its own shuffle conf (registry.pinned_shuffle);
         # sweep by overriding the pin target via env knob instead
         os.environ["SPARK_GRAFT_STREAM_PARTS"] = parts
         cap.progress.clear()
