@@ -24,6 +24,9 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
+from lakehouse_for_data_streaming_and_analysis_spark.queries.pipeline import (
+    ensure_replay_dirs,
+)
 from lakehouse_for_data_streaming_and_analysis_spark.session import get_spark
 
 # Headline queries: one per major operator family (star join, windowed
@@ -75,6 +78,32 @@ JIT_HEAVY = (
 JIT_WARM_SF_DIR = "/root/testdata/sf0.001"
 
 
+def steal_jiffies() -> tuple[int, int]:
+    """(steal, total) CPU jiffies of the host so far, from the first
+    line of /proc/stat; (0, 0) where it cannot be read. Two readings
+    bracket a measurement: steal delta / 100 is seconds of host CPU
+    steal, steal delta / total delta its fraction."""
+    try:
+        with open("/proc/stat") as f:
+            p = f.readline().split()
+        return int(p[8]), sum(int(x) for x in p[1:])
+    except (OSError, IndexError, ValueError):
+        return 0, 0
+
+
+def warm_up(spark, qs, sf_dir: str) -> None:
+    """Untimed set-up before any query is measured: the JVM, parquet
+    footers and Python workers (the first query, counted), the
+    streaming-replay fixture dirs (one-time set-up, not query cost) and
+    the Arrow worker pool — all per-cluster-lifetime costs."""
+    next(iter(qs.values()))(spark, sf_dir).count()
+    ensure_replay_dirs(spark, sf_dir)
+    par = spark.sparkContext.defaultParallelism
+    spark.range(par).repartition(par).mapInPandas(
+        lambda it: it, "id long"
+    ).count()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -82,19 +111,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entrymod.queries()
-    # Warm the JVM + parquet footers + Python workers once (excluded from
-    # per-query time — worker spawn is per-cluster-lifetime, not per-query).
-    next(iter(qs.values()))(spark, sf_dir).count()
-    # Streaming-replay fixture dirs are one-time setup, not query cost.
-    from lakehouse_for_data_streaming_and_analysis_spark.queries.pipeline import (
-        ensure_replay_dirs,
-    )
-
-    ensure_replay_dirs(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    spark.range(par).repartition(par).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    warm_up(spark, qs, sf_dir)
     # codegen pre-warm for the JIT-heavy queries (see JIT_HEAVY); skip
     # when benching sf0.001 itself — warming on the measured data
     # would just hide the cold run instead of amortizing compilation.
@@ -104,17 +121,11 @@ def main() -> None:
         for name in JIT_HEAVY:
             if name in qs:
                 qs[name](spark, JIT_WARM_SF_DIR).count()
-    def _steal_jiffies() -> int:
-        try:
-            with open("/proc/stat") as f:
-                return int(f.readline().split()[8])
-        except (OSError, IndexError, ValueError):
-            return 0
 
     def _timed_loop() -> tuple[dict[str, float], float, dict]:
         timings: dict[str, float] = {}
         total = 0.0
-        steal0 = _steal_jiffies()
+        steal0 = steal_jiffies()[0]
         t_wall0 = time.perf_counter()
         for name, fn in qs.items():
             t0 = time.perf_counter()
@@ -131,7 +142,7 @@ def main() -> None:
         # from a slow engine.
         env = {
             "steal_seconds_during_run": round(
-                (_steal_jiffies() - steal0) / 100.0, 1
+                (steal_jiffies()[0] - steal0) / 100.0, 1
             ),
             "wall_seconds_timed_loop": round(wall, 1),
         }

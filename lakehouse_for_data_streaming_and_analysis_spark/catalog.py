@@ -47,7 +47,8 @@ _SCHEMA_CACHE: dict = {}
 # cached — same category as _SCHEMA_CACHE above), so this is
 # pre-analyzed plan reuse, not result caching. Keyed on the live
 # SparkSession object so a stopped-and-recreated session can never be
-# served a stale JVM handle.
+# served a stale JVM handle; a miss drops the entries of stopped
+# sessions, which would otherwise pin them (and their handles) forever.
 _DF_CACHE: dict = {}
 
 # (path, size, mtime_ns) of one parquet file -> (row groups, rows) from
@@ -152,6 +153,9 @@ def load_table(
     key = (spark, sf_dir, name)
     df = _DF_CACHE.get(key)
     if df is None:
+        # SparkContext.stop() sets _jsc to None
+        for k in [k for k in _DF_CACHE if k[0].sparkContext._jsc is None]:
+            del _DF_CACHE[k]
         cached = _SCHEMA_CACHE.get((sf_dir, name))
         if cached is not None:
             df = spark.read.schema(cached).parquet(path)

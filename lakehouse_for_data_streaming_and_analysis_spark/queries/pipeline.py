@@ -1,11 +1,32 @@
-"""Pipeline-layer queries: SCD-2 merge evolution, a genuine
-Structured-Streaming aggregation checked against a batch oracle, and
-typed REST ingest (SURVEY.md §2.1 S7, §2.4 J2-J4, §2.10).
+"""Pipeline-layer queries: SCD-2 dimension merges, Structured-Streaming
+runs checked against batch oracles, typed REST and custom-source ingest
+(SURVEY.md §2.1 S7, §2.4 J2-J4, §2.10), and the Delta lifecycle audits.
 
-The streaming query runs a real micro-batched StreamingQuery
-(file-replay source, complete output mode, availableNow) whose final
-state must equal the batch aggregate DuckDB computes over the same
-rows — streaming/batch unification as a correctness gate.
+Each streaming query drains a real micro-batched StreamingQuery
+(file-replay source, availableNow trigger) into a memory sink through
+``_await_drain``; its final state must equal the batch aggregate DuckDB
+computes over the same rows — streaming/batch unification as a
+correctness gate.
+
+The lifecycle audits (``deltalog_*``, ``cdf_stream_consume``,
+``cdf_incremental_view_maintenance``, ``streaming_state_audit``)
+re-express the reference's after-the-fact transaction-log measurements
+as queries. They share one contract:
+
+- Each call builds its tables in its own ``_scratch_dir``, collects its
+  few result rows eagerly and removes the dir before it returns, so
+  concurrent calls never share a table and nothing is left behind. The
+  returned frame is a local relation of those rows.
+- Each table state is checked with ``_price_stats``: the row count plus
+  a decimal-exact price sum, which is order independent and so hashes
+  the same on every engine. The oracle recomputes every state
+  relationally.
+- Each write the protocol must refuse is probed with ``_raises`` and
+  reported as a boolean flag that the oracle pins literally TRUE.
+- They register with ``shuffle=2``. A few thousand rows per table make
+  an audit ~10 small Spark jobs, so 32 shuffle partitions per join or
+  aggregate are pure scheduling overhead (the same sizing as the
+  streaming runs, and the knob a real deployment sets to cluster width).
 """
 
 from __future__ import annotations
@@ -18,17 +39,14 @@ from contextlib import contextmanager
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..delta import DeltaishTable, roaring
+from ..delta import log as dlog
+from ..delta.log import ConcurrentCommitError
 from ..dims import scd2
 from ..sources import batch as batch_sources
 from . import registry
 
 QUERIES, ORACLES, q = registry.module()
-
-# shuffle=2 on the transaction-log audits: they build multi-commit
-# scratch tables from a few thousand rows, so their cost is ~10 small
-# Spark jobs each and 32 shuffle partitions per join/agg is pure
-# scheduling overhead (the same sizing rationale as the streaming
-# runs, and exactly the knob a real deployment sets to cluster width).
 
 
 _SCD2_HASH = (
@@ -59,6 +77,50 @@ def _atomic_build(replay_dir: str):
                 raise
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+@contextmanager
+def _scratch_dir(sf_dir: str, tag: str):
+    """A fresh ``<tag>-<uuid>`` path under the deltalog scratch root for
+    one audit call; removed when the block exits, however it exits."""
+    path = os.path.join(
+        _replay_dir(sf_dir, "deltalog"), f"{tag}-{uuid.uuid4().hex}"
+    )
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _price_stats(col: str = "o_totalprice"):
+    """The audits' value check as two aggregate columns: the row count
+    (``n_rows``) and the decimal-exact sum of ``col`` (``total_price``)."""
+    return (
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        F.round(F.sum(F.col(col).cast("decimal(18,2)")), 2)
+        .cast("double")
+        .alias("total_price"),
+    )
+
+
+def _raises(exc, fn, *args, **kwargs) -> bool:
+    """Whether ``fn(*args, **kwargs)`` raises ``exc``: the probe of a
+    write the protocol must refuse."""
+    try:
+        fn(*args, **kwargs)
+    except exc:
+        return True
+    return False
+
+
+def _await_drain(handle, what: str) -> None:
+    """The one memory-sink drain rule: wait up to 300 s for the
+    availableNow run to finish. On a timeout, stop the query (it would
+    otherwise keep running and hold its sink name) and raise, since a
+    partial memory table would silently fail the oracle."""
+    if not handle.awaitTermination(300):
+        handle.stop()
+        raise TimeoutError(f"{what} did not drain within 300 s")
 
 
 def _replay_ready(replay_dir: str) -> bool:
@@ -267,8 +329,7 @@ def streaming_bronze_final_state(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        finished = q_handle.awaitTermination(300)
-    assert finished, "streaming bronze run did not finish within 300 s"
+        _await_drain(q_handle, "streaming_bronze_final_state")
     return spark.table(tbl).select(
         F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm").alias("window_start"),
         "avg_value",
@@ -342,8 +403,7 @@ def stream_stream_attribution_join(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        finished = handle.awaitTermination(300)
-        assert finished, "attribution join run did not finish within 300 s"
+        _await_drain(handle, "stream_stream_attribution_join")
     return spark.table(tbl).select(
         "purchase_id",
         "click_id",
@@ -503,8 +563,7 @@ def stream_stream_outer_attribution(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        finished = handle.awaitTermination(300)
-        assert finished, "outer attribution run did not finish within 300 s"
+        _await_drain(handle, "stream_stream_outer_attribution")
     # r11 (ADVICE r10 #1): the buffered outer rows flush in the
     # engine's automatic no-data batch (pinned on in session.py). If a
     # Spark upgrade ever stopped running it, unmatched purchases would
@@ -616,8 +675,7 @@ def stream_stream_full_outer_attribution(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        finished = handle.awaitTermination(300)
-        assert finished, "full-outer attribution run did not finish in 300 s"
+        _await_drain(handle, "stream_stream_full_outer_attribution")
     # r11 (ADVICE r10 #1): same loud-failure invariant as the left-
     # outer drain — the no-data batch must have flushed dangling rows.
     assert (
@@ -983,13 +1041,7 @@ def streaming_dedup_final_state(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        finished = q_handle.awaitTermination(300)
-    if not finished:
-        q_handle.stop()
-        raise TimeoutError(
-            "streaming_dedup_final_state did not drain within 300s; "
-            "a partial memory table would silently fail the oracle"
-        )
+        _await_drain(q_handle, "streaming_dedup_final_state")
     return spark.table(tbl)
 
 
@@ -1061,13 +1113,7 @@ def streaming_session_final_state(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        finished = q_handle.awaitTermination(300)
-    if not finished:
-        q_handle.stop()
-        raise TimeoutError(
-            "streaming_session_final_state did not drain within 300s; "
-            "a partial memory table would silently fail the oracle"
-        )
+        _await_drain(q_handle, "streaming_session_final_state")
     per_sess = spark.table(tbl).select(
         "user_id",
         "n_events",
@@ -1116,25 +1162,11 @@ def deltalog_snapshot_audit(spark, sf_dir):
     relationally, so the hash match certifies the log's snapshot
     isolation: every version's add/remove replay reproduces exactly the
     relational state at that commit. Decimal-exact sums (order
-    independent) keep the hash portable.
-
-    The table is built in a per-invocation unique dir and the three
-    1-row version aggregates are materialized eagerly (9 scalars), so
-    concurrent executions (bench + correctness gate in the same window)
-    can never race on a shared scratch table, and the scratch files are
-    gone before the function returns."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    independent) keep the hash portable."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"tbl-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "tbl") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -1156,14 +1188,7 @@ def deltalog_snapshot_audit(spark, sf_dir):
         # branch emits exactly one row, union preserves child order).
         per_version = [
             t.read(version=v)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
+            .agg(*_price_stats())
             .select(
                 F.lit(v).cast("int").alias("version"),
                 "n_rows",
@@ -1175,8 +1200,6 @@ def deltalog_snapshot_audit(spark, sf_dir):
         for frame in per_version[1:]:
             unioned = unioned.union(frame)
         rows = unioned.collect()
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "version int, n_rows long, total_price double"
     )
@@ -1190,8 +1213,6 @@ def _ensure_ticks_capture(sf_dir: str) -> str:
     which side the driver runs first; concurrent builders are safe via
     build-to-tmp + atomic rename."""
     import json as _json
-    import shutil
-    import uuid
 
     target = _replay_dir(sf_dir, "pydsticks")
     if _replay_ready(target):
@@ -1309,63 +1330,54 @@ def streaming_state_audit(spark, sf_dir):
     operator's PHYSICAL schema (sum buffer + isEmpty + count), so the
     projection introspects field names rather than assuming aliases
     (key.window, value.sum/isEmpty/count — query aliases do not
-    survive into the buffer).
-    Checkpoint lives in a per-invocation unique dir; the audit rows
-    are materialized eagerly and the checkpoint is removed before
-    returning (same race-proof discipline as deltalog_snapshot_audit)."""
-    import shutil
-    import uuid
-
+    survive into the buffer)."""
     from ..maintenance import state as mstate
 
     ev = load_table(spark, sf_dir, "events")
     replay_dir = _ensure_bronze_replay(spark, sf_dir)
-    ck = os.path.join(
-        _replay_dir(sf_dir, "stateaudit"), f"ck-{uuid.uuid4().hex}"
-    )
     sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     tbl = f"state_audit_{sf_tag}_{uuid.uuid4().hex[:8]}"
-    try:
-        with registry.pinned_shuffle(spark):
-            q_handle = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 2)
-                .parquet(replay_dir)
-                .groupBy(
-                    "event_type", F.window("ts", "1 hour").alias("win")
+    with _scratch_dir(sf_dir, "stateaudit") as ck:
+        try:
+            with registry.pinned_shuffle(spark):
+                q_handle = (
+                    spark.readStream.schema(ev.schema)
+                    .option("maxFilesPerTrigger", 2)
+                    .parquet(replay_dir)
+                    .groupBy(
+                        "event_type", F.window("ts", "1 hour").alias("win")
+                    )
+                    .agg(
+                        F.sum(
+                            F.col("value").cast("decimal(18,2)")
+                        ).alias("sv"),
+                        F.count(F.lit(1)).alias("n"),
+                    )
+                    .writeStream.outputMode("update")
+                    .format("memory")
+                    .queryName(tbl)
+                    .option("checkpointLocation", ck)
+                    .trigger(availableNow=True)
+                    .start()
                 )
-                .agg(
-                    F.sum(
-                        F.col("value").cast("decimal(18,2)")
-                    ).alias("sv"),
-                    F.count(F.lit(1)).alias("n"),
+                _await_drain(q_handle, "streaming_state_audit")
+            st = mstate.state_store(spark, ck)
+            vcols = st.select("value.*").columns
+            rows = (
+                st.select(
+                    F.col("key.event_type").alias("event_type"),
+                    F.date_format(
+                        F.col("key.window.start"), "yyyy-MM-dd HH:00"
+                    ).alias("window_start"),
+                    F.round(
+                        F.col(f"value.{vcols[0]}").cast("double"), 2
+                    ).alias("sum_value"),
+                    F.col(f"value.{vcols[-1]}").cast("long").alias("n"),
                 )
-                .writeStream.outputMode("update")
-                .format("memory")
-                .queryName(tbl)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
+                .collect()
             )
-            finished = q_handle.awaitTermination(300)
-        assert finished, "state-audit streaming run did not finish in 300 s"
-        st = mstate.state_store(spark, ck)
-        vcols = st.select("value.*").columns
-        rows = (
-            st.select(
-                F.col("key.event_type").alias("event_type"),
-                F.date_format(
-                    F.col("key.window.start"), "yyyy-MM-dd HH:00"
-                ).alias("window_start"),
-                F.round(
-                    F.col(f"value.{vcols[0]}").cast("double"), 2
-                ).alias("sum_value"),
-                F.col(f"value.{vcols[-1]}").cast("long").alias("n"),
-            )
-            .collect()
-        )
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
+        finally:
+            spark.catalog.dropTempView(tbl)
     return spark.createDataFrame(
         rows,
         "event_type string, window_start string, sum_value double, n long",
@@ -1409,20 +1421,11 @@ def deltalog_cdf_merge_feed(spark, sf_dir):
     relationally — preimages carry the OLD price, postimages and
     inserts the doubled one — so the hash match certifies that the
     cdc files record exactly the row-level delta of the MERGE, the
-    contract an incremental downstream consumer depends on. Scratch
-    table is per-invocation (uuid dir) and removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    contract an incremental downstream consumer depends on."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"cdf-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "cdf") as table_dir:
         t = DeltaishTable.create(
             spark, table_dir, orders.filter(F.col("o_orderkey") % 3 == 0)
         )
@@ -1436,18 +1439,9 @@ def deltalog_cdf_merge_feed(spark, sf_dir):
         rows = (
             t.read_change_feed(v1, v2)
             .groupBy(F.col("_change_type").alias("change_type"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
+            .agg(*_price_stats())
             .collect()
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "change_type string, n_rows long, total_price double"
     )
@@ -1480,18 +1474,10 @@ def deltalog_clone_divergence(spark, sf_dir):
     append only — the oracle recomputes both states relationally, so
     the hash match certifies write isolation: post-clone writes never
     leak across the metadata-only copy in either direction."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"clone-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "clone") as root:
         src = DeltaishTable.create(
             spark,
             os.path.join(root, "src"),
@@ -1504,22 +1490,12 @@ def deltalog_clone_divergence(spark, sf_dir):
         for entity, tbl in (("source", src), ("clone", clone)):
             rows.extend(
                 tbl.read()
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_rows"),
-                    F.round(
-                        F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                        2,
-                    )
-                    .cast("double")
-                    .alias("total_price"),
-                )
+                .agg(*_price_stats())
                 .select(
                     F.lit(entity).alias("entity"), "n_rows", "total_price"
                 )
                 .collect()
             )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         rows, "entity string, n_rows long, total_price double"
     )
@@ -1558,18 +1534,10 @@ def deltalog_identity_generated(spark, sf_dir):
     commit and the append continues from the committed high-water
     mark, the protocol contract (delta.identity.highWaterMark) that
     makes concurrent appends conflict instead of double-assigning."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"idgen-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "idgen") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -1586,19 +1554,10 @@ def deltalog_identity_generated(spark, sf_dir):
         )
         rows = (
             full.groupBy(F.col("o_year").cast("int").alias("o_year"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
+            .agg(*_price_stats())
             .crossJoin(F.broadcast(g))
             .collect()
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "o_year int, n_rows long, total_price double, "
@@ -1644,21 +1603,13 @@ def cdf_stream_consume(spark, sf_dir):
     inserts, the MERGE arrives from its cdc files as pre/post images
     plus source-only inserts; the oracle recomputes all of it
     relationally, so the hash match certifies the stream delivered
-    exactly the row-level history — the incremental-consumer contract.
-    Scratch table + checkpoint are per-invocation and removed."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
+    exactly the row-level history — the incremental-consumer contract."""
     from ..sources import cdf_stream
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"cdfstream-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "cdfstream") as root:
         t = DeltaishTable.create(
             spark,
             os.path.join(root, "t"),
@@ -1685,37 +1636,25 @@ def cdf_stream_consume(spark, sf_dir):
         # (oracle-verified); pinned_shuffle keeps the tiny aggregate
         # from opening 32 state stores.
         tbl = f"cdf_consume_{uuid.uuid4().hex[:12]}"
-        with registry.pinned_shuffle(spark):
-            q_handle = (
-                spark.readStream.format("deltaish_cdf")
-                .option("path", t.path)
-                .load()
-                .groupBy(F.col("_change_type").alias("change_type"))
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_rows"),
-                    F.round(
-                        F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                        2,
-                    )
-                    .cast("double")
-                    .alias("total_price"),
+        try:
+            with registry.pinned_shuffle(spark):
+                q_handle = (
+                    spark.readStream.format("deltaish_cdf")
+                    .option("path", t.path)
+                    .load()
+                    .groupBy(F.col("_change_type").alias("change_type"))
+                    .agg(*_price_stats())
+                    .writeStream.outputMode("complete")
+                    .format("memory")
+                    .queryName(tbl)
+                    .option("checkpointLocation", os.path.join(root, "ck"))
+                    .trigger(availableNow=True)
+                    .start()
                 )
-                .writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(tbl)
-                .option("checkpointLocation", os.path.join(root, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q_handle.awaitTermination(300):
-                q_handle.stop()
-                raise TimeoutError(
-                    "cdf_stream_consume did not drain within 300s"
-                )
-        rows = spark.table(tbl).collect()
-        spark.catalog.dropTempView(tbl)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+                _await_drain(q_handle, "cdf_stream_consume")
+            rows = spark.table(tbl).collect()
+        finally:
+            spark.catalog.dropTempView(tbl)
     return spark.createDataFrame(
         rows, "change_type string, n_rows long, total_price double"
     )
@@ -1754,19 +1693,11 @@ def cdf_incremental_view_maintenance(spark, sf_dir):
     The oracle aggregates the FINAL relational state directly, so the
     hash match certifies delta-folding ≡ recompute — at 100 TB the
     view maintenance cost is proportional to the day's changes, not
-    the table. Scratch table per-invocation, removed on return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    the table."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"ivm-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "ivm") as table_dir:
         t = DeltaishTable.create(
             spark, table_dir, orders.filter(F.col("o_orderkey") % 3 == 0)
         )
@@ -1813,8 +1744,6 @@ def cdf_incremental_view_maintenance(spark, sf_dir):
             .filter(F.col("n_orders") > 0)
             .collect()
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "cust_bucket long, n_orders long, total_price double"
     )
@@ -1849,20 +1778,11 @@ def deltalog_mor_delete_audit(spark, sf_dir):
     ignores DVs committed later. The oracle recomputes both states
     relationally, so the hash match certifies the bitmap round-trip
     (serialize → CRC-framed DV file → strict decode → scan filter)
-    drops exactly the deleted rows — no resurrection, no overreach.
-    Scratch table per-invocation, removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    drops exactly the deleted rows — no resurrection, no overreach."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"mor-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "mor") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -1875,15 +1795,7 @@ def deltalog_mor_delete_audit(spark, sf_dir):
         for v in (0, 1):
             rows.extend(
                 t.read(version=v)
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_rows"),
-                    F.round(
-                        F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                        2,
-                    )
-                    .cast("double")
-                    .alias("total_price"),
-                )
+                .agg(*_price_stats())
                 .select(
                     F.lit(v).cast("int").alias("version"),
                     "n_rows",
@@ -1891,8 +1803,6 @@ def deltalog_mor_delete_audit(spark, sf_dir):
                 )
                 .collect()
             )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "version int, n_rows long, total_price double"
     )
@@ -1926,20 +1836,11 @@ def deltalog_update_audit(spark, sf_dir):
     the engine must have RECOMPUTED from the updated dates (Delta's
     generated-column contract); the oracle applies the same UPDATE
     relationally and groups by the recomputed year, so the hash match
-    certifies both the row rewrite and the generation recompute.
-    Scratch table per-invocation, removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    certifies both the row rewrite and the generation recompute."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"upd-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "upd") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -1958,18 +1859,9 @@ def deltalog_update_audit(spark, sf_dir):
         rows = (
             t.read()
             .groupBy(F.col("o_year").cast("int").alias("o_year"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
+            .agg(*_price_stats())
             .collect()
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "o_year int, n_rows long, total_price double"
     )
@@ -2008,20 +1900,11 @@ def deltalog_skipping_audit(spark, sf_dir):
     (``pruned_scan``; the oracle pins it literally TRUE) and
     value-checks both table states relationally, so the hash match
     certifies pruning never dropped a file it needed (DELETE removed
-    exactly the band; the DV-backed UPDATE doubled exactly the band).
-    Scratch table per-invocation, removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    exactly the band; the DV-backed UPDATE doubled exactly the band)."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"skip-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "skip") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -2043,18 +1926,15 @@ def deltalog_skipping_audit(spark, sf_dir):
         pruned = pruned and len(
             t.files_matching_predicate(upd_pred, snap=snap1)
         ) < len(snap1.files)
-        agg1 = _skipping_state(t, "after_delete", pruned)
+        rows = [("after_delete", *t.read().agg(*_price_stats()).collect()[0])]
         t.update(
             upd_pred,
             {"o_totalprice": F.col("o_totalprice") * 2},
             mode="merge_on_read",
         )
-        agg2 = _skipping_state(t, "after_update", pruned)
-        rows = agg1 + agg2
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        rows.append(("after_update", *t.read().agg(*_price_stats()).collect()[0]))
     return spark.createDataFrame(
-        rows,
+        [(*r, pruned) for r in rows],
         "stage string, n_rows long, total_price double, pruned_scan boolean",
     )
 
@@ -2096,20 +1976,11 @@ def deltalog_replace_where_audit(spark, sf_dir):
     as deletes, replacement rows as inserts); the oracle recomputes
     both relationally, so the hash match certifies the region boundary
     (no row outside o_orderkey<=400 was touched), the replacement
-    contents, and the CDF attribution. Scratch table per-invocation,
-    removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    contents, and the CDF attribution."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"rw-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "rw") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -2132,32 +2003,16 @@ def deltalog_replace_where_audit(spark, sf_dir):
         final = (
             t.read()
             .groupBy(F.col("o_orderstatus").alias("label"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
+            .agg(*_price_stats())
             .select(F.lit("final").alias("kind"), "label", "n_rows", "total_price")
         )
         cdf = (
             t.read_change_feed(v0, t.version)
             .groupBy(F.col("_change_type").alias("label"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
+            .agg(*_price_stats())
             .select(F.lit("cdf").alias("kind"), "label", "n_rows", "total_price")
         )
         rows = final.unionByName(cdf).collect()
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "kind string, label string, n_rows long, total_price double"
     )
@@ -2191,20 +2046,11 @@ def deltalog_dynamic_overwrite_audit(spark, sf_dir):
     partitions' FILE SETS are byte-identical before/after
     (``untouched_intact``; the oracle pins it literally TRUE), so the
     hash match certifies the replaced-partition derivation touched
-    exactly one partition. Scratch table per-invocation, removed
-    before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    exactly one partition."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"dyn-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "dyn") as table_dir:
         t = DeltaishTable.create(
             spark, table_dir, orders, partition_by=("o_orderstatus",)
         )
@@ -2230,44 +2076,14 @@ def deltalog_dynamic_overwrite_audit(spark, sf_dir):
         rows = (
             t.read()
             .groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
+            .agg(*_price_stats())
             .withColumn("untouched_intact", F.lit(intact))
             .collect()
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "o_orderstatus string, n_rows long, total_price double, "
         "untouched_intact boolean",
-    )
-
-
-def _skipping_state(t, stage: str, pruned: bool):
-    return (
-        t.read()
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-            )
-            .cast("double")
-            .alias("total_price"),
-        )
-        .select(
-            F.lit(stage).alias("stage"),
-            "n_rows",
-            "total_price",
-            F.lit(pruned).alias("pruned_scan"),
-        )
-        .collect()
     )
 
 
@@ -2323,33 +2139,13 @@ def deltalog_merge_matrix_audit(spark, sf_dir):
     pass-through of unnamed rows in one check. File selection only
     rewrites files owning a modified row (the merge() 100 TB story),
     which the final-state sum would expose if it dropped or
-    duplicated a pass-through row. Scratch table per-invocation,
-    removed before return. Reference parity: the reference's MERGE
+    duplicated a pass-through row. Reference parity: the reference's MERGE
     usage is the SCD upsert corner (Sourcecode/AutomateTable.py);
     this covers the full delta-spark clause surface idiomatically."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"mrg-{uuid.uuid4().hex}"
-    )
-
-    def _agg(df, kind):
-        return df.agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-            )
-            .cast("double")
-            .alias("total_price"),
-        ).select(F.lit(kind).alias("kind"), "n_rows", "total_price")
-
-    try:
+    with _scratch_dir(sf_dir, "mrg") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -2380,21 +2176,11 @@ def deltalog_merge_matrix_audit(spark, sf_dir):
             ],
         )
         feed = t.read_change_feed(v - 1, v)  # (v_from, v_to] range
-        by_kind = [
-            r
-            for k in (
-                "delete",
-                "update_preimage",
-                "update_postimage",
-                "insert",
-            )
-            for r in _agg(
-                feed.filter(F.col("_change_type") == k), k
-            ).collect()
-        ]
-        rows = by_kind + _agg(t.read(), "final").collect()
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        parts = [
+            (k, feed.filter(F.col("_change_type") == k))
+            for k in ("delete", "update_preimage", "update_postimage", "insert")
+        ] + [("final", t.read())]
+        rows = [(k, *df.agg(*_price_stats()).collect()[0]) for k, df in parts]
     return spark.createDataFrame(
         rows, "kind string, n_rows long, total_price double"
     )
@@ -2437,23 +2223,14 @@ def deltalog_column_mapping_audit(spark, sf_dir):
     re-added 'X' rows may count. price values flowing through the
     rename certify that the physical column identity survived both
     the rename and the physicalized append. The oracle rebuilds the
-    final state relationally from the source table. Scratch table
-    per-invocation, removed before return. Reference parity: the
+    final state relationally from the source table. Reference parity: the
     reference evolves its Delta tables through delta-spark
     (spark/delta_manager.py, AutomateTable.py); this is that
     feature's mapping-mode half, re-expressed on the from-spec log."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"cmap-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "cmap") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -2482,20 +2259,11 @@ def deltalog_column_mapping_audit(spark, sf_dir):
             t.read()
             .groupBy((F.col("o_orderkey") % 5).cast("int").alias("bucket"))
             .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("price").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-                F.count(F.col("o_orderstatus")).cast("long").alias(
-                    "n_status"
-                ),
+                *_price_stats("price"),
+                F.count(F.col("o_orderstatus")).cast("long").alias("n_status"),
             )
             .collect()
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "bucket int, n_rows long, total_price double, n_status long"
     )
@@ -2541,18 +2309,10 @@ def deltalog_row_tracking_audit(spark, sf_dir):
     Scale story: ids allocate per-commit from the domain HWM (no
     global sort), preservation is per-file materialized columns —
     both O(rows rewritten), never O(table)."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"rowtrack-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "rowtrack") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -2574,6 +2334,7 @@ def deltalog_row_tracking_audit(spark, sf_dir):
         mapping = F.create_map(
             *[F.lit(x) for kv in vmap.items() for x in kv]
         )
+        n_rows, total_price = _price_stats()
         rows = (
             t.read_with_row_ids()
             .groupBy(
@@ -2582,20 +2343,12 @@ def deltalog_row_tracking_audit(spark, sf_dir):
                 .alias("row_commit_version")
             )
             .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.count_distinct("_row_id").cast("long").alias(
-                    "n_distinct_ids"
-                ),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
+                n_rows,
+                F.count_distinct("_row_id").cast("long").alias("n_distinct_ids"),
+                total_price,
             )
             .collect()
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "row_commit_version long, n_rows long, n_distinct_ids long, "
@@ -2640,36 +2393,13 @@ def deltalog_time_travel_audit(spark, sf_dir):
     earlier version's read). The timestamp axis re-reads v1 by its
     commitInfo timestamp and must see exactly the v1 aggregate
     (``ts_travel_ok``; oracle pins TRUE). Version reads are pure log
-    replay — no data is copied to serve history. Scratch table
-    per-invocation, removed before return."""
-    import shutil
+    replay — no data is copied to serve history."""
     import time as _time
-    import uuid
-
-    from ..delta import DeltaishTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"tt-{uuid.uuid4().hex}"
-    )
-
-    def _agg(df, stage):
-        return (
-            df.agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .select(F.lit(stage).alias("stage"), "n_rows", "total_price")
-            .collect()
-        )
-
-    try:
+    with _scratch_dir(sf_dir, "tt") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -2692,16 +2422,13 @@ def deltalog_time_travel_audit(spark, sf_dir):
             "o_orderkey % 100 = 0",
             {"o_totalprice": F.col("o_totalprice") + 7},
         )
-        rows = []
-        for v, stage in ((0, "v0"), (v1, "v1"), (v1 + 1, "v2"), (v1 + 2, "v3")):
-            rows.extend(_agg(t.read(v), stage))
-        by_ts = _agg(t.read_as_of_timestamp(ts_v1), "v1")[0]
-        ok = (
-            by_ts["n_rows"] == rows[1]["n_rows"]
-            and by_ts["total_price"] == rows[1]["total_price"]
-        )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        reads = [
+            (stage, t.read(v))
+            for v, stage in ((0, "v0"), (v1, "v1"), (v1 + 1, "v2"), (v1 + 2, "v3"))
+        ] + [("v1", t.read_as_of_timestamp(ts_v1))]
+        rows = [(st, *df.agg(*_price_stats()).collect()[0]) for st, df in reads]
+        by_ts = rows.pop()
+        ok = by_ts[1:] == rows[1][1:]
     return spark.createDataFrame(
         [(*r, ok) for r in rows],
         "stage string, n_rows long, total_price double, ts_travel_ok boolean",
@@ -2737,35 +2464,11 @@ def deltalog_restore_audit(spark, sf_dir):
     value-checked) and the version count grows to four
     (``history_preserved``; oracle pins TRUE) — undo without history
     rewrite, exactly Delta's contract. File-level diff only: restore
-    re-adds v1's file pointers, no data is rewritten. Scratch table
-    per-invocation, removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    re-adds v1's file pointers, no data is rewritten."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"rst-{uuid.uuid4().hex}"
-    )
-
-    def _agg(df, stage):
-        return (
-            df.agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .select(F.lit(stage).alias("stage"), "n_rows", "total_price")
-            .collect()
-        )
-
-    try:
+    with _scratch_dir(sf_dir, "rst") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -2781,13 +2484,13 @@ def deltalog_restore_audit(spark, sf_dir):
         v1 = t.version
         t.delete("o_orderkey <= 200")
         v2 = t.version
-        rows = _agg(t.read(), "pre_restore")
+        rows = [("pre_restore", *t.read().agg(*_price_stats()).collect()[0])]
         t.restore(v1)
-        rows += _agg(t.read(), "restored")
-        rows += _agg(t.read(v2), "time_travel_v2")
+        rows.append(("restored", *t.read().agg(*_price_stats()).collect()[0]))
+        rows.append(
+            ("time_travel_v2", *t.read(v2).agg(*_price_stats()).collect()[0])
+        )
         preserved = t.version == v2 + 1 and len(t.history()) == v2 + 2
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         [(*r, preserved) for r in rows],
         "stage string, n_rows long, total_price double, "
@@ -2828,38 +2531,13 @@ def deltalog_checkpoint_audit(spark, sf_dir):
     that (a) ``_last_checkpoint`` points at the forced version, (b)
     the checkpoint file alone reproduces the live-file set of a full
     replay — the property that makes a 1e5-commit log load O(tail),
-    not O(history), on a 100 TB table's driver. Scratch table
-    per-invocation, removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-    from ..delta import log as dlog
-
+    not O(history), on a 100 TB table's driver."""
     orders = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .filter(F.col("o_orderkey") <= 2000)
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"cp-{uuid.uuid4().hex}"
-    )
-
-    def _agg(df, stage):
-        return (
-            df.agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .select(F.lit(stage).alias("stage"), "n_rows", "total_price")
-            .collect()
-        )
-
-    try:
+    with _scratch_dir(sf_dir, "cp") as table_dir:
         t = DeltaishTable.create(spark, table_dir, orders)
         for cut in (100, 200, 300):
             t.append(
@@ -2875,16 +2553,16 @@ def deltalog_checkpoint_audit(spark, sf_dir):
                     "o_totalprice", F.col("o_totalprice") + 2
                 )
             )
-        rows = _agg(t.read(cp_version), "at_checkpoint")
-        rows += _agg(t.read(), "final")
+        rows = [
+            ("at_checkpoint", *t.read(cp_version).agg(*_price_stats()).collect()[0]),
+            ("final", *t.read().agg(*_price_stats()).collect()[0]),
+        ]
         cp_snap = dlog.read_checkpoint(table_dir, cp_version)
         full_snap = t._snapshot(cp_version)
         resumed = (
             dlog.last_checkpoint_version(table_dir) == cp_version
             and set(cp_snap.files) == set(full_snap.files)
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         [(*r, resumed) for r in rows],
         "stage string, n_rows long, total_price double, "
@@ -2920,36 +2598,11 @@ def deltalog_vacuum_audit(spark, sf_dir):
     (d) time travel to the pre-overwrite version now fails — Delta's
     documented trade-off, pinned as ``old_version_unreadable``. The
     oracle pins the file count and both flags literally, so the hash
-    certifies vacuum touched exactly the tombstone set. Scratch table
-    per-invocation, removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    certifies vacuum touched exactly the tombstone set."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"vac-{uuid.uuid4().hex}"
-    )
-
-    def _agg(t, stage):
-        return (
-            t.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .select(F.lit(stage).alias("stage"), "n_rows", "total_price")
-            .collect()
-        )
-
-    try:
+    with _scratch_dir(sf_dir, "vac") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -2962,7 +2615,7 @@ def deltalog_vacuum_audit(spark, sf_dir):
                 "o_totalprice", F.col("o_totalprice") + 3
             )
         )
-        rows = _agg(t, "before_vacuum")
+        rows = [("before_vacuum", *t.read().agg(*_price_stats()).collect()[0])]
         dry = sorted(
             t.vacuum(
                 retention_hours=0.0, enforce_retention=False, dry_run=True
@@ -2977,16 +2630,10 @@ def deltalog_vacuum_audit(spark, sf_dir):
         gone = not any(
             os.path.exists(os.path.join(table_dir, p)) for p in real
         )
-        rows += _agg(t, "after_vacuum")
-        try:
-            t.read(0).count()
-            unreadable = False
-        except Exception:  # noqa: BLE001 - vacuumed history must fail
-            unreadable = True
+        rows.append(("after_vacuum", *t.read().agg(*_price_stats()).collect()[0]))
+        unreadable = _raises(Exception, lambda: t.read(0).count())
         n_vac = len(real)
         matched = dry == real and survived_dry and gone
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         [(*r, n_vac, matched, unreadable) for r in rows],
         "stage string, n_rows long, total_price double, "
@@ -3022,13 +2669,7 @@ def deltalog_schema_evolution_audit(spark, sf_dir):
     evolved schema with the new column as NULL (no rewrite — the
     whole point: evolving a 100 TB table is one metadata action).
     Final state grouped by the evolved column is recomputed
-    relationally by the oracle. Scratch table per-invocation,
-    removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    relationally by the oracle."""
     orders = load_table(spark, sf_dir, "orders")
     base = orders.select("o_orderkey", "o_totalprice")
     evo = orders.filter(F.col("o_orderkey") <= 400).select(
@@ -3036,16 +2677,9 @@ def deltalog_schema_evolution_audit(spark, sf_dir):
         (F.col("o_totalprice") + 0.5).alias("o_totalprice"),
         "o_orderstatus",
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"evo-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "evo") as table_dir:
         t = DeltaishTable.create(spark, table_dir, base)
-        try:
-            t.append(evo)
-            refused = False
-        except Exception:  # noqa: BLE001 - strict enforcement must raise
-            refused = True
+        refused = _raises(Exception, t.append, evo)
         t.append(evo, merge_schema=True)
         rows = (
             t.read()
@@ -3053,18 +2687,9 @@ def deltalog_schema_evolution_audit(spark, sf_dir):
                 F.coalesce(F.col("o_orderstatus"), F.lit("(pre-evolution)"))
                 .alias("status")
             )
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
+            .agg(*_price_stats())
             .collect()
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         [(*r, refused) for r in rows],
         "status string, n_rows long, total_price double, "
@@ -3098,56 +2723,28 @@ def deltalog_check_constraint_audit(spark, sf_dir):
     before accepting a constraint). A conforming append lands
     normally. Both refusals are pinned as oracle-TRUE flags; the
     final state is recomputed relationally, certifying the refused
-    batch left no partial rows. Scratch table per-invocation,
-    removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    batch left no partial rows."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
     base = orders.filter(F.col("o_totalprice") > 900)
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"chk-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "chk") as table_dir:
         t = DeltaishTable.create(spark, table_dir, base)
         t.add_check_constraint("price_floor", "o_totalprice > 900")
         bad = spark.createDataFrame(
             [(999_999_999, 1.0)], "o_orderkey long, o_totalprice double"
         )
-        try:
-            t.append(bad)
-            write_refused = False
-        except Exception:  # noqa: BLE001 - violating batch must refuse
-            write_refused = True
-        try:
-            t.add_check_constraint("impossible", "o_totalprice > 1e12")
-            constraint_refused = False
-        except Exception:  # noqa: BLE001 - history violates: refuse
-            constraint_refused = True
+        write_refused = _raises(Exception, t.append, bad)
+        constraint_refused = _raises(
+            Exception, t.add_check_constraint, "impossible", "o_totalprice > 1e12"
+        )
         t.append(
             base.filter(F.col("o_orderkey") <= 400).select(
                 (F.col("o_orderkey") + 1_000_000).alias("o_orderkey"),
                 (F.col("o_totalprice") + 0.25).alias("o_totalprice"),
             )
         )
-        row = (
-            t.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
-        )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        row = t.read().agg(*_price_stats()).collect()[0]
     return spark.createDataFrame(
         [(*row, write_refused, constraint_refused)],
         "n_rows long, total_price double, violating_write_refused boolean, "
@@ -3177,20 +2774,11 @@ def deltalog_zorder_audit(spark, sf_dir):
     AFTER z-ordering, log-stats skipping prunes files for BOTH a
     custkey band and an orderkey band (``both_dims_selective``) —
     the multi-dimension selectivity that a single-column sort cannot
-    give and the reason Z-ORDER exists for 100 TB range scans.
-    Scratch table per-invocation, removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    give and the reason Z-ORDER exists for 100 TB range scans."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"zo-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "zo") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -3212,21 +2800,8 @@ def deltalog_zorder_audit(spark, sf_dir):
             and after_ck < len(snap1.files)
             and after_ok < len(snap1.files)
         )
-        row = (
-            t.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
-        )
+        row = t.read().agg(*_price_stats()).collect()[0]
         invariant = row["n_rows"] == snap0_rows(snap0)
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         [(*row, invariant, selective)],
         "n_rows long, total_price double, state_invariant boolean, "
@@ -3283,24 +2858,14 @@ def deltalog_log_cleanup_audit(spark, sf_dir):
     time travel into the cleaned range raises the specific
     metadata-cleanup error rather than replaying a truncated log.
     This is the _delta_log-side VACUUM: a 1e5-commit streaming
-    table's log stays O(checkpoint interval + retention). Scratch
-    table per-invocation, removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-    from ..delta import log as dlog
-
+    table's log stays O(checkpoint interval + retention)."""
     orders = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .filter(F.col("o_orderkey") <= 2000)
     )
     slice_df = orders.filter(F.col("o_orderkey") <= 100)
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"lc-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "lc") as table_dir:
         t = DeltaishTable.create(spark, table_dir, orders)
         for bump in (1, 2, 3):
             t.append(
@@ -3322,25 +2887,8 @@ def deltalog_log_cleanup_audit(spark, sf_dir):
             if f.endswith(".json")
         ]
         contiguous = dlog.list_versions(table_dir) == [cp, cp + 1]
-        try:
-            t.read(cp - 1).count()
-            raises = False
-        except ValueError:
-            raises = True
-        row = (
-            t.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
-        )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        raises = _raises(ValueError, lambda: t.read(cp - 1).count())
+        row = t.read().agg(*_price_stats()).collect()[0]
     return spark.createDataFrame(
         [(*row, len(removed), contiguous, raises)],
         "n_rows long, total_price double, n_log_files_removed long, "
@@ -3389,18 +2937,9 @@ def deltalog_merge_evolution_audit(spark, sf_dir):
     partition of the final state relationally, so the hash certifies
     both the clause routing and that evolution rewrote ONLY the files
     owning modified rows (pre-merge files serve NULLs through the
-    evolved schema, no rewrite). Scratch table per-invocation,
-    removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    evolved schema, no rewrite)."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
-    )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"me-{uuid.uuid4().hex}"
     )
     src = (
         orders.filter(F.col("o_orderkey") <= 400)
@@ -3419,7 +2958,7 @@ def deltalog_merge_evolution_audit(spark, sf_dir):
             )
         )
     )
-    try:
+    with _scratch_dir(sf_dir, "me") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -3441,18 +2980,9 @@ def deltalog_merge_evolution_audit(spark, sf_dir):
                     "parity"
                 )
             )
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
+            .agg(*_price_stats())
             .collect()
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "parity string, n_rows long, total_price double"
     )
@@ -3488,20 +3018,11 @@ def deltalog_column_defaults_audit(spark, sf_dir):
     and the enabling commit upgrades to writer v7 with the feature
     LISTED (``feature_listed_v7``; oracle pins TRUE) so external
     writers that don't implement defaults refuse. Final state
-    recomputed relationally. Scratch table per-invocation, removed
-    before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    recomputed relationally."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"cd-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "cd") as table_dir:
         t = DeltaishTable.create(
             spark,
             table_dir,
@@ -3530,18 +3051,9 @@ def deltalog_column_defaults_audit(spark, sf_dir):
             .groupBy(
                 F.coalesce(F.col("status"), F.lit("(null)")).alias("status")
             )
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
+            .agg(*_price_stats())
             .collect()
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         [(*r, listed) for r in rows],
         "status string, n_rows long, total_price double, "
@@ -3574,13 +3086,7 @@ def deltalog_fsck_audit(spark, sf_dir):
     exactly the missing adds in one remove-only commit — the final
     state must equal the 'hi' band relationally (the oracle
     recomputes it), proving the repair neither dropped a surviving
-    file nor kept a ghost. Scratch table per-invocation, removed
-    before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    file nor kept a ghost."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
@@ -3588,21 +3094,14 @@ def deltalog_fsck_audit(spark, sf_dir):
         .otherwise("hi")
         .alias("band"),
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"fsck-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "fsck") as table_dir:
         t = DeltaishTable.create(
             spark, table_dir, orders, partition_by=("band",)
         )
         n_before = t.read().count()
         v0 = t.version
         shutil.rmtree(os.path.join(table_dir, "band=lo"))
-        try:
-            t.read().count()
-            read_failed = False
-        except Exception:  # noqa: BLE001 - missing files must throw
-            read_failed = True
+        read_failed = _raises(Exception, lambda: t.read().count())
         dry = t.fsck(dry_run=True)
         dry_only = bool(dry) and t.version == v0
         repaired = t.fsck()
@@ -3619,8 +3118,6 @@ def deltalog_fsck_audit(spark, sf_dir):
             )
             .collect()[0]
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         [(n_before, row["n_after"], row["tp_after"], read_failed, dry_only)],
         "n_rows_before long, n_rows_after long, total_price_after double, "
@@ -3656,24 +3153,14 @@ def deltalog_multipart_checkpoint_audit(spark, sf_dir):
     relational recompute (``parts_carry_state``), and deleting one
     part makes resolution REFUSE with the incomplete-set error while
     `_last_checkpoint` degrades to None rather than serving partial
-    state (``incomplete_set_refuses``; both oracle-pinned TRUE).
-    Scratch table per-invocation, removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-    from ..delta import log as dlog
-
+    state (``incomplete_set_refuses``; both oracle-pinned TRUE)."""
     orders = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .filter(F.col("o_orderkey") <= 2000)
     )
     slice_df = orders.filter(F.col("o_orderkey") <= 100)
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"mp-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "mp") as table_dir:
         t = DeltaishTable.create(spark, table_dir, orders)
         for bump in (1, 2):
             t.append(
@@ -3685,18 +3172,7 @@ def deltalog_multipart_checkpoint_audit(spark, sf_dir):
         paths = dlog.checkpoint_part_paths(table_dir, cp)
         dlog.cleanup_metadata(table_dir, retention_hours=0.0)
         fresh = DeltaishTable(spark, table_dir)
-        row = (
-            fresh.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
-        )
+        row = fresh.read().agg(*_price_stats()).collect()[0]
         carried = len(paths) == 3 and dlog.list_versions(table_dir) == [cp]
         os.remove(paths[1])
         try:
@@ -3706,8 +3182,6 @@ def deltalog_multipart_checkpoint_audit(spark, sf_dir):
             refuses = (
                 dlog.last_checkpoint_version(table_dir) is None
             )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         [(*row, len(paths), carried, refuses)],
         "n_rows long, total_price double, n_parts long, "
@@ -3745,24 +3219,14 @@ def deltalog_v2_checkpoint_audit(spark, sf_dir):
     cannot cover the gap) rather than serving partial state
     (``torn_sidecar_degrades``; both oracle-pinned TRUE). The
     manifest/sidecar indirection is the 100 TB feature: checkpoint
-    planning parallelizes over sidecars instead of one giant parquet.
-    Scratch table per-invocation, removed before return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-    from ..delta import log as dlog
-
+    planning parallelizes over sidecars instead of one giant parquet."""
     orders = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .filter(F.col("o_orderkey") <= 2000)
     )
     slice_df = orders.filter(F.col("o_orderkey") <= 100)
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"v2cp-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "v2cp") as table_dir:
         t = DeltaishTable.create(spark, table_dir, orders)
         for bump in (1, 2):
             t.append(
@@ -3776,18 +3240,7 @@ def deltalog_v2_checkpoint_audit(spark, sf_dir):
         sidecars = dlog._manifest_sidecars(manifest)
         dlog.cleanup_metadata(table_dir, retention_hours=0.0)
         fresh = DeltaishTable(spark, table_dir)
-        row = (
-            fresh.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
-        )
+        row = fresh.read().agg(*_price_stats()).collect()[0]
         carried = (
             len(sidecars) == 2
             and dlog.list_versions(table_dir) == [cp]
@@ -3802,8 +3255,6 @@ def deltalog_v2_checkpoint_audit(spark, sf_dir):
             degrades = False
         except (ValueError, FileNotFoundError):
             pass
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         [(*row, len(sidecars), carried, degrades)],
         "n_rows long, total_price double, n_sidecars long, "
@@ -3844,24 +3295,14 @@ def deltalog_occ_conflict_audit(spark, sf_dir):
     (``metadata_change_blocks_append`` — MetadataChangedException),
     because its rows were never checked against the new invariant.
     All three pinned TRUE; the final table equals the relational
-    recompute. Scratch table per-invocation."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-    from ..delta import log as dlog
-    from ..delta.log import ConcurrentCommitError
-
+    recompute."""
     orders = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .filter(F.col("o_orderkey") <= 500)
     )
     s = orders.filter(F.col("o_orderkey") <= 40)
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"occ-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "occ") as table_dir:
         n_base = orders.count()
         n_s = s.count()
         t = DeltaishTable.create(spark, table_dir, orders)
@@ -3885,41 +3326,24 @@ def deltalog_occ_conflict_audit(spark, sf_dir):
         t.append(
             s.withColumn("o_orderkey", F.col("o_orderkey") + 2000000)
         )
-        try:
-            t._commit_next(
-                [dlog.commit_info("FAKE REWRITE")],
-                read_version=stale,
-            )
-            rewrite_refuses = False
-        except ConcurrentCommitError:
-            rewrite_refuses = True
+        rewrite_refuses = _raises(
+            ConcurrentCommitError,
+            t._commit_next,
+            [dlog.commit_info("FAKE REWRITE")],
+            read_version=stale,
+        )
 
         # (3) append blocked by concurrent metadata change
         stale2 = t.version
         t.add_check_constraint("price_pos", "o_totalprice > 0")
-        try:
-            t._commit_next(
-                [dlog.commit_info("LATE APPEND")],
-                retry_append=True,
-                read_version=stale2,
-            )
-            md_blocks = False
-        except ConcurrentCommitError:
-            md_blocks = True
-        row = (
-            t.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
+        md_blocks = _raises(
+            ConcurrentCommitError,
+            t._commit_next,
+            [dlog.commit_info("LATE APPEND")],
+            retry_append=True,
+            read_version=stale2,
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        row = t.read().agg(*_price_stats()).collect()[0]
     return spark.createDataFrame(
         [(*row, append_ok, rewrite_refuses, md_blocks)],
         "n_rows long, total_price double, append_retries_past_append "
@@ -3951,23 +3375,13 @@ def deltalog_compaction_audit(spark, sf_dir):
     of reprocessing it), and leave every PRE-compaction version
     readable (``time_travel_preserved``). The small-file problem is
     THE steady-state failure of streaming lakehouses (the reference
-    compacts on a schedule, AutomateTable.py) — this pins the repair.
-    Scratch table per-invocation."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-    from ..delta import log as dlog
-
+    compacts on a schedule, AutomateTable.py) — this pins the repair."""
     orders = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .filter(F.col("o_orderkey") <= 400)
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"opt-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "opt") as table_dir:
         t = None
         for i in range(0, 8):
             chunk = orders.filter(
@@ -3991,20 +3405,7 @@ def deltalog_compaction_audit(spark, sf_dir):
             if k in a
         )
         tt = t.read(pre_version).count() == pre_count
-        row = (
-            t.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
-        )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        row = t.read().agg(*_price_stats()).collect()[0]
     return spark.createDataFrame(
         [(*row, reduced, ndc, tt)],
         "n_rows long, total_price double, file_count_reduced boolean, "
@@ -4040,13 +3441,7 @@ def deltalog_type_widening_audit(spark, sf_dir):
     aggregate equals the relational recompute), while a narrowing
     ALTER refuses (``narrowing_refuses``; all oracle-pinned TRUE).
     At 100 TB this is the difference between an O(1) commit and a
-    full-table rewrite. Scratch table per-invocation, removed before
-    return."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-
+    full-table rewrite."""
     narrow = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") <= 1000)
@@ -4065,20 +3460,15 @@ def deltalog_type_widening_audit(spark, sf_dir):
             .alias("prio"),
         )
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"tw-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "tw") as table_dir:
         t = DeltaishTable.create(spark, table_dir, narrow)
         files_before = set(t._snapshot().files)
         t.widen_column_type("prio", "long")
         metadata_only = set(t._snapshot().files) == files_before
         t.append(wide)
-        try:
-            t.widen_column_type("prio", "integer")
-            narrowing_refuses = False
-        except ValueError:
-            narrowing_refuses = True
+        narrowing_refuses = _raises(
+            ValueError, t.widen_column_type, "prio", "integer"
+        )
         upcast = t.read().schema["prio"].dataType.typeName() == "long"
         row = (
             t.read()
@@ -4088,8 +3478,6 @@ def deltalog_type_widening_audit(spark, sf_dir):
             )
             .collect()[0]
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
     return spark.createDataFrame(
         [(*row, metadata_only, upcast, narrowing_refuses)],
         "n_rows long, prio_sum long, widen_metadata_only boolean, "
@@ -4120,13 +3508,8 @@ def deltalog_vacuum_lite_audit(spark, sf_dir):
     retention (``full_removes_aged_orphan``) while an orphan INSIDE
     the retention window survives even FULL
     (``fresh_orphan_protected``; all oracle-pinned TRUE). The final
-    read equals the relational recompute throughout. Scratch table
-    per-invocation, removed before return."""
-    import shutil
+    read equals the relational recompute throughout."""
     import time as _time
-    import uuid
-
-    from ..delta import DeltaishTable
 
     orders = (
         load_table(spark, sf_dir, "orders")
@@ -4134,10 +3517,7 @@ def deltalog_vacuum_lite_audit(spark, sf_dir):
         .filter(F.col("o_orderkey") <= 2000)
     )
     fin = orders.filter(F.col("o_orderkey") <= 300)
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"vac-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "vac") as table_dir:
         t = DeltaishTable.create(spark, table_dir, orders)
         t.overwrite(fin)  # tombstones the original files
         old_orphan = os.path.join(table_dir, "part-zombie-old.parquet")
@@ -4157,20 +3537,7 @@ def deltalog_vacuum_lite_audit(spark, sf_dir):
             and not os.path.exists(old_orphan)
         )
         fresh_protected = os.path.exists(new_orphan)
-        row = (
-            t.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
-        )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        row = t.read().agg(*_price_stats()).collect()[0]
     return spark.createDataFrame(
         [(*row, lite_keeps, full_removes, fresh_protected)],
         "n_rows long, total_price double, lite_keeps_orphan boolean, "
@@ -4206,24 +3573,15 @@ def deltalog_checksum_audit(spark, sf_dir):
     the log disagrees with (``tamper_refuses``; all oracle-pinned
     TRUE). The .crc is written INCREMENTALLY from the commit's own
     actions (O(actions), not O(log)) — the property that keeps it free
-    at a 1e5-commit streaming table. Scratch table per-invocation,
-    removed before return."""
+    at a 1e5-commit streaming table."""
     import json
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-    from ..delta import log as dlog
 
     orders = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .filter(F.col("o_orderkey") <= 2000)
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"crc-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "crc") as table_dir:
         t = DeltaishTable.create(spark, table_dir, orders)
         t.append(
             orders.filter(F.col("o_orderkey") <= 150)
@@ -4243,25 +3601,8 @@ def deltalog_checksum_audit(spark, sf_dir):
         crc["tableSizeBytes"] += 13
         with open(crc_path, "w") as f:
             f.write(json.dumps(crc))
-        try:
-            t.verify_checksum()
-            tamper_refuses = False
-        except ValueError:
-            tamper_refuses = True
-        row = (
-            t.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
-        )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        tamper_refuses = _raises(ValueError, t.verify_checksum)
+        row = t.read().agg(*_price_stats()).collect()[0]
     return spark.createDataFrame(
         [(*row, all_ok, validates, tamper_refuses)],
         "n_rows long, total_price double, all_versions_checksummed boolean, "
@@ -4296,13 +3637,8 @@ def deltalog_stats_columns_audit(spark, sf_dir):
     (``indexed_col_prunes``), while a predicate on a column PAST the
     indexed prefix conservatively keeps every truncated file
     (``unindexed_col_keeps_all`` — skipping soundness needs no reader
-    change). Final state recomputed relationally. Scratch table
-    per-invocation, removed before return."""
+    change). Final state recomputed relationally."""
     import json as _json
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
 
     base = (
         load_table(spark, sf_dir, "orders")
@@ -4314,10 +3650,7 @@ def deltalog_stats_columns_audit(spark, sf_dir):
         (F.col("o_totalprice") + 1).alias("o_totalprice"),
         "o_orderstatus",
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"sc-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "sc") as table_dir:
         t = DeltaishTable.create(spark, table_dir, base)
         t.set_table_properties({"delta.dataSkippingNumIndexedCols": "1"})
         t.append(extra)
@@ -4345,20 +3678,7 @@ def deltalog_stats_columns_audit(spark, sf_dir):
             t.files_matching_predicate("o_totalprice < -1")
         )
         keeps = new_files <= cand_unidx
-        row = (
-            t.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
-        )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        row = t.read().agg(*_price_stats()).collect()[0]
     return spark.createDataFrame(
         [(*row, truncated, prunes, keeps)],
         "n_rows long, total_price double, "
@@ -4392,23 +3712,13 @@ def deltalog_domain_metadata_audit(spark, sf_dir):
     carries it once early commits are deleted); and delta.*-reserved
     names must refuse (they belong to protocol features — row
     tracking and liquid clustering store their state in exactly this
-    mechanism). Scratch table per-invocation; final table equals the
-    relational recompute."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-    from ..delta import log as dlog
-
+    mechanism). The final table equals the relational recompute."""
     orders = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .filter(F.col("o_orderkey") <= 300)
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"dm-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "dm") as table_dir:
         t = DeltaishTable.create(spark, table_dir, orders)
         t.set_domain_metadata("app.pipeline", '{"owner":"etl","v":1}')
         t.set_domain_metadata("app.pipeline", '{"owner":"etl","v":2}')
@@ -4425,25 +3735,10 @@ def deltalog_domain_metadata_audit(spark, sf_dir):
             t2.domain_metadata("app.pipeline") == '{"owner":"etl","v":2}'
             and t2.domain_metadata("app.tmp") is None
         )
-        try:
-            t2.set_domain_metadata("delta.rowTracking", "{}")
-            reserved_refused = False
-        except ValueError:
-            reserved_refused = True
-        row = (
-            t2.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
+        reserved_refused = _raises(
+            ValueError, t2.set_domain_metadata, "delta.rowTracking", "{}"
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        row = t2.read().agg(*_price_stats()).collect()[0]
     return spark.createDataFrame(
         [(*row, lww, tombstoned, survives, reserved_refused)],
         "n_rows long, total_price double, last_writer_wins boolean, "
@@ -4475,47 +3770,35 @@ def deltalog_protocol_conflict_audit(spark, sf_dir):
     BOTH features (``rerun_carries_both``); and an append whose
     writer-protocol validation predates an intervening protocol
     commit refuses too (``append_blocked_past_protocol_change``).
-    Scratch table per-invocation; table data never changes."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable
-    from ..delta import log as dlog
-    from ..delta.log import ConcurrentCommitError
-
+    Table data never changes."""
     orders = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .filter(F.col("o_orderkey") <= 300)
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"pc-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "pc") as table_dir:
         t = DeltaishTable.create(spark, table_dir, orders)
         stale = DeltaishTable(spark, table_dir)
         stale_v = stale.version  # force its snapshot read
         # rival lands its upgrade first
         t.enable_vacuum_protocol_check()
-        try:
-            # loser computed from the stale snapshot
-            stale._commit_next(
-                [
-                    {
-                        "protocol": {
-                            "minReaderVersion": 3,
-                            "minWriterVersion": 7,
-                            "readerFeatures": ["v2Checkpoint"],
-                            "writerFeatures": ["v2Checkpoint"],
-                        }
-                    },
-                    dlog.commit_info("RIVAL UPGRADE"),
-                ],
-                read_version=stale_v,
-            )
-            loser_refused = False
-        except ConcurrentCommitError:
-            loser_refused = True
+        # loser computed from the stale snapshot
+        loser_refused = _raises(
+            ConcurrentCommitError,
+            stale._commit_next,
+            [
+                {
+                    "protocol": {
+                        "minReaderVersion": 3,
+                        "minWriterVersion": 7,
+                        "readerFeatures": ["v2Checkpoint"],
+                        "writerFeatures": ["v2Checkpoint"],
+                    }
+                },
+                dlog.commit_info("RIVAL UPGRADE"),
+            ],
+            read_version=stale_v,
+        )
         proto = t._snapshot().protocol
         winner_intact = "vacuumProtocolCheck" in (
             proto.get("writerFeatures") or []
@@ -4528,29 +3811,14 @@ def deltalog_protocol_conflict_audit(spark, sf_dir):
         # append validated against the pre-upgrade protocol refuses
         pre = t.version
         t.enable_in_commit_timestamps()
-        try:
-            t._commit_next(
-                [dlog.commit_info("LATE APPEND")],
-                retry_append=True,
-                read_version=pre,
-            )
-            append_blocked = False
-        except ConcurrentCommitError:
-            append_blocked = True
-        row = (
-            t.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
+        append_blocked = _raises(
+            ConcurrentCommitError,
+            t._commit_next,
+            [dlog.commit_info("LATE APPEND")],
+            retry_append=True,
+            read_version=pre,
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        row = t.read().agg(*_price_stats()).collect()[0]
     return spark.createDataFrame(
         [(*row, loser_refused, winner_intact, both, append_blocked)],
         "n_rows long, total_price double, loser_refused boolean, "
@@ -4586,21 +3854,12 @@ def deltalog_inline_dv_audit(spark, sf_dir):
     strict-decode-or-refuse contract. The writer's own MOR path emits
     'u' files (deltalog_mor_delete_audit); this pins the read side of
     the OTHER spec encoding end-to-end."""
-    import shutil
-    import uuid
-
-    from ..delta import DeltaishTable, roaring
-    from ..delta import log as dlog
-
     orders = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .filter(F.col("o_orderkey") <= 300)
     )
-    table_dir = os.path.join(
-        _replay_dir(sf_dir, "deltalog"), f"idv-{uuid.uuid4().hex}"
-    )
-    try:
+    with _scratch_dir(sf_dir, "idv") as table_dir:
         t = DeltaishTable.create(spark, table_dir, orders)
         snap = t._snapshot()
         # handwrite inline DVs: per file, the positions of rows with
@@ -4680,25 +3939,10 @@ def deltalog_inline_dv_audit(spark, sf_dir):
             "sizeInBytes": 99,
             "cardinality": 1,
         }
-        try:
-            t.dv_positions(bad["deletionVector"])
-            corrupt_refused = False
-        except ValueError:
-            corrupt_refused = True
-        row = (
-            t.read()
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-                )
-                .cast("double")
-                .alias("total_price"),
-            )
-            .collect()[0]
+        corrupt_refused = _raises(
+            ValueError, t.dv_positions, bad["deletionVector"]
         )
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+        row = t.read().agg(*_price_stats()).collect()[0]
     return spark.createDataFrame(
         [(*row, applied, purged_ok, corrupt_refused)],
         "n_rows_after_dv long, total_price_after_dv double, "

@@ -1,12 +1,18 @@
 """Session factory: the driver-heap default scales to detected host
 RAM (min(24g, half of physical memory), floor 2g) so the suite is
-portable off large-memory hosts, and the env override always wins."""
+portable off large-memory hosts, and the env override always wins.
+A stopped session leaves nothing behind in the catalog's
+DataFrame-handle cache."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 from lakehouse_for_data_streaming_and_analysis_spark import session
+
+from .conftest import SF_DIR
 
 
 def _with_phys_gib(monkeypatch, gib: float) -> str:
@@ -52,3 +58,29 @@ def test_env_override_wins(monkeypatch, spark):
         "SPARK_GRAFT_DRIVER_MEM", session._default_driver_mem()
     )
     assert spark.conf.get("spark.driver.memory") == want
+
+
+def test_df_cache_drops_stopped_sessions():
+    """The DataFrame-handle cache must not pin a stopped session. Run in
+    a child process: stopping the suite's shared session would break
+    every later test."""
+    code = (
+        "from lakehouse_for_data_streaming_and_analysis_spark import catalog\n"
+        "from lakehouse_for_data_streaming_and_analysis_spark.session import get_spark\n"
+        "s1 = get_spark('df_cache_a', master='local[1]')\n"
+        f"catalog.load_table(s1, {SF_DIR!r}, 'nation')\n"
+        "s1.stop()\n"
+        "s2 = get_spark('df_cache_b', master='local[1]')\n"
+        f"catalog.load_table(s2, {SF_DIR!r}, 'nation')\n"
+        "held = {k[0] for k in catalog._DF_CACHE}\n"
+        "assert held == {s2}, held\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]

@@ -6,7 +6,8 @@ Usage::
     python tools/capture_plans.py before name1 name2 ...
     python tools/capture_plans.py after  name1 name2 ...
 
-Writes ``plans/r10/<name>_<tag>.txt``. Queries that execute work at
+Writes ``plans/<round>/<name>_<tag>.txt``, the round from
+SPARK_GRAFT_PLAN_ROUND (default r11). Queries that execute work at
 build time (streaming drains, in-query table lifecycles) still produce
 a plan — it is the plan of the RETURNED frame; for those the round
 notes document the lifecycle cost separately.

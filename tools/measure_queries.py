@@ -26,13 +26,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import steal_jiffies, warm_up  # noqa: E402
 from lakehouse_for_data_streaming_and_analysis_spark.session import get_spark  # noqa: E402
-
-
-def _stat():
-    with open("/proc/stat") as f:
-        p = f.readline().split()
-    return int(p[8]), sum(int(x) for x in p[1:])
 
 
 def main() -> None:
@@ -45,16 +40,10 @@ def main() -> None:
     spark = get_spark("measure")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-    # session warm-up (worker pool + codegen baseline), not measured
-    next(iter(qs.values()))(spark, args.sf).count()
-    from lakehouse_for_data_streaming_and_analysis_spark.queries.pipeline import (
-        ensure_replay_dirs,
-    )
-
-    ensure_replay_dirs(spark, args.sf)
+    warm_up(spark, qs, args.sf)
 
     out = {}
-    s0, t0 = _stat()
+    s0, t0 = steal_jiffies()
     for name in args.names:
         fn = qs[name]
         walls = []
@@ -64,7 +53,7 @@ def main() -> None:
             walls.append(round(time.perf_counter() - t, 3))
         out[name] = walls
         print(f"# {name}: {walls}", file=sys.stderr)
-    s1, t1 = _stat()
+    s1, t1 = steal_jiffies()
     print(
         json.dumps(
             {

@@ -26,13 +26,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import steal_jiffies, warm_up  # noqa: E402
 from lakehouse_for_data_streaming_and_analysis_spark.session import get_spark  # noqa: E402
-
-
-def _steal():
-    with open("/proc/stat") as f:
-        p = f.readline().split()
-    return int(p[8]), sum(int(x) for x in p[1:])
 
 
 def main() -> None:
@@ -44,20 +39,11 @@ def main() -> None:
     spark = get_spark("profile_floor")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-    next(iter(qs.values()))(spark, args.sf).count()
-    from lakehouse_for_data_streaming_and_analysis_spark.queries.pipeline import (
-        ensure_replay_dirs,
-    )
-
-    ensure_replay_dirs(spark, args.sf)
-    par = spark.sparkContext.defaultParallelism
-    spark.range(par).repartition(par).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    warm_up(spark, qs, args.sf)
 
     names = args.names or list(qs)
     rows = {}
-    s0, t0 = _steal()
+    s0, t0 = steal_jiffies()
     for name in names:
         fn = qs[name]
         tc0 = time.perf_counter()
@@ -70,7 +56,7 @@ def main() -> None:
             f"# {name}: build={tc1 - tc0:.3f}s count={tc2 - tc1:.3f}s",
             file=sys.stderr,
         )
-    s1, t1 = _steal()
+    s1, t1 = steal_jiffies()
     build_total = sum(b for b, _ in rows.values())
     count_total = sum(c for _, c in rows.values())
     by_build = sorted(rows.items(), key=lambda kv: -kv[1][0])[:30]
