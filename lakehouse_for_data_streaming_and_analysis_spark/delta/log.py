@@ -61,17 +61,23 @@ def read_commit(table_path: str, version: int) -> list[dict]:
         return [json.loads(line) for line in f if line.strip()]
 
 
-def commit_info(operation: str, **params) -> dict:
-    return {
-        "commitInfo": {
-            "timestamp": int(time.time() * 1000),
-            "operation": operation,
-            "operationParameters": {
-                k: json.dumps(v) if not isinstance(v, str) else v
-                for k, v in params.items()
-            },
-        }
+def commit_info(
+    operation: str, operation_metrics: dict | None = None, **params
+) -> dict:
+    info = {
+        "timestamp": int(time.time() * 1000),
+        "operation": operation,
+        "operationParameters": {
+            k: json.dumps(v) if not isinstance(v, str) else v
+            for k, v in params.items()
+        },
     }
+    if operation_metrics:
+        # string-valued, as Delta writes them
+        info["operationMetrics"] = {
+            k: str(v) for k, v in operation_metrics.items()
+        }
+    return {"commitInfo": info}
 
 
 @dataclass
@@ -217,6 +223,7 @@ def history(table_path: str) -> list[dict]:
                 "n_files_added": n_add,
                 "n_files_removed": n_remove,
                 "n_records_added": n_records,
+                "operationMetrics": info.get("operationMetrics", {}),
             }
         )
     return out

@@ -19,6 +19,7 @@ import re
 import shutil
 import time
 import uuid
+from contextlib import contextmanager
 from datetime import date, datetime, timedelta
 from decimal import Decimal
 
@@ -2535,6 +2536,18 @@ class DeltaishTable:
 
     # ------------------------------------------------------------ reads
 
+    def _local_df(self, rows: list[tuple], schema: str) -> DataFrame:
+        """A small frame built on the driver, handed to Spark as Arrow.
+        A list of tuples takes the pickled-RDD path instead: ~0.4 s per
+        use on 4 cores, against ~0.04 s for the same rows as pandas
+        (object columns, so large longs and NULLs survive as is)."""
+        import pandas as pd
+
+        names = [f.split()[0] for f in schema.split(",")]
+        return self.spark.createDataFrame(
+            pd.DataFrame(rows, columns=names, dtype=object), schema
+        )
+
     def _dv_pos_df(self, dv_map: dict[str, dict]) -> DataFrame:
         """(file URI, row index) pairs deleted by the given
         deletionVector descriptors — the anti-join side of a DV-aware
@@ -2576,11 +2589,11 @@ class DeltaishTable:
                         {"__dv_fp": [uri] * len(pos), "__dv_ri": pos}
                     )
 
-        return (
-            self.spark.createDataFrame(desc_rows, "uri string, dv string")
-            .repartition(max(1, min(len(desc_rows), 32)))
-            .mapInPandas(_decode, "__dv_fp string, __dv_ri long")
-        )
+        desc = self._local_df(desc_rows, "uri string, dv string")
+        # one descriptor per task up to 32; a single one needs no shuffle
+        n = min(len(desc_rows), 32)
+        desc = desc.repartition(n) if n > 1 else desc.coalesce(1)
+        return desc.mapInPandas(_decode, "__dv_fp string, __dv_ri long")
 
     def _read_snapshot_files(
         self,
@@ -2729,7 +2742,7 @@ class DeltaishTable:
                 )
             df = df.join(
                 F.broadcast(
-                    self.spark.createDataFrame(
+                    self._local_df(
                         base_map, "__fp string, __base long, __dcv long"
                     )
                 ),
@@ -3320,6 +3333,40 @@ class DeltaishTable:
                 out.append(path)
         return out
 
+    def _source_key_stats(self, source: DataFrame, keys: list[str]):
+        """The MERGE source's duplicate-key check and key range, from one
+        aggregate over its per-key counts: the largest multiplicity
+        (a multi-match is an error in Delta MERGE too) and every key's
+        ``__lo_<k>`` / ``__hi_<k>`` (a key's bounds equal those of the
+        distinct-key set; NULL for an empty source). The offending-key
+        query runs only on the duplicate path."""
+        stats = (
+            source.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("__c"))
+            .agg(
+                F.max("__c").alias("__maxc"),
+                *[
+                    f
+                    for k in keys
+                    for f in (
+                        F.min(k).alias(f"__lo_{k}"),
+                        F.max(k).alias(f"__hi_{k}"),
+                    )
+                ],
+            )
+            .collect()[0]
+        )
+        if stats["__maxc"] is not None and stats["__maxc"] > 1:
+            dup = (
+                source.groupBy(*keys)
+                .agg(F.count(F.lit(1)).alias("c"))
+                .filter(F.col("c") > 1)
+                .limit(1)
+                .collect()
+            )
+            raise ValueError(f"source has duplicate merge keys: {dup[0]}")
+        return stats
+
     def _files_for_key_bounds(
         self, keys: list[str], bounds, snap: dlog.Snapshot
     ) -> list[str]:
@@ -3365,38 +3412,7 @@ class DeltaishTable:
 
         Source must be unique per key (checked — multi-match is an
         error in Delta MERGE too)."""
-        # r10 OPT (guide §1.2): the duplicate-key check and the key
-        # bounds used to be two sequential source scans/collects; one
-        # aggregate over the per-key counts yields both (max multiplicity
-        # AND every key's min/max — a key's bounds equal the bounds of
-        # the distinct-key set). The precise offending-key query runs
-        # only on the (exceptional) duplicate path.
-        stats = (
-            source.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .agg(
-                F.max("__c").alias("__maxc"),
-                *[
-                    f
-                    for k in keys
-                    for f in (
-                        F.min(k).alias(f"__lo_{k}"),
-                        F.max(k).alias(f"__hi_{k}"),
-                    )
-                ],
-            )
-            .collect()[0]
-        )
-        if stats["__maxc"] is not None and stats["__maxc"] > 1:
-            dup = (
-                source.groupBy(*keys)
-                .agg(F.count(F.lit(1)).alias("c"))
-                .filter(F.col("c") > 1)
-                .limit(1)
-                .collect()
-            )
-            raise ValueError(f"source has duplicate merge keys: {dup[0]}")
-        bounds = stats
+        bounds = self._source_key_stats(source, keys)
         snap = self._snapshot()
         if self._identity_meta(snap):
             raise NotImplementedError(
@@ -3624,7 +3640,12 @@ class DeltaishTable:
 
         Under ``delta.enableChangeDataFeed`` every clause attributes
         its rows: update clauses emit pre/postimages, deletes emit
-        ``delete`` rows, inserts ``insert`` rows.
+        ``delete`` rows, inserts ``insert`` rows. The commitInfo
+        carries ``operationMetrics`` numTargetRowsUpdated / Deleted /
+        Inserted, counted by the same job that pins the labelled join
+        (a named ``observe``, read back from its query execution; the
+        ``Observation`` class would install a session listener that
+        re-analyzes and logs every later failing query).
 
         ``schema_evolution=True`` is delta-spark's MERGE ... WITH
         SCHEMA EVOLUTION: source columns absent from the target are
@@ -3745,35 +3766,17 @@ class DeltaishTable:
                 "rewrite (delta-spark restricted this combination for "
                 "the same reason). Append new rows instead."
             )
-        dup = (
-            source.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(f"source has duplicate merge keys: {dup[0]}")
+        bounds = self._source_key_stats(source, keys)
         cdf = self._cdf_enabled(snap)
         pcols = tuple(snap.metadata.get("partitionColumns", ()))
 
         if wnmbs:
             # whenNotMatchedBySource inspects EVERY target row
             cand = list(snap.files)
+        elif bounds[f"__lo_{keys[0]}"] is None:
+            return snap.version  # empty source: no clause can fire
         else:
-            b = source.agg(
-                *[
-                    f
-                    for k in keys
-                    for f in (
-                        F.min(k).alias(f"__lo_{k}"),
-                        F.max(k).alias(f"__hi_{k}"),
-                    )
-                ]
-            ).collect()[0]
-            if b[f"__lo_{keys[0]}"] is None:
-                return snap.version  # empty source: no clause can fire
-            cand = self._files_for_key_bounds(keys, b, snap)
+            cand = self._files_for_key_bounds(keys, bounds, snap)
 
         rt = self._rt_enabled(snap)
         target = self._read_snapshot_files(
@@ -3809,12 +3812,7 @@ class DeltaishTable:
         act = act.otherwise(
             F.when(t_exists, F.lit("__keep")).otherwise(F.lit("__drop"))
         )
-        # pin the labeled join ONCE: the stats collect below and the
-        # rewrite/CDF scan re-evaluate j otherwise, and a merge
-        # condition over nondeterministic input (rand(), current
-        # timestamp, a re-read view) could desync the touched-file set
-        # from the rewritten rows — the same divergence delete() pins
-        j = j.withColumn("__act", act).localCheckpoint(eager=True)
+        j = j.withColumn("__act", act)
 
         del_labels = [l for l, _, c in labeled if c["action"] == "delete"]
         upd_labels = [
@@ -3829,28 +3827,10 @@ class DeltaishTable:
         ]
         mod_labels = del_labels + upd_labels
 
-        # one tagged pass: which files own a modified row, and whether
-        # any insert fires — collect is bounded by the file count
-        stats = (
-            j.groupBy("__act")
-            .agg(
-                F.collect_set(F.col("t.__fp")).alias("fps"),
-                F.count(F.lit(1)).alias("n"),
+        def _count(labels):
+            return F.count_if(
+                F.col("__act").isin(labels) if labels else F.lit(False)
             )
-            .collect()
-        )
-        hit_uris = sorted(
-            {
-                fp
-                for r in stats
-                if r["__act"] in mod_labels
-                for fp in r["fps"]
-            }
-        )
-        n_ins = sum(r["n"] for r in stats if r["__act"] in ins_labels)
-        if not hit_uris and n_ins == 0:
-            return snap.version  # converged: nothing to rewrite
-        touched = [self._uri_to_rel(u) for u in hit_uris]
 
         def _t_col(c):
             # a column minted by THIS merge's schema evolution has no
@@ -3886,75 +3866,111 @@ class DeltaishTable:
                 e = F.when(F.col("__act") == lbl, v).otherwise(e)
             return e.alias(c)
 
+        # each image is built once and shared by the data and CDF
+        # frames: every Column costs py4j round trips
         t_image = [_t_col(c).alias(c) for c in data_cols]
-        in_hit = (
-            F.col("t.__fp").isin(hit_uris) if hit_uris else F.lit(False)
-        )
-        keep_pred = (
-            t_exists
-            & in_hit
-            & ~F.col("__act").isin([*del_labels, "__drop"])
-        )
-        rt_proj = []
-        if rt:
-            # surviving target rows carry their id; update-labelled
-            # rows null their commit version (modified this commit);
-            # insert rows are source-side (t null) -> fresh ids
-            rt_proj = [
-                F.col("t._row_id").alias("_row_id"),
-                F.when(
-                    F.col("__act").isin(upd_labels)
-                    if upd_labels
-                    else F.lit(False),
-                    F.lit(None).cast("long"),
-                )
-                .otherwise(F.col("t._row_commit_version"))
-                .alias("_row_commit_version"),
-            ]
-        result = j.filter(
-            keep_pred | F.col("__act").isin(ins_labels)
-        ).select(*[_new_image(c) for c in data_cols], *rt_proj)
+        new_image = [_new_image(c) for c in data_cols]
 
-        changes = None
-        if cdf:
-            parts = []
-            if upd_labels:
-                u = j.filter(F.col("__act").isin(upd_labels))
-                parts.append(
-                    u.select(*t_image).withColumn(
-                        "_change_type", F.lit("update_preimage")
+        # pin the labeled join ONCE: the rewrite/CDF scan re-evaluates
+        # j otherwise, and a merge condition over nondeterministic input
+        # (rand(), current timestamp, a re-read view) could desync the
+        # touched-file set from the rewritten rows — the same divergence
+        # delete() pins. The pinning job also observes which files own a
+        # modified row (bounded by the file count) and the rows per
+        # action, so no stats collect runs after it.
+        observed = j.observe(
+            "merge_stats",
+            F.collect_set(
+                F.when(F.col("__act").isin(mod_labels), F.col("t.__fp"))
+                if mod_labels
+                else F.lit(None).cast(T.StringType())
+            ).alias("fps"),
+            _count(upd_labels).alias("updated"),
+            _count(del_labels).alias("deleted"),
+            _count(ins_labels).alias("inserted"),
+        )
+        with self._pinned(observed) as j:
+            m = json.loads(
+                observed._jdf.queryExecution()
+                .observedMetrics()
+                .get("merge_stats")
+                .get()
+                .json()
+            )
+            hit_uris = sorted(m["fps"])
+            if not hit_uris and m["inserted"] == 0:
+                return snap.version  # converged: nothing to rewrite
+            touched = [self._uri_to_rel(u) for u in hit_uris]
+            in_hit = (
+                F.col("t.__fp").isin(hit_uris) if hit_uris else F.lit(False)
+            )
+            keep_pred = (
+                t_exists
+                & in_hit
+                & ~F.col("__act").isin([*del_labels, "__drop"])
+            )
+            rt_proj = []
+            if rt:
+                # surviving target rows carry their id; update-labelled
+                # rows null their commit version (modified this commit);
+                # insert rows are source-side (t null) -> fresh ids
+                rt_proj = [
+                    F.col("t._row_id").alias("_row_id"),
+                    F.when(
+                        F.col("__act").isin(upd_labels)
+                        if upd_labels
+                        else F.lit(False),
+                        F.lit(None).cast("long"),
                     )
-                )
-                parts.append(
-                    u.select(
-                        *[_new_image(c) for c in data_cols]
-                    ).withColumn("_change_type", F.lit("update_postimage"))
-                )
-            if del_labels:
-                parts.append(
-                    j.filter(F.col("__act").isin(del_labels))
-                    .select(*t_image)
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-            if ins_labels:
-                parts.append(
-                    j.filter(F.col("__act").isin(ins_labels))
-                    .select(*[_new_image(c) for c in data_cols])
-                    .withColumn("_change_type", F.lit("insert"))
-                )
-            for p in parts:
-                changes = p if changes is None else changes.unionByName(p)
+                    .otherwise(F.col("t._row_commit_version"))
+                    .alias("_row_commit_version"),
+                ]
+            result = j.filter(
+                keep_pred | F.col("__act").isin(ins_labels)
+            ).select(*new_image, *rt_proj)
 
-        result = self._apply_generated(result, snap)
-        self._enforce_checks(result, snap)
-        # r10 OPT: _write_files skips zero-row part files itself; no
-        # pre-flight count job needed.
-        adds = self._write_files(
-            self._rt_to_physical(result, snap), pcols, snap=snap
-        )
-        cdc_actions = (
-            self._write_cdc_files(changes, snap=snap) if changes is not None else []
-        )
+            changes = None
+            if cdf:
+                parts = []
+                if upd_labels:
+                    u = j.filter(F.col("__act").isin(upd_labels))
+                    parts.append(
+                        u.select(*t_image).withColumn(
+                            "_change_type", F.lit("update_preimage")
+                        )
+                    )
+                    parts.append(
+                        u.select(*new_image).withColumn(
+                            "_change_type", F.lit("update_postimage")
+                        )
+                    )
+                if del_labels:
+                    parts.append(
+                        j.filter(F.col("__act").isin(del_labels))
+                        .select(*t_image)
+                        .withColumn("_change_type", F.lit("delete"))
+                    )
+                if ins_labels:
+                    parts.append(
+                        j.filter(F.col("__act").isin(ins_labels))
+                        .select(*new_image)
+                        .withColumn("_change_type", F.lit("insert"))
+                    )
+                for p in parts:
+                    changes = p if changes is None else changes.unionByName(p)
+
+            result = self._apply_generated(result, snap)
+            self._enforce_checks(result, snap)
+            # r10 OPT: _write_files skips zero-row part files itself; no
+            # pre-flight count job needed.
+            adds = self._write_files(
+                self._rt_to_physical(result, snap), pcols, snap=snap
+            )
+            cdc_actions = (
+                self._write_cdc_files(changes, snap=snap)
+                if changes is not None
+                else []
+            )
 
         def _desc(clauses):
             return (
@@ -3974,6 +3990,11 @@ class DeltaishTable:
                 *({"cdc": c} for c in cdc_actions),
                 dlog.commit_info(
                     "MERGE",
+                    operation_metrics={
+                        "numTargetRowsUpdated": m["updated"],
+                        "numTargetRowsDeleted": m["deleted"],
+                        "numTargetRowsInserted": m["inserted"],
+                    },
                     matchedPredicates=_desc(wm),
                     notMatchedPredicates=_desc(wnm),
                     notMatchedBySourcePredicates=_desc(wnmbs),
@@ -3981,6 +4002,21 @@ class DeltaishTable:
             ],
             read_version=snap.version,
         )
+
+    @contextmanager
+    def _pinned(self, df: DataFrame):
+        """``df.localCheckpoint(eager=True)`` for the body of a
+        ``with``. The cached blocks are dropped on exit: an eager local
+        checkpoint otherwise stays in the block manager for the life of
+        the session."""
+        pinned = df.localCheckpoint(eager=True)
+        rdd_id = pinned._jdf.queryExecution().logical().rdd().id()
+        try:
+            yield pinned
+        finally:
+            # SparkContext's own unpersist: RDD.unpersist would warn that
+            # a locally checkpointed RDD cannot be recomputed
+            self.spark.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
 
     def _uri_to_rel(self, uri: str) -> str:
         p = uri[len("file:"):] if uri.startswith("file:") else uri
@@ -4039,20 +4075,20 @@ class DeltaishTable:
             # evaluation that was absent from the first, KeyError-ing
             # uri_to_rel or dropping positions (ADVICE r5; update()
             # already does this)
-            matches = tagged.filter(is_match).localCheckpoint(eager=True)
-            actions, n_dvs = self._dv_mask_actions(snap, matches)
-            if actions is None:
-                return snap.version  # no-op
-            if cdf:
-                actions.extend(
-                    {"cdc": c}
-                    for c in self._write_cdc_files(
-                        matches.drop("__fp", "__ri").withColumn(
-                            "_change_type", F.lit("delete")
-                        ),
-                        snap=snap,
+            with self._pinned(tagged.filter(is_match)) as matches:
+                actions, n_dvs = self._dv_mask_actions(snap, matches)
+                if actions is None:
+                    return snap.version  # no-op
+                if cdf:
+                    actions.extend(
+                        {"cdc": c}
+                        for c in self._write_cdc_files(
+                            matches.drop("__fp", "__ri").withColumn(
+                                "_change_type", F.lit("delete")
+                            ),
+                            snap=snap,
+                        )
                     )
-                )
             actions.append(
                 dlog.commit_info(
                     "DELETE",
@@ -4163,57 +4199,57 @@ class DeltaishTable:
             tagged = self._read_snapshot_files(
                 snap, all_files, keep_tags=True, with_row_ids=rt
             )
-            matches = tagged.filter(is_match).localCheckpoint(eager=True)
-            if matches.isEmpty():
-                return snap.version
-            pre = matches.drop("__fp", "__ri")
-            post = pre.select(
-                *[
-                    exprs[c].alias(c) if c in exprs else F.col(c)
-                    for c in pre.columns
-                ]
-            )
-            if gen:
-                post = post.select(
+            with self._pinned(tagged.filter(is_match)) as matches:
+                if matches.isEmpty():
+                    return snap.version
+                pre = matches.drop("__fp", "__ri")
+                post = pre.select(
                     *[
-                        F.expr(gen[c]).alias(c) if c in gen else F.col(c)
-                        for c in post.columns
+                        exprs[c].alias(c) if c in exprs else F.col(c)
+                        for c in pre.columns
                     ]
                 )
-            if rt:
-                # updated rows keep their id in the NEW file; commit
-                # version nulls to this commit's default
-                post = post.withColumn(
-                    "_row_commit_version", F.lit(None).cast("long")
-                )
-            pre = pre.drop("_row_id", "_row_commit_version")
-            self._enforce_checks(post, snap)
-            actions, n_dvs = self._dv_mask_actions(snap, matches)
-            # the updated rows land as NEW files; the old positions
-            # are bitmap-masked — data written ∝ rows updated
-            actions.extend(
-                {"add": a}
-                for a in self._write_files(
-                    self._rt_to_physical(post, snap), pcols, snap=snap
-                )
-            )
-            if self._cdf_enabled(snap):
+                if gen:
+                    post = post.select(
+                        *[
+                            F.expr(gen[c]).alias(c) if c in gen else F.col(c)
+                            for c in post.columns
+                        ]
+                    )
+                if rt:
+                    # updated rows keep their id in the NEW file; commit
+                    # version nulls to this commit's default
+                    post = post.withColumn(
+                        "_row_commit_version", F.lit(None).cast("long")
+                    )
+                pre = pre.drop("_row_id", "_row_commit_version")
+                self._enforce_checks(post, snap)
+                actions, n_dvs = self._dv_mask_actions(snap, matches)
+                # the updated rows land as NEW files; the old positions
+                # are bitmap-masked — data written ∝ rows updated
                 actions.extend(
-                    {"cdc": c}
-                    for c in self._write_cdc_files(
-                        pre.withColumn(
-                            "_change_type", F.lit("update_preimage")
-                        ).unionByName(
-                            post.drop(
-                                "_row_id", "_row_commit_version"
-                            ).withColumn(
-                                "_change_type",
-                                F.lit("update_postimage"),
-                            )
-                        ),
-                        snap=snap,
+                    {"add": a}
+                    for a in self._write_files(
+                        self._rt_to_physical(post, snap), pcols, snap=snap
                     )
                 )
+                if self._cdf_enabled(snap):
+                    actions.extend(
+                        {"cdc": c}
+                        for c in self._write_cdc_files(
+                            pre.withColumn(
+                                "_change_type", F.lit("update_preimage")
+                            ).unionByName(
+                                post.drop(
+                                    "_row_id", "_row_commit_version"
+                                ).withColumn(
+                                    "_change_type",
+                                    F.lit("update_postimage"),
+                                )
+                            ),
+                            snap=snap,
+                        )
+                    )
             actions.append(
                 dlog.commit_info(
                     "UPDATE",

@@ -195,7 +195,7 @@ def ddsketch_quantiles_gate(spark, sf_dir):
     tol = F.lit(_ALPHA) * (F.lit(1.0) + F.lit(1e-9))
     return wide.select(
         "event_type",
-        F.col("p50_n").cast("long").alias("n_values"),
+        F.coalesce("p50_n", F.lit(0)).cast("long").alias("n_values"),
         F.round("p50_est", 6).alias("dd_p50"),
         F.round("p99_est", 6).alias("dd_p99"),
         (
@@ -230,7 +230,7 @@ def ddsketch_quantiles_gate(spark, sf_dir):
              MIN(CASE WHEN cumc >= CEIL(0.99 * n) THEN bkt END) AS b99,
              ANY_VALUE(n) AS n
            FROM cum)
-  SELECT CAST(n AS BIGINT) AS n_gaps,
+  SELECT CAST(COALESCE(n, 0) AS BIGINT) AS n_gaps,
          ROUND(2.0 * POW({_GAMMA_SQL}, b50) / ({_GAMMA_SQL} + 1.0), 6)
            AS dd_p50_sec,
          ROUND(2.0 * POW({_GAMMA_SQL}, b95) / ({_GAMMA_SQL} + 1.0), 6)
@@ -279,7 +279,7 @@ def inter_event_gap_sketch_quantiles(spark, sf_dir):
         ).alias(f"{tag}_within_alpha")
 
     return wide.select(
-        F.col("p50_n").cast("long").alias("n_gaps"),
+        F.coalesce("p50_n", F.lit(0)).cast("long").alias("n_gaps"),
         F.round("p50_est", 6).alias("dd_p50_sec"),
         F.round("p95_est", 6).alias("dd_p95_sec"),
         F.round("p99_est", 6).alias("dd_p99_sec"),

@@ -2872,6 +2872,213 @@ def test_merge_under_row_tracking_refuses_duplicate_target_keys(
         t.merge(src, keys=["o_orderkey"])
 
 
+@pytest.mark.parametrize(
+    "shape", ["upsert", "no_insert", "conditional_update"]
+)
+def test_merge_agrees_with_merge_into(spark, tmp_path, shape):
+    """The two MERGE engines agree: each merge() call shape leaves the
+    same rows, change feed and row ids as the equivalent explicit
+    merge_into() clauses, on a table with CDF and row tracking on."""
+    set_ = {"o_orderstatus": F.lit("X")}
+    cond = F.col("t.o_custkey") % 2 == 0
+    kwargs, when_matched, when_not_matched = {
+        "upsert": ({}, [{"action": "update_all"}], [{"action": "insert_all"}]),
+        "no_insert": ({"insert": False}, [{"action": "update_all"}], []),
+        "conditional_update": (
+            {"matched_update": set_, "matched_condition": cond},
+            [{"action": "update", "set": set_, "condition": cond}],
+            [{"action": "insert_all"}],
+        ),
+    }[shape]
+    base = _orders(spark, 60)
+    src = (
+        base.filter(F.col("o_orderkey") % 3 == 0)
+        .withColumn("o_totalprice", F.col("o_totalprice") + 1)
+        .unionByName(
+            base.limit(5).withColumn(
+                "o_orderkey", F.col("o_orderkey") + 10_000_000
+            )
+        )
+    )
+    out = []
+    for how in ("merge", "merge_into"):
+        t = DeltaishTable.create(spark, str(tmp_path / how), base)
+        t.enable_change_data_feed()
+        t.enable_row_tracking()
+        v0 = t.version
+        if how == "merge":
+            v = t.merge(src, ["o_orderkey"], **kwargs)
+        else:
+            v = t.merge_into(
+                src,
+                ["o_orderkey"],
+                when_matched=when_matched,
+                when_not_matched=when_not_matched,
+            )
+        rows = t.read_with_row_ids()
+        ids = [r._row_id for r in rows.collect()]
+        assert len(ids) == len(set(ids))
+        out.append(
+            (
+                # inserted rows take fresh ids in file order; every
+                # other row keeps its own
+                _rows(
+                    rows.withColumn(
+                        "_row_id",
+                        F.when(
+                            F.col("o_orderkey") < 10_000_000,
+                            F.col("_row_id"),
+                        ),
+                    )
+                ),
+                _rows(t.read_change_feed(v0, v).drop("_commit_timestamp")),
+            )
+        )
+    assert out[0] == out[1]
+    assert out[0][1], "the merge must change rows"
+
+
+def _jobs_of(spark, tag, fn):
+    """Spark jobs ``fn`` launches, counted by job tag (as
+    tools/plan_audit.py counts build jobs)."""
+    sc = spark.sparkContext
+    sc.addJobTag(tag)
+    try:
+        fn()
+    finally:
+        sc.removeJobTag(tag)
+    return len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+
+
+def test_merge_job_counts(spark, tmp_path):
+    """Spark jobs per MERGE, counted by job tag as tools/plan_audit.py
+    counts them. merge() runs the reference's upsert in at most 6 (the
+    source aggregate, then one write) and the SCD-2 expire in at most
+    5; merge_into() runs the upsert clauses in at most 7 (the same
+    aggregate, the pinned labelled join with its observed stats, the
+    write). A change that adds a collect or a re-evaluation shows up
+    here."""
+    import pandas as pd
+
+    base = _orders(spark)
+    t = DeltaishTable.create(
+        spark, str(tmp_path / "t"), base.repartitionByRange(4, "o_orderkey")
+    )
+    rows = [
+        (r.o_orderkey, r.o_custkey, r.o_orderstatus, r.o_totalprice + 1,
+         r.o_orderpriority)
+        for r in base.filter(F.col("o_orderkey") % 50 == 0).collect()
+    ]
+    rows += [(10_000_000 + i, 1, "O", 1.0, "1-URGENT") for i in range(5)]
+    src = spark.createDataFrame(
+        pd.DataFrame(rows, columns=base.columns), base.schema
+    )
+    upsert = _jobs_of(
+        spark, "merge.upsert", lambda: t.merge(src, ["o_orderkey"])
+    )
+    expire = _jobs_of(
+        spark,
+        "merge.expire",
+        lambda: t.merge(
+            src.select("o_orderkey", "o_totalprice"),
+            ["o_orderkey"],
+            matched_update={"o_orderstatus": F.lit("X")},
+            matched_condition=F.col("t.o_totalprice")
+            == F.col("s.o_totalprice"),
+            insert=False,
+        ),
+    )
+    clauses = _jobs_of(
+        spark,
+        "merge_into.upsert",
+        lambda: t.merge_into(
+            src,
+            ["o_orderkey"],
+            when_matched=[{"action": "update_all"}],
+            when_not_matched=[{"action": "insert_all"}],
+        ),
+    )
+    assert upsert <= 6 and expire <= 5 and clauses <= 7
+
+
+def test_merge_into_commit_metrics_and_noop(spark, tmp_path):
+    """The merge_into() commitInfo carries numTargetRowsUpdated /
+    Deleted / Inserted, equal to the rows the merge changed (read back
+    from the change feed); a merge that changes nothing writes no
+    commit. The counts are read back from the pinning query's own
+    execution: pyspark's Observation would install a session listener
+    that re-analyzes every later failing query and logs it at ERROR."""
+    base = _orders(spark, 40)
+    t = DeltaishTable.create(spark, str(tmp_path / "t"), base)
+    t.enable_change_data_feed()
+    v0 = t.version
+    src = base.filter(F.col("o_orderkey") % 2 == 0).unionByName(
+        base.limit(3).withColumn("o_orderkey", F.col("o_orderkey") + 10_000_000)
+    )
+    v = t.merge_into(
+        src,
+        ["o_orderkey"],
+        when_matched=[
+            {"action": "delete", "condition": "t.o_custkey % 3 = 0"},
+            {"action": "update", "set": {"o_orderstatus": "'X'"}},
+        ],
+        when_not_matched=[{"action": "insert_all"}],
+    )
+    kinds = [r._change_type for r in t.read_change_feed(v0, v).collect()]
+    metrics = t.history()[-1]["operationMetrics"]
+    assert metrics == {
+        "numTargetRowsUpdated": str(kinds.count("update_postimage")),
+        "numTargetRowsDeleted": str(kinds.count("delete")),
+        "numTargetRowsInserted": str(kinds.count("insert")),
+    }
+    assert all(int(n) > 0 for n in metrics.values())
+    # re-applying an expire whose condition no longer holds: no commit
+    expire = [
+        {
+            "action": "update",
+            "set": {"o_orderstatus": F.lit("X")},
+            "condition": F.col("t.o_orderstatus") != F.lit("X"),
+        }
+    ]
+    t.merge_into(src, ["o_orderkey"], when_matched=expire)
+    assert (
+        t.merge_into(src, ["o_orderkey"], when_matched=expire)
+        == t.version
+        == v + 1
+    )
+    listeners = spark._jsparkSession.listenerManager().listListeners()
+    assert not [
+        l for l in listeners if "ObservationManager" in l.getClass().getName()
+    ]
+
+
+def test_merge_and_dv_writes_release_their_pins(spark, tmp_path):
+    """merge_into() and the merge-on-read DELETE / UPDATE pin their
+    rows with an eager local checkpoint; none leaves a cached RDD
+    behind."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def cached():
+        return {i.id() for i in sc.getRDDStorageInfo()}
+
+    base = _orders(spark, 50)
+    t = DeltaishTable.create(spark, str(tmp_path / "t"), base)
+    before = cached()
+    t.merge_into(
+        base.limit(5).withColumn("o_totalprice", F.lit(1.0)),
+        ["o_orderkey"],
+        when_matched=[{"action": "update_all"}],
+        when_not_matched=[{"action": "insert_all"}],
+    )
+    t.delete(F.col("o_orderkey") % 7 == 0, mode="merge_on_read")
+    t.update(
+        F.col("o_orderkey") % 5 == 0,
+        {"o_orderstatus": F.lit("U")},
+        mode="merge_on_read",
+    )
+    assert cached() <= before
+
+
 def test_clustering_domain_stores_physical_names(spark, tmp_path):
     """The delta.clustering domain keys on PHYSICAL column names so a
     RENAME COLUMN never leaves a stale logical name behind: OPTIMIZE

@@ -137,3 +137,18 @@ def test_cm_merge_equals_oneshot(events):
     assert sorted(map(tuple, merged.collect())) == sorted(
         map(tuple, oneshot.collect())
     )
+
+
+def test_sketch_counts_are_zero_on_empty_input(spark, events, tmp_path):
+    """The sketch queries read their row counts from the sketch's own
+    per-key total; on an empty events table the global gap sketch
+    reports n_gaps = 0 (not NULL), and the per-type sketch has no
+    rows."""
+    from lakehouse_for_data_streaming_and_analysis_spark.queries import (
+        sketches as qs,
+    )
+
+    events.limit(0).write.parquet(str(tmp_path / "events.parquet"))
+    gaps = qs.inter_event_gap_sketch_quantiles(spark, str(tmp_path)).collect()
+    assert [r.n_gaps for r in gaps] == [0]
+    assert qs.ddsketch_quantiles_gate(spark, str(tmp_path)).collect() == []
