@@ -20,7 +20,9 @@ Layers (SURVEY.md §7.0):
   plans/      - query builders (star joins, semantic chart layer)
   streaming/  - bronze/fact streaming pipelines + deterministic harness
   analytics/  - time-series features + statistical models (pandas UDFs)
-  maintenance/- table maintenance (compaction, stats)
+  delta/      - Deltaish tables; OPTIMIZE / Z-ORDER / VACUUM are
+                DeltaishTable.optimize, zorder_by and vacuum
+  maintenance/- commit-log stats, streaming progress, state readers
 """
 
 __version__ = "0.1.0"

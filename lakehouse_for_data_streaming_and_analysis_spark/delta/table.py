@@ -19,11 +19,13 @@ import re
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 from datetime import date, datetime, timedelta
 from decimal import Decimal
+from urllib.parse import quote, unquote
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -99,14 +101,29 @@ def file_footer_stats(path: str, indexed: set[str] | None = None) -> dict:
     }
 
 
-def _parse_partition_dirs(rel_dir: str) -> dict[str, str]:
-    pv: dict[str, str] = {}
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _unescape_path_name(s: str) -> str:
+    """Spark's ``unescapePathName``: a ``%XX`` hex escape is one char."""
+    return re.sub(
+        r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), s
+    )
+
+
+def _parse_partition_dirs(rel_dir: str) -> dict[str, str | None]:
+    """Partition values of a Hive-layout directory as the log stores
+    them: unescaped strings, and JSON null for Spark's default-partition
+    marker (the Delta spec's serialization, not the directory's)."""
+    pv: dict[str, str | None] = {}
     if rel_dir in (".", ""):
         return pv
     for part in rel_dir.replace(os.sep, "/").split("/"):
         if "=" in part:
             k, _, v = part.partition("=")
-            pv[k] = v
+            pv[_unescape_path_name(k)] = (
+                None if v == _HIVE_NULL else _unescape_path_name(v)
+            )
     return pv
 
 
@@ -691,60 +708,6 @@ class DeltaishTable:
             return df
         return df.withColumnRenamed("_row_id", cols[0]).withColumnRenamed(
             "_row_commit_version", cols[1]
-        )
-
-    def _raw_rt_read(
-        self, snap: dlog.Snapshot, rel_paths: list[str], data_schema
-    ) -> DataFrame:
-        """Raw-file read for compaction/clustering on a ROW-TRACKED
-        table: the physical data schema plus the materialized columns,
-        with fresh ids (baseRowId + row_index) FILLED IN wherever the
-        file has no materialized value — the rewrite then carries
-        every row's id forward even though row positions change."""
-        rt_cols = self._rt_materialized_cols(snap)
-        rs = T.StructType(
-            list(data_schema.fields)
-            + [
-                T.StructField(rt_cols[0], T.LongType(), True),
-                T.StructField(rt_cols[1], T.LongType(), True),
-            ]
-        )
-        df = self.spark.read.schema(rs).parquet(
-            *[os.path.join(self.path, p) for p in rel_paths]
-        )
-        df = df.withColumn(
-            "__fp", F.col("_metadata.file_path")
-        ).withColumn("__ri", F.col("_metadata.row_index"))
-        base_map = []
-        for p in rel_paths:
-            a = snap.files[p]
-            if "baseRowId" not in a:
-                raise ValueError(
-                    f"row tracking: file {p} has no baseRowId"
-                )
-            uri = "file:" + os.path.abspath(os.path.join(self.path, p))
-            base_map.append(
-                (uri, a["baseRowId"], a.get("defaultRowCommitVersion"))
-            )
-        df = df.join(
-            F.broadcast(
-                self.spark.createDataFrame(
-                    base_map, "__fp string, __base long, __dcv long"
-                )
-            ),
-            "__fp",
-        )
-        return (
-            df.withColumn(
-                rt_cols[0],
-                F.coalesce(
-                    F.col(rt_cols[0]), F.col("__base") + F.col("__ri")
-                ),
-            )
-            .withColumn(
-                rt_cols[1], F.coalesce(F.col(rt_cols[1]), F.col("__dcv"))
-            )
-            .drop("__fp", "__ri", "__base", "__dcv")
         )
 
     def _last_ict(self, version: int) -> int | None:
@@ -2566,12 +2529,7 @@ class DeltaishTable:
             # malformed/vacuumed DV raises a plain ValueError here
             # instead of a wrapped executor exception mid-scan
             roaring.validate_descriptor(table_path, dv)
-            # Spark renders _metadata.file_path in the single-slash
-            # Hadoop form ("file:/abs/path"), not the RFC "file:///"
-            uri = "file:" + os.path.abspath(
-                os.path.join(table_path, rel)
-            )
-            desc_rows.append((uri, json.dumps(dv)))
+            desc_rows.append((self._file_uri(rel), json.dumps(dv)))
 
         def _decode(batches):
             import pandas as pd
@@ -2734,11 +2692,12 @@ class DeltaishTable:
                         f"row tracking: file {p} has no baseRowId; "
                         "the table was not backfilled"
                     )
-                uri = "file:" + os.path.abspath(
-                    os.path.join(self.path, p)
-                )
                 base_map.append(
-                    (uri, a["baseRowId"], a.get("defaultRowCommitVersion"))
+                    (
+                        self._file_uri(p),
+                        a["baseRowId"],
+                        a.get("defaultRowCommitVersion"),
+                    )
                 )
             df = df.join(
                 F.broadcast(
@@ -2868,10 +2827,13 @@ class DeltaishTable:
         out = []
         for path, add in snap.files.items():
             if col in pcols:
-                pv = add.get("partitionValues", {}).get(phys)
-                if pv is None:
+                pvs = add.get("partitionValues", {})
+                if phys not in pvs:
                     out.append(path)
                     continue
+                pv = pvs[phys]
+                if pv is None:
+                    continue  # a NULL partition matches no range
                 try:
                     v = self._typed_partition_value(pv, dtypes.get(col))
                     matched = lo <= v <= hi
@@ -4018,8 +3980,19 @@ class DeltaishTable:
             # a locally checkpointed RDD cannot be recomputed
             self.spark.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
 
+    # ASCII that java.net.URI escapes in a path (non-ASCII it keeps)
+    _URI_UNSAFE = re.compile(r"[^A-Za-z0-9/\-_.!~*'();:@&=+$,\x80-\U0010ffff]")
+
+    def _file_uri(self, rel: str) -> str:
+        """A data file's ``_metadata.file_path`` as Spark renders it:
+        the single-slash Hadoop form ("file:/abs/path"), percent-encoded
+        like java.net.URI — so a Hive directory's own '%XX' escapes
+        appear as '%25XX'."""
+        p = os.path.abspath(os.path.join(self.path, rel))
+        return "file:" + self._URI_UNSAFE.sub(lambda m: quote(m[0]), p)
+
     def _uri_to_rel(self, uri: str) -> str:
-        p = uri[len("file:"):] if uri.startswith("file:") else uri
+        p = unquote(uri[len("file:"):] if uri.startswith("file:") else uri)
         return os.path.relpath(
             os.path.abspath(p), os.path.abspath(self.path)
         )
@@ -4350,71 +4323,71 @@ class DeltaishTable:
         committed with dataChange=false on both sides — the logical
         content is unchanged (DV'd rows were already logically gone),
         so streams and the change feed skip it, exactly like
-        OPTIMIZE. Run this before zorder_by on a DV'd table and to
-        reclaim the scan-side anti-join cost once DVs accumulate."""
+        OPTIMIZE. Run it to reclaim the scan-side anti-join cost once
+        DVs accumulate (bin-pack OPTIMIZE leaves DV'd files to it)."""
         snap = self._snapshot()
         dv_paths = [
             p for p, a in snap.files.items() if a.get("deletionVector")
         ]
-        if not dv_paths:
-            return snap.version
-        pcols = tuple(snap.metadata.get("partitionColumns", ()))
-        live = self._read_snapshot_files(
-            snap, dv_paths, with_row_ids=self._rt_enabled(snap)
-        )  # DVs applied; surviving rows keep their ids (positions
-        # shift in the rewritten file, so they must materialize)
-        adds = self._write_files(
-            self._rt_to_physical(live, snap), pcols, snap=snap
-        )
-        for a in adds:
-            a["dataChange"] = False
-        return self._commit_next(
-            [
-                *({"add": a} for a in adds),
-                *(
-                    {"remove": self._tombstone(p, data_change=False)}
-                    for p in dv_paths
-                ),
-                dlog.commit_info(
-                    "REORG", applyPurge=True, numPurgedFiles=len(dv_paths)
-                ),
-            ],
-            read_version=snap.version,
+        return self._rewrite(
+            snap,
+            [(dv_paths, lambda df: df)] if dv_paths else [],
+            dlog.commit_info(
+                "REORG", applyPurge=True, numPurgedFiles=len(dv_paths)
+            ),
         )
 
     # ------------------------------------------------------------ maintenance
 
-    def _data_schema(self, snap: dlog.Snapshot) -> T.StructType:
-        """The snapshot's declared schema minus partition columns —
-        what the DATA files actually contain. Compaction reads must
-        use this instead of inference: after a schema evolution the
-        pre-evolution files lack the new column, and inferring from
-        one file's footer would silently drop the evolved column's
-        values from every compacted file."""
-        pcols = set(snap.metadata.get("partitionColumns", ()))
-        return T.StructType(
-            [f for f in self._schema_for(snap).fields if f.name not in pcols]
-        )
+    def _rewrite(
+        self,
+        snap: dlog.Snapshot,
+        groups: list[tuple[list[str], Callable[[DataFrame], DataFrame]]],
+        commit: dict,
+        clustering_provider: str | None = None,
+    ) -> int:
+        """The one rewrite behind OPTIMIZE, Z-ORDER and PURGE. The files
+        of each ``(paths, shape)`` group are read through the snapshot —
+        deletion vectors applied, names and field ids resolved by the
+        column mapping, row ids carried (positions shift in the new
+        files, so the ids materialize) — reshaped by ``shape``, and
+        written through ``_write_files`` like any other write. Every
+        input file gets a remove. Both sides carry dataChange=false:
+        the logical content is unchanged, so streams and the change
+        feed skip the commit. Nothing to rewrite commits nothing and
+        returns the snapshot's version."""
+        if not groups:
+            return snap.version
+        pcols = tuple(snap.metadata.get("partitionColumns", ()))
+        rt = self._rt_enabled(snap)
+        actions: list[dict] = []
+        for paths, shape in groups:
+            df = shape(self._read_snapshot_files(snap, paths, with_row_ids=rt))
+            for a in self._write_files(
+                self._rt_to_physical(df, snap), pcols, snap=snap
+            ):
+                a["dataChange"] = False
+                if clustering_provider:
+                    a["clusteringProvider"] = clustering_provider
+                actions.append({"add": a})
+            actions.extend(
+                {"remove": self._tombstone(p, data_change=False)}
+                for p in paths
+            )
+        actions.append(commit)
+        return self._commit_next(actions, read_version=snap.version)
 
-    def _physical_struct(
-        self, snap: dlog.Snapshot, schema: T.StructType
-    ) -> T.StructType:
-        """The PHYSICAL-name rendering of a logical schema — what the
-        data files of a column-mapped table actually contain. Identity
-        when the table has no mapping. Raw-file rewrites (compaction,
-        clustering) read and write with this schema directly, so the
-        physical bytes round-trip without a logical rename hop."""
-        mapping = self._column_mapping(snap)
-        if not mapping:
-            return schema
-        return T.StructType(
-            [
-                T.StructField(
-                    mapping.get(f.name, f.name), f.dataType, f.nullable
-                )
-                for f in schema.fields
-            ]
-        )
+    @staticmethod
+    def _partition_groups(
+        snap: dlog.Snapshot, paths
+    ) -> dict[tuple, list[str]]:
+        """``paths`` grouped by their partition values (one group, key
+        ``()``, on an unpartitioned table)."""
+        groups: dict[tuple, list[str]] = {}
+        for p in paths:
+            pv = snap.files[p].get("partitionValues") or {}
+            groups.setdefault(tuple(sorted(pv.items())), []).append(p)
+        return groups
 
     def optimize(
         self, target_bytes: int = 128 * 1024 * 1024, where=None
@@ -4423,9 +4396,11 @@ class DeltaishTable:
         spec requires for pure compaction — streams reading the table
         skip these commits). Inputs are read under the snapshot's
         declared schema so files predating a schema evolution keep
-        the evolved column (as nulls) instead of dropping it. Under
-        column mapping the read and rewrite both happen at PHYSICAL
-        names — compaction never consults the logical layer.
+        the evolved column (as nulls) instead of dropping it; under
+        column mapping names and field ids resolve through the
+        snapshot and the rewrite is physicalized like any write
+        (``_rewrite``). Files carrying a deletion vector are left to
+        purge().
 
         ``where`` scopes compaction to matching partitions (Delta's
         ``OPTIMIZE tbl WHERE``): like delta-spark, only PARTITION
@@ -4499,45 +4474,22 @@ class DeltaishTable:
                     n_files=n_files,
                     clustering_provider="liquid",
                 )
-        data_schema = self._physical_struct(snap, self._data_schema(snap))
-        groups: dict[tuple, list[str]] = {}
-        sizes: dict[tuple, int] = {}
-        for path, add in snap.files.items():
-            if in_scope is not None and path not in in_scope:
-                continue
-            if add.get("deletionVector"):
-                # compaction reads files RAW; folding a DV'd file in
-                # would resurrect its deleted rows. purge() is the
-                # DV-materializing rewrite — leave these to it.
-                continue
-            key = tuple(sorted(add.get("partitionValues", {}).items()))
-            groups.setdefault(key, []).append(path)
-            sizes[key] = sizes.get(key, 0) + add.get("size", 0)
-        actions: list[dict] = []
-        for key, paths in groups.items():
-            if len(paths) < 2:
-                continue
-            n_out = max(1, math.ceil(sizes[key] / target_bytes))
-            if n_out >= len(paths):
-                continue
-            df = (
-                self._raw_rt_read(snap, paths, data_schema)
-                if self._rt_enabled(snap)
-                else self.spark.read.schema(data_schema).parquet(
-                    *[os.path.join(self.path, p) for p in paths]
-                )
-            ).coalesce(n_out)
-            part_dir = "/".join(f"{k}={v}" for k, v in key)
-            adds = self._write_files_into(df, part_dir, dict(key))
-            actions.extend({"add": a} for a in adds)
-            actions.extend(
-                {"remove": self._tombstone(p, data_change=False)}
-                for p in paths
-            )
-        if not actions:
-            return snap.version
-        actions.append(dlog.commit_info("OPTIMIZE"))
-        return self._commit_next(actions, read_version=snap.version)
+        groups = self._partition_groups(
+            snap,
+            [
+                p
+                for p, a in snap.files.items()
+                if (in_scope is None or p in in_scope)
+                and not a.get("deletionVector")
+            ],
+        )
+        jobs = []
+        for paths in groups.values():
+            size = sum(snap.files[p].get("size", 0) for p in paths)
+            n_out = max(1, math.ceil(size / target_bytes))
+            if n_out < len(paths):
+                jobs.append((paths, lambda df, n=n_out: df.coalesce(n)))
+        return self._rewrite(snap, jobs, dlog.commit_info("OPTIMIZE"))
 
     def _stats_indexed_set(
         self,
@@ -4571,63 +4523,27 @@ class DeltaishTable:
         m = mapping or {}
         return {m.get(c, c) for c in logical[:n]}
 
-    def _write_files_into(
-        self, df: DataFrame, part_dir: str, partition_values: dict[str, str]
-    ) -> list[dict]:
-        """Write pre-partition-scoped data files directly under one
-        partition directory (compaction/clustering path: the data no
-        longer carries partition columns)."""
-        snap = (
-            dlog.replay(self.path)
-            if dlog.list_versions(self.path)
-            else None
-        )
-        indexed = self._stats_indexed_set(
-            snap, df, self._column_mapping(snap) if snap else None
-        )
-        staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
-        moved: list[str] = []
-        adds: list[dict] = []
-        try:
-            df.write.mode("overwrite").parquet(staging)
-            for fn in os.listdir(staging):
-                if not fn.endswith(".parquet"):
-                    continue
-                stats = file_footer_stats(
-                    os.path.join(staging, fn), indexed
-                )
-                if stats["numRecords"] == 0:
-                    continue  # never commit an empty data file
-                new_name = f"part-{uuid.uuid4().hex}.snappy.parquet"
-                rel_path = f"{part_dir}/{new_name}" if part_dir else new_name
-                dest = os.path.join(self.path, rel_path)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                os.rename(os.path.join(staging, fn), dest)
-                moved.append(dest)
-                adds.append(
-                    {
-                        "path": rel_path,
-                        "partitionValues": dict(partition_values),
-                        "size": os.path.getsize(dest),
-                        "modificationTime": int(time.time() * 1000),
-                        "dataChange": False,
-                        "stats": json.dumps(
-                            stats, separators=(",", ":")
-                        ),
-                    }
-                )
-        except BaseException:
-            for dest in moved:
-                if os.path.exists(dest):
-                    os.remove(dest)
-            raise
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        return adds
+    @staticmethod
+    def _interleave_bits(cols: list[Column], bits: int) -> Column:
+        """Morton/Z-value: interleave the low ``bits`` of each
+        (non-negative integral) column — pure expressions, whole-stage
+        codegen'd."""
+        z = F.lit(0).cast("long")
+        n = len(cols)
+        for b in range(bits):
+            for i, c in enumerate(cols):
+                bit = F.shiftright(c.cast("long"), b).bitwiseAND(F.lit(1))
+                z = z.bitwiseOR(F.shiftleft(bit, b * n + i))
+        return z
 
-    def _clustered(self, df: DataFrame, zcols, n_files: int, bits: int):
-        from ..maintenance.optimize import interleave_bits
-
+    def _clustered(
+        self, df: DataFrame, zcols, n_files: int, bits: int, pcols=()
+    ) -> DataFrame:
+        """``df`` range-partitioned into ``n_files`` on the Morton curve
+        of ``zcols``, each normalized to [0, 2^bits): min/max scaling
+        for numerics, hashing for strings (no locality to keep). Each
+        partition is sorted by (``pcols``, z) — the partition columns
+        lead, so a partitioned write needs no sort of its own."""
         dtypes = dict(df.dtypes)
         numeric = [c for c in zcols if dtypes[c] != "string"]
         bounds = (
@@ -4647,6 +4563,8 @@ class DeltaishTable:
                 normed.append(F.pmod(F.xxhash64(c), F.lit(2**bits)))
             else:
                 lo, hi = bounds[f"mn_{c}"], bounds[f"mx_{c}"]
+                if lo is None:  # the group holds no non-null value
+                    lo, hi = 0, 0
                 span = float(hi - lo) or 1.0
                 normed.append(
                     F.least(
@@ -4657,9 +4575,9 @@ class DeltaishTable:
                     ).cast("long")
                 )
         return (
-            df.withColumn("_z", interleave_bits(normed, bits))
+            df.withColumn("_z", self._interleave_bits(normed, bits))
             .repartitionByRange(n_files, "_z")
-            .sortWithinPartitions("_z")
+            .sortWithinPartitions(*pcols, "_z")
             .drop("_z")
         )
 
@@ -4764,96 +4682,41 @@ class DeltaishTable:
         bits: int = 8,
         clustering_provider: str | None = None,
     ) -> int:
-        """Z-ORDER clustering via the shared Morton-curve rewrite
-        (maintenance/optimize.interleave_bits): range-partitioned on
-        the z-value so every file's min/max stays narrow on EVERY
-        zcol — making files_matching selective on all of them. On a
-        partitioned table, clustering runs WITHIN each partition
-        (Delta's semantics — zcols must not include partition columns)
-        with per-partition normalization bounds.
+        """Z-ORDER clustering via the Morton-curve rewrite
+        (``_clustered``): range-partitioned on the z-value so every
+        file's min/max stays narrow on EVERY zcol — making
+        files_matching selective on all of them. On a partitioned
+        table, clustering runs WITHIN each partition (Delta's
+        semantics — zcols must not include partition columns) with
+        per-partition normalization bounds and at most one file per
+        input file. Deleted rows stay deleted: the rewrite reads
+        through the deletion vectors and drops them.
 
         ``clustering_provider`` is set when OPTIMIZE routes here for a
         liquid-clustered table: the rewritten adds carry the spec's
         ``clusteringProvider`` marker and commitInfo records
         clusterBy instead of zOrderBy."""
         snap = self._snapshot()
-        pcols = snap.metadata.get("partitionColumns", ())
+        pcols = tuple(snap.metadata.get("partitionColumns", ()))
         if set(zcols) & set(pcols):
             raise ValueError("zorder columns cannot be partition columns")
-        if pcols and any(
-            a.get("deletionVector") for a in snap.files.values()
-        ):
-            # the partitioned path reads files raw; run purge() first
-            # so deleted rows cannot leak into the clustered rewrite
-            raise ValueError(
-                "zorder_by on a partitioned table with deletion "
-                "vectors: call purge() first to materialize them"
-            )
-        if not pcols:
-            clustered = self._clustered(
-                self._read_snapshot_files(
-                    snap,
-                    snap.files,
-                    with_row_ids=self._rt_enabled(snap),
-                ),
-                zcols,
-                n_files,
-                bits,
-            )
-            adds = self._write_files(
-                self._rt_to_physical(clustered, snap), (), snap=snap
-            )
-            for a in adds:
-                a["dataChange"] = False
-                if clustering_provider:
-                    a["clusteringProvider"] = clustering_provider
-            ci = (
-                dlog.commit_info("OPTIMIZE", clusterBy=zcols)
-                if clustering_provider
-                else dlog.commit_info("OPTIMIZE", zOrderBy=zcols)
-            )
-            return self._commit_next(
-                [
-                    *({"add": a} for a in adds),
-                    *(
-                        {"remove": self._tombstone(p, data_change=False)}
-                        for p in snap.files
-                    ),
-                    ci,
-                ],
-                read_version=snap.version,
-            )
-        data_schema = self._physical_struct(snap, self._data_schema(snap))
-        # the partitioned path clusters the PHYSICAL frame directly
-        pmap = self._column_mapping(snap)
-        zcols_phys = [pmap.get(c, c) for c in zcols]
-        groups: dict[tuple, list[str]] = {}
-        for path, add in snap.files.items():
-            key = tuple(sorted(add.get("partitionValues", {}).items()))
-            groups.setdefault(key, []).append(path)
-        actions: list[dict] = []
-        for key, paths in groups.items():
-            df = (
-                self._raw_rt_read(snap, paths, data_schema)
-                if self._rt_enabled(snap)
-                else self.spark.read.schema(data_schema).parquet(
-                    *[os.path.join(self.path, p) for p in paths]
+        jobs = []
+        for paths in self._partition_groups(snap, snap.files).values():
+            n = max(1, min(n_files, len(paths))) if pcols else n_files
+            jobs.append(
+                (
+                    paths,
+                    lambda df, n=n: self._clustered(df, zcols, n, bits, pcols),
                 )
             )
-            clustered = self._clustered(
-                df, zcols_phys, max(1, min(n_files, len(paths))), bits
-            )
-            part_dir = "/".join(f"{k}={v}" for k, v in key)
-            actions.extend(
-                {"add": a}
-                for a in self._write_files_into(clustered, part_dir, dict(key))
-            )
-            actions.extend(
-                {"remove": self._tombstone(p, data_change=False)}
-                for p in paths
-            )
-        actions.append(dlog.commit_info("OPTIMIZE", zOrderBy=zcols))
-        return self._commit_next(actions, read_version=snap.version)
+        return self._rewrite(
+            snap,
+            jobs,
+            dlog.commit_info("OPTIMIZE", clusterBy=zcols)
+            if clustering_provider
+            else dlog.commit_info("OPTIMIZE", zOrderBy=zcols),
+            clustering_provider,
+        )
 
     # ------------------------------------------------- column defaults
 

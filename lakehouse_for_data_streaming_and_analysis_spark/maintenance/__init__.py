@@ -1,7 +1,8 @@
-"""Maintenance layer (SURVEY.md §2.11): parquet-native OPTIMIZE /
-Z-ORDER / VACUUM in ``optimize``, commit-log observability in
-``commitlog``."""
+"""Maintenance layer (SURVEY.md §2.11): commit-log observability in
+``commitlog``, streaming progress capture in ``listener`` and state
+stores as DataFrames in ``state``. OPTIMIZE / Z-ORDER / VACUUM are
+``delta.DeltaishTable.optimize``, ``zorder_by`` and ``vacuum``."""
 
-from . import commitlog, optimize
+from . import commitlog
 
-__all__ = ["commitlog", "optimize"]
+__all__ = ["commitlog"]

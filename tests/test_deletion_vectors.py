@@ -1,8 +1,8 @@
 """Deletion vectors (delta/roaring.py + merge-on-read DELETE):
 codec round-trips with strict validation, MOR deletes that write
 bitmaps instead of data, purge materialization, CDF attribution,
-vacuum aging, and the maintenance guards that keep raw-file readers
-from resurrecting deleted rows."""
+vacuum aging, and maintenance rewrites that keep deleted rows
+deleted."""
 
 from __future__ import annotations
 
@@ -232,7 +232,10 @@ def test_maintenance_guards_and_vacuum(spark, tmp_path):
     assert any(f.startswith("deletion_vector_") for f in deleted)
 
 
-def test_zorder_partitioned_refuses_dvs(spark, tmp_path):
+def test_zorder_drops_dvs_on_both_layouts(spark, tmp_path):
+    """Z-ORDER reads THROUGH the DV filter on either layout, so it both
+    clusters and materializes: deleted rows stay deleted and the
+    rewritten files carry no DV."""
     src = load_table(spark, SF_DIR, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     ).limit(30)
@@ -241,10 +244,12 @@ def test_zorder_partitioned_refuses_dvs(spark, tmp_path):
     )
     keys = sorted(r.o_orderkey for r in t.read().collect())
     t.delete(F.col("o_orderkey").isin(*keys[:2]), mode="merge_on_read")
-    with pytest.raises(ValueError, match="purge"):
-        t.zorder_by(["o_orderkey"])
-    # unpartitioned zorder reads THROUGH the DV filter, so it both
-    # clusters and materializes — allowed
+    assert any(a.get("deletionVector") for a in t._snapshot().files.values())
+    t.zorder_by(["o_orderkey"])
+    assert sorted(r.o_orderkey for r in t.read().collect()) == keys[2:]
+    assert not any(
+        a.get("deletionVector") for a in t._snapshot().files.values()
+    )
     t2 = DeltaishTable.create(
         spark, str(tmp_path / "t2"), _orders(spark, 20)
     )
@@ -252,6 +257,9 @@ def test_zorder_partitioned_refuses_dvs(spark, tmp_path):
     t2.delete(F.col("o_orderkey").isin(*k2[:2]), mode="merge_on_read")
     t2.zorder_by(["o_orderkey"], n_files=2)
     assert sorted(r.o_orderkey for r in t2.read().collect()) == k2[2:]
+    assert not any(
+        a.get("deletionVector") for a in t2._snapshot().files.values()
+    )
 
 
 def test_mor_update_writes_only_updated_rows(spark, tmp_path):

@@ -530,6 +530,16 @@ def test_zorder_within_partitions(spark, tmp_path):
     assert len(pruned) < len(snap.files)
     want = src.filter(F.col("o_custkey").between(1, 25))
     assert _rows(t.read_pruned("o_custkey", 1, 25)) == _rows(want)
+    # a partition whose z-column is all NULL has no bounds; it still
+    # clusters (on the other partitions' terms) and keeps its rows
+    is_p = F.col("o_orderstatus") == "P"
+    cust_t = dict(src.dtypes)["o_custkey"]
+    t.update(is_p, {"o_custkey": F.lit(None).cast(cust_t)})
+    t.zorder_by(["o_custkey"], n_files=4)
+    want = src.withColumn(
+        "o_custkey", F.when(~is_p, F.col("o_custkey")).cast(cust_t)
+    )
+    assert _rows(t.read()) == _rows(want)
 
 
 def test_upsert_sink_cdc_apply(spark, tmp_path):
@@ -1290,6 +1300,57 @@ def test_id_mode_column_mapping_resolves_by_field_id(spark, tmp_path):
     fschema = pq.read_schema(str(root / newest))
     assert fschema.names == [phys]
     assert fschema.field(0).metadata[b"PARQUET:field_id"] == b"1"
+    # OPTIMIZE resolves the renamed file BY ID too, and the compacted
+    # file keeps the field id, so later reads still resolve
+    t.optimize()
+    snap = t._snapshot()
+    assert len(snap.files) == 1
+    assert sorted(r.id for r in t.read().collect()) == [1, 1, 2, 2, 3, 3]
+    (compacted,) = snap.files
+    fschema = pq.read_schema(str(root / compacted))
+    assert fschema.field(0).metadata[b"PARQUET:field_id"] == b"1"
+
+
+def test_partition_values_are_stored_unescaped(spark, tmp_path):
+    """The log stores partition values as the Delta spec serializes
+    them — not as Spark escapes them in directory names: '%XX' escapes
+    decoded and the default-partition marker as JSON null. Skipping,
+    DELETE, compaction and an independent reader all see the values."""
+    from tools import minikernel as mk
+
+    vals = ["a:b", None, "x y/z"]
+    src = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vals)], "k long, p string"
+    )
+    t = DeltaishTable.create(
+        spark, str(tmp_path / "t"), src, partition_by=("p",)
+    )
+
+    def logged():
+        return sorted(
+            (a["partitionValues"]["p"] for a in t._snapshot().files.values()),
+            key=str,
+        )
+
+    assert logged() == sorted(vals, key=str)
+    assert len(t.files_matching("p", "a:b", "a:b")) == 1
+    assert sorted(mk.read_table(t.path).column("p").to_pylist(), key=str) == (
+        sorted(vals, key=str)
+    )
+    # compaction writes the values back unescaped
+    t.enable_row_tracking()
+    t.append(src.withColumn("k", F.col("k") + 10))
+    t.optimize()
+    assert len(t._snapshot().files) == 3
+    assert logged() == sorted(vals, key=str)
+    t.delete(F.col("p") == "a:b")
+    t.delete(F.col("p").isNull())
+    assert _rows(t.read()) == [("12", "x y/z"), ("2", "x y/z")]
+    assert logged() == ["x y/z"]
+    # a deletion vector and row ids bind to the file under its
+    # escaped directory
+    t.delete(F.col("k") == 12, mode="merge_on_read")
+    assert _rows(t.read_with_row_ids().select("k", "p")) == [("2", "x y/z")]
 
 
 def test_id_mode_without_field_ids_fails_loudly(spark, tmp_path):

@@ -1,100 +1,59 @@
-"""M1-M4 maintenance ops on parquet table dirs: compaction bin-packs,
-z-order tightens per-file stats, vacuum respects retention + current
-generation (SURVEY.md §2.11)."""
+"""M1/M3 maintenance on a Deltaish table fragmented like a streaming
+sink's output: OPTIMIZE bin-packs without losing rows, Z-ORDER tightens
+the per-file stats on every z-column (SURVEY.md §2.11)."""
 
 from __future__ import annotations
 
-import os
-import time
-
-from pyspark.sql import functions as F
+import json
 
 from lakehouse_for_data_streaming_and_analysis_spark.catalog import load_table
-from lakehouse_for_data_streaming_and_analysis_spark.maintenance import optimize
+from lakehouse_for_data_streaming_and_analysis_spark.delta import DeltaishTable
 
 from .conftest import SF_DIR_01
 
 
-def _table(spark, tmp_path, n_parts=24) -> str:
-    tdir = str(tmp_path / "li")
+def _table(spark, tmp_path, n_parts=24) -> DeltaishTable:
     li = load_table(spark, SF_DIR_01, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity"
     )
     # fragment like a streaming sink would: many small files, random order
-    li.repartition(n_parts).write.mode("overwrite").parquet(tdir)
-    return tdir
+    return DeltaishTable.create(
+        spark, str(tmp_path / "li"), li.repartition(n_parts)
+    )
 
 
-def _parquet_files(d: str) -> list[str]:
-    return [
-        os.path.join(r, f)
-        for r, _, fs in os.walk(d)
-        for f in fs
-        if f.endswith(".parquet")
-    ]
+def _file_stats(t: DeltaishTable) -> list[dict]:
+    return [json.loads(a["stats"]) for a in t._snapshot().files.values()]
 
 
 def test_compact_binpacks_and_preserves_rows(spark, tmp_path):
-    tdir = _table(spark, tmp_path)
-    before = spark.read.parquet(tdir).count()
-    assert len(_parquet_files(tdir)) == 24
-    gen1 = optimize.compact(spark, tdir, target_file_bytes=64 * 1024 * 1024)
-    assert optimize.current_dir(tdir) == gen1
-    assert len(_parquet_files(gen1)) < 24
-    assert optimize.read_current(spark, tdir).count() == before
+    t = _table(spark, tmp_path)
+    before = t.read().count()
+    assert len(t._snapshot().files) == 24
+    t.optimize(target_bytes=64 * 1024 * 1024)
+    assert len(t._snapshot().files) < 24
+    assert t.read().count() == before
+    assert sum(s["numRecords"] for s in _file_stats(t)) == before
 
 
 def test_zorder_tightens_file_stats(spark, tmp_path):
-    tdir = _table(spark, tmp_path)
-    base = optimize.file_stats(spark, tdir, ["l_orderkey", "l_partkey"]).collect()
-    optimize.zorder_by(spark, tdir, ["l_orderkey", "l_partkey"], n_files=16)
-    z = optimize.file_stats(spark, tdir, ["l_orderkey", "l_partkey"]).collect()
+    t = _table(spark, tmp_path)
+    cols = ["l_orderkey", "l_partkey"]
+    base = _file_stats(t)
+    t.zorder_by(cols, n_files=16)
+    z = _file_stats(t)
 
-    def med_span(rows, col):
-        spans = sorted(r[f"max_{col}"] - r[f"min_{col}"] for r in rows)
+    def med_span(stats, col):
+        spans = sorted(
+            s["maxValues"][col] - s["minValues"][col] for s in stats
+        )
         return spans[len(spans) // 2]
 
     # randomly-laid-out files each span ~the whole key domain; the
     # TYPICAL z-ordered file must be much narrower on BOTH interleaved
     # columns (median, because the occasional file crossing a major
     # z-curve bit boundary legitimately spans wide)
-    assert med_span(z, "l_orderkey") < 0.5 * med_span(base, "l_orderkey")
-    assert med_span(z, "l_partkey") < 0.5 * med_span(base, "l_partkey")
+    for c in cols:
+        assert med_span(z, c) < 0.5 * med_span(base, c)
     # still the same rows
-    assert optimize.read_current(spark, tdir).count() == sum(r["n_rows"] for r in base)
-
-
-def test_zorder_prunes_row_groups(spark, tmp_path):
-    """The point of z-order: a 2-column predicate reads far fewer rows'
-    worth of files than the fragmented layout."""
-    tdir = _table(spark, tmp_path)
-    optimize.zorder_by(spark, tdir, ["l_orderkey", "l_partkey"], n_files=8)
-    cur = optimize.read_current(spark, tdir)
-    pred = (F.col("l_orderkey") < 1000) & (F.col("l_partkey") < 500)
-    got = cur.filter(pred).count()
-    stats = optimize.file_stats(spark, tdir, ["l_orderkey", "l_partkey"]).collect()
-    eligible = [
-        r
-        for r in stats
-        if r["min_l_orderkey"] < 1000 and r["min_l_partkey"] < 500
-    ]
-    # the predicate's rows live in a strict subset of files
-    assert len(eligible) < len(stats)
-    assert got == optimize.read_current(spark, tdir).filter(pred).count()
-
-
-def test_vacuum_retention_and_current_protection(spark, tmp_path):
-    tdir = _table(spark, tmp_path, n_parts=4)
-    optimize.compact(spark, tdir, target_file_bytes=1)  # gen1 (1 file/part)
-    optimize.compact(spark, tdir)  # gen2
-    gens = sorted(os.listdir(tdir))
-    assert "gen=1" in gens and "gen=2" in gens
-    # nothing old enough yet
-    assert optimize.vacuum(tdir, retention_hours=24) == []
-    # age gen=1 beyond retention; current gen must survive regardless
-    old = os.path.join(tdir, "gen=1")
-    os.utime(old, (time.time() - 90000, time.time() - 90000))
-    removed = optimize.vacuum(tdir, retention_hours=24)
-    assert removed == [old]
-    assert os.path.isdir(os.path.join(tdir, "gen=2"))
-    assert optimize.read_current(spark, tdir).count() > 0
+    assert t.read().count() == sum(s["numRecords"] for s in base)

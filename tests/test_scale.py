@@ -146,24 +146,6 @@ def test_surrogate_keys_distributed_matches_global(spark):
     assert sorted(a.values()) == list(range(101, 101 + len(a)))
 
 
-def test_maintenance_history_lists_generations(spark, tmp_path):
-    from lakehouse_for_data_streaming_and_analysis_spark.maintenance import optimize
-
-    tdir = _table_for_history(spark, tmp_path)
-    optimize.compact(spark, tdir)
-    optimize.compact(spark, tdir)
-    h = optimize.history(spark, tdir).collect()
-    assert [r["generation"] for r in h] == [1, 2]
-    assert h[-1]["is_current"] and not h[0]["is_current"]
-    assert all(r["n_files"] >= 1 and r["bytes"] > 0 for r in h)
-
-
-def _table_for_history(spark, tmp_path) -> str:
-    tdir = str(tmp_path / "hist")
-    load_table(spark, SF_DIR_01, "nation").write.mode("overwrite").parquet(tdir)
-    return tdir
-
-
 def test_two_stage_agg_matches_plain(spark):
     """Salted two-stage aggregation must equal the plain groupBy for
     every supported aggregate (assoc/comm decomposition)."""
