@@ -1007,13 +1007,21 @@ class DeltaishTable:
             # enumerate first, move second: a failure during the scan
             # leaves everything inside staging for the finally-cleanup
             pending: list[tuple[str, str, dict]] = []
-            for root, _dirs, files in os.walk(staging):
-                for fn in files:
+            # sorted walk, and names that sort in that order: the
+            # commit order (hence the row ids a commit or a backfill
+            # assigns, and a rewrite's input order) is the same on
+            # every run of the same write
+            for root, dirs, files in os.walk(staging):
+                dirs.sort()
+                for fn in sorted(files):
                     if not fn.endswith(".parquet"):
                         continue
                     rel_dir = os.path.relpath(root, staging)
                     pv = _parse_partition_dirs(rel_dir)
-                    new_name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+                    new_name = (
+                        f"part-{len(pending):05d}-{uuid.uuid4().hex}"
+                        ".snappy.parquet"
+                    )
                     rel_path = (
                         f"{rel_dir.replace(os.sep, '/')}/{new_name}"
                         if rel_dir not in (".", "")
@@ -2031,67 +2039,45 @@ class DeltaishTable:
                 f"{stray[0].asDict()}"
             )
         pcols = tuple(snap.metadata.get("partitionColumns", ()))
-        rt = self._rt_enabled(snap)
-        cands = self.files_matching_predicate(condition, snap=snap)
-        touched: list[str] = []
-        if cands:
-            tagged = self._read_snapshot_files(
-                snap, cands, keep_tags=True
-            )
-            touched = sorted(
-                {
-                    self._uri_to_rel(r["__fp"])
-                    for r in tagged.filter(is_match)
-                    .select("__fp")
-                    .distinct()
-                    .collect()
-                }
-            )
-        actions: list[dict] = []
+        touched = self._touched(
+            snap, self.files_matching_predicate(condition, snap=snap), is_match
+        )
+        extra: list[dict] = []
         if hwm_updates:
             md = dict(snap.metadata)
             md["schemaString"] = self._schema_json_with_hwm(
                 snap.metadata["schemaString"], hwm_updates
             )
-            actions.append({"metaData": md})
-        keep_adds: list[dict] = []
+            extra.append({"metaData": md})
+        extra.extend(
+            {"add": a} for a in self._write_files(df, pcols, snap=snap)
+        )
+        kept = changes = None
         if touched:
-            target = self._read_snapshot_files(
-                snap, touched, with_row_ids=rt
-            )
-            kept = self._rt_to_physical(target.filter(~is_match), snap)
-            # r10 OPT: _write_files skips zero-row part files itself;
-            # no pre-flight count job needed.
-            keep_adds = self._write_files(kept, pcols, snap=snap)
-        adds = self._write_files(df, pcols, snap=snap)
-        cdc_actions: list[dict] = []
+            kept = self._read_snapshot_files(
+                snap, touched, with_row_ids=self._rt_enabled(snap)
+            ).filter(~is_match)
         if self._cdf_enabled(snap):
-            replaced = (
-                self._read_snapshot_files(snap, touched).filter(is_match)
-                if touched
-                else None
-            )
             changes = df.withColumn("_change_type", F.lit("insert"))
-            if replaced is not None:
-                changes = replaced.withColumn(
-                    "_change_type", F.lit("delete")
-                ).unionByName(changes)
-            cdc_actions = self._write_cdc_files(changes, snap=snap)
-        return self._commit_next(
-            [
-                *actions,
-                *({"add": a} for a in adds),
-                *({"add": a} for a in keep_adds),
-                *({"remove": self._tombstone(p)} for p in touched),
-                *({"cdc": c} for c in cdc_actions),
-                dlog.commit_info(
-                    "WRITE",
-                    mode="Overwrite",
-                    replaceWhere=str(condition),
-                    numTouchedFiles=len(touched),
-                ),
-            ],
-            read_version=snap.version,
+            if touched:
+                changes = (
+                    self._read_snapshot_files(snap, touched)
+                    .filter(is_match)
+                    .withColumn("_change_type", F.lit("delete"))
+                    .unionByName(changes)
+                )
+        return self._commit_rewrite(
+            snap,
+            kept,
+            touched,
+            changes,
+            dlog.commit_info(
+                "WRITE",
+                mode="Overwrite",
+                replaceWhere=str(condition),
+                numTouchedFiles=len(touched),
+            ),
+            extra,
         )
 
     def overwrite_partitions(self, df: DataFrame) -> int:
@@ -2810,57 +2796,21 @@ class DeltaishTable:
     ) -> list[str]:
         """Stats-based file skipping: live files whose [min, max] for
         ``col`` (footer stats, or partition value) intersects
-        [lo, hi]. Files without stats are conservatively kept.
-        Partition values are parsed at the column's declared type;
-        if the bound types still do not compare (caller passed e.g. a
-        string bound for a date column), both sides fall back to
-        string comparison — correct for ISO dates, conservative
-        otherwise."""
+        [lo, hi] — the range ``lo <= col <= hi`` through the predicate
+        evaluator (``_files_for_ir``). Files without stats are
+        conservatively kept; a file whose ``col`` is all NULL (a NULL
+        partition) matches no range."""
         if snap is None:
             snap = self._snapshot()
-        pcols = snap.metadata.get("partitionColumns", ())
-        dtypes = {f.name: f.dataType for f in self._schema_for(snap).fields}
-        # under name-mode mapping, stats keys and partitionValues keys
-        # are PHYSICAL names while the caller (and partitionColumns)
-        # speak logical — translate the lookup key only
-        phys = self._column_mapping(snap).get(col, col)
-        out = []
-        for path, add in snap.files.items():
-            if col in pcols:
-                pvs = add.get("partitionValues", {})
-                if phys not in pvs:
-                    out.append(path)
-                    continue
-                pv = pvs[phys]
-                if pv is None:
-                    continue  # a NULL partition matches no range
-                try:
-                    v = self._typed_partition_value(pv, dtypes.get(col))
-                    matched = lo <= v <= hi
-                except (TypeError, ValueError):
-                    matched = str(lo) <= str(pv) <= str(hi)
-                if matched:
-                    out.append(path)
-                continue
-            stats = add.get("stats")
-            if not stats:
-                out.append(path)
-                continue
-            s = json.loads(stats)
-            mn = s.get("minValues", {}).get(phys)
-            mx = s.get("maxValues", {}).get(phys)
-            if mn is None or mx is None:
-                out.append(path)
-                continue
-            try:
-                matched = mn <= hi and mx >= lo
-            except TypeError:
-                # stats were JSON-ified (dates/timestamps -> ISO
-                # strings); ISO strings order like their values
-                matched = str(mn) <= str(hi) and str(mx) >= str(lo)
-            if matched:
-                out.append(path)
-        return out
+        return self._files_for_ir(self._range_ir(col, lo, hi), snap)
+
+    @staticmethod
+    def _range_ir(col: str, lo, hi):
+        """The skipping IR of ``lo <= col <= hi``, built in Python (no
+        py4j Column walk); Decimal bounds compare as floats, as
+        ``_lit_value`` reads decimal literals."""
+        lo, hi = (float(v) if isinstance(v, Decimal) else v for v in (lo, hi))
+        return ("and", [("cmp", ">=", col, lo), ("cmp", "<=", col, hi)])
 
     def read_pruned(self, col: str, lo, hi) -> DataFrame:
         """Range scan that opens only stat-matching files, then applies
@@ -3129,7 +3079,11 @@ class DeltaishTable:
         isoformat text."""
         if isinstance(lit, datetime):
             if isinstance(stat, str):
-                s = stat.replace("T", " ")
+                # a date column's stat is a date: midnight, as Spark
+                # casts it to compare with a timestamp
+                s = stat.replace("T", " ") + (
+                    " 00:00:00" if len(stat) == 10 else ""
+                )
                 if s.endswith("+00:00"):  # tz-aware stats, UTC session
                     s = s[:-6]
                 return s, lit.isoformat(sep=" ")
@@ -3147,6 +3101,12 @@ class DeltaishTable:
         if isinstance(stat, str) and isinstance(lit, str):
             return stat, lit
         raise TypeError
+
+    @staticmethod
+    def _all_null(st) -> bool:
+        """(min, max, nullCount, numRecords) of a column whose every row
+        is NULL."""
+        return st is not None and st[2] is not None and st[2] == st[3]
 
     def _ir_can_match(self, ir, bounds: dict) -> bool:
         kind = ir[0]
@@ -3168,6 +3128,8 @@ class DeltaishTable:
             return st[2] < st[3]
         if kind == "ne":
             st = bounds.get(ir[1])
+            if self._all_null(st):
+                return False  # NULL != v is never TRUE
             if st is None or st[0] is None or st[1] is None:
                 return True
             try:
@@ -3196,6 +3158,8 @@ class DeltaishTable:
             return not (mn == mx == v and st[2] == 0)
         _, op, col, v = ir
         st = bounds.get(col)
+        if self._all_null(st):
+            return False  # a comparison with NULL is never TRUE
         if st is None or st[0] is None or st[1] is None:
             return True
         try:
@@ -3227,18 +3191,29 @@ class DeltaishTable:
         100 TB table costs zero data IO."""
         if snap is None:
             snap = self._snapshot()
+        return self._files_for_ir(self._predicate_ir(condition), snap)
+
+    def _predicate_ir(self, condition):
+        """Compile ``condition`` (SQL string or Column) to the skipping
+        IR; a shape the compiler cannot read becomes ("true",)."""
         try:
             if isinstance(condition, str):
                 parser = (
                     self.spark._jsparkSession.sessionState().sqlParser()
                 )
-                ir = self._ir_from_catalyst(
+                return self._ir_from_catalyst(
                     parser.parseExpression(condition)
                 )
-            else:
-                ir = self._ir_from_node(condition._jc.node())
+            return self._ir_from_node(condition._jc.node())
         except Exception:  # noqa: BLE001 - unsupported shape: keep all
-            return list(snap.files)
+            return ("true",)
+
+    def _files_for_ir(self, ir, snap: dlog.Snapshot) -> list[str]:
+        """The one skipping evaluator: live files whose log stats and
+        partition values could satisfy ``ir``. Per column it evaluates
+        (min, max, nullCount, numRecords); a NULL partition value is an
+        all-NULL column, a missing one is unknown (kept). Decimal stats
+        (stored as strings) and partition values compare as floats."""
         if ir == ("true",):
             return list(snap.files)
         pcols = set(snap.metadata.get("partitionColumns", ()))
@@ -3246,7 +3221,9 @@ class DeltaishTable:
             f.name: f.dataType for f in self._schema_for(snap).fields
         }
         pmap = self._column_mapping(snap)
-        logical_cols = list(dtypes)
+        decimals = {
+            c for c, t in dtypes.items() if isinstance(t, T.DecimalType)
+        }
         out = []
         for path, add in snap.files.items():
             stats = add.get("stats")
@@ -3263,34 +3240,38 @@ class DeltaishTable:
                 continue  # zero rows match no row predicate
             pv = add.get("partitionValues", {}) or {}
             bounds: dict[str, tuple] = {}
-            for c in logical_cols:
+            for c, dtype in dtypes.items():
                 phys = pmap.get(c, c)
                 if c in pcols:
-                    raw = pv.get(phys)
+                    if phys not in pv:
+                        continue
+                    raw = pv[phys]
                     if raw is None:
-                        # partition value null: the column is all-null
-                        bounds[c] = (None, None, nrec, nrec)
-                    else:
+                        # every row is NULL, however many there are
+                        bounds[c] = (None, None, nrec or 1, nrec or 1)
+                        continue
+                    try:
+                        v = self._typed_partition_value(raw, dtype)
+                    except (TypeError, ValueError):
+                        v = raw
+                    if isinstance(v, datetime):
+                        v = v.isoformat(sep=" ")
+                    elif isinstance(v, date):
+                        v = v.isoformat()
+                    elif isinstance(v, Decimal):
+                        v = float(v)
+                    bounds[c] = (v, v, 0, nrec)
+                else:
+                    mn, mx = mns.get(phys), mxs.get(phys)
+                    if c in decimals:
                         try:
-                            v = self._typed_partition_value(
-                                raw, dtypes.get(c)
+                            mn, mx = (
+                                None if x is None else float(x)
+                                for x in (mn, mx)
                             )
                         except (TypeError, ValueError):
-                            v = raw
-                        if isinstance(v, (date, datetime)):
-                            v = (
-                                v.isoformat(sep=" ")
-                                if isinstance(v, datetime)
-                                else v.isoformat()
-                            )
-                        bounds[c] = (v, v, 0, nrec)
-                else:
-                    bounds[c] = (
-                        mns.get(phys),
-                        mxs.get(phys),
-                        ncs.get(phys),
-                        nrec,
-                    )
+                            mn = mx = None  # unreadable: keep the file
+                    bounds[c] = (mn, mx, ncs.get(phys), nrec)
             if self._ir_can_match(ir, bounds):
                 out.append(path)
         return out
@@ -3333,18 +3314,17 @@ class DeltaishTable:
         self, keys: list[str], bounds, snap: dlog.Snapshot
     ) -> list[str]:
         """MERGE candidate files: AND of every key's source [min, max]
-        range, evaluated through the predicate skipper (a key whose
-        source bound is NULL contributes no clause — conservative)."""
-        cond = None
-        for k in keys:
-            lo, hi = bounds[f"__lo_{k}"], bounds[f"__hi_{k}"]
-            if lo is None or hi is None:
-                continue
-            c = (F.col(k) >= F.lit(lo)) & (F.col(k) <= F.lit(hi))
-            cond = c if cond is None else (cond & c)
-        if cond is None:
+        range, evaluated by the skipping evaluator (a key whose source
+        bound is NULL contributes no clause — conservative)."""
+        ranges = [
+            self._range_ir(k, bounds[f"__lo_{k}"], bounds[f"__hi_{k}"])
+            for k in keys
+            if bounds[f"__lo_{k}"] is not None
+            and bounds[f"__hi_{k}"] is not None
+        ]
+        if not ranges:
             return list(snap.files)
-        return self.files_matching_predicate(cond, snap=snap)
+        return self._files_for_ir(("and", ranges), snap)
 
     # ------------------------------------------------------------ merge
 
@@ -3386,7 +3366,6 @@ class DeltaishTable:
         if bounds[f"__lo_{keys[0]}"] is None:
             return snap.version  # empty source: no-op
         touched = self._files_for_key_bounds(keys, bounds, snap)
-        pcols = tuple(snap.metadata.get("partitionColumns", ()))
         rt = self._rt_enabled(snap)
         target = self._read_snapshot_files(
             snap, touched, with_row_ids=rt
@@ -3537,28 +3516,16 @@ class DeltaishTable:
         # generated value fails before any file is written
         result = self._apply_generated(result, snap)
         self._enforce_checks(result, snap)
-        adds = self._write_files(
-            self._rt_to_physical(result, snap), pcols, snap=snap
-        )
-        cdc_actions = (
-            self._write_cdc_files(
-                changes.drop("_row_id", "_row_commit_version"), snap=snap
-            )
-            if changes is not None
-            else []
-        )
-        return self._commit_next(
-            [
-                *({"add": a} for a in adds),
-                *({"remove": self._tombstone(p)} for p in touched),
-                *({"cdc": c} for c in cdc_actions),
-                dlog.commit_info(
-                    "MERGE",
-                    matchedPredicates=matched_desc,
-                    notMatchedPredicates="insertAll" if insert else "none",
-                ),
-            ],
-            read_version=snap.version,
+        return self._commit_rewrite(
+            snap,
+            result,
+            touched,
+            changes,
+            dlog.commit_info(
+                "MERGE",
+                matchedPredicates=matched_desc,
+                notMatchedPredicates="insertAll" if insert else "none",
+            ),
         )
 
     def merge_into(
@@ -3730,7 +3697,6 @@ class DeltaishTable:
             )
         bounds = self._source_key_stats(source, keys)
         cdf = self._cdf_enabled(snap)
-        pcols = tuple(snap.metadata.get("partitionColumns", ()))
 
         if wnmbs:
             # whenNotMatchedBySource inspects EVERY target row
@@ -3792,6 +3758,16 @@ class DeltaishTable:
         def _count(labels):
             return F.count_if(
                 F.col("__act").isin(labels) if labels else F.lit(False)
+            )
+
+        def _desc(clauses):
+            return (
+                ";".join(
+                    c["action"]
+                    + ("?" if c["condition"] is not None else "")
+                    for c in clauses
+                )
+                or "none"
             )
 
         def _t_col(c):
@@ -3923,33 +3899,11 @@ class DeltaishTable:
 
             result = self._apply_generated(result, snap)
             self._enforce_checks(result, snap)
-            # r10 OPT: _write_files skips zero-row part files itself; no
-            # pre-flight count job needed.
-            adds = self._write_files(
-                self._rt_to_physical(result, snap), pcols, snap=snap
-            )
-            cdc_actions = (
-                self._write_cdc_files(changes, snap=snap)
-                if changes is not None
-                else []
-            )
-
-        def _desc(clauses):
-            return (
-                ";".join(
-                    c["action"]
-                    + ("?" if c["condition"] is not None else "")
-                    for c in clauses
-                )
-                or "none"
-            )
-
-        return self._commit_next(
-            [
-                *([evolved_md_action] if evolved_md_action else []),
-                *({"add": a} for a in adds),
-                *({"remove": self._tombstone(p)} for p in touched),
-                *({"cdc": c} for c in cdc_actions),
+            return self._commit_rewrite(
+                snap,
+                result,
+                touched,
+                changes,
                 dlog.commit_info(
                     "MERGE",
                     operation_metrics={
@@ -3961,9 +3915,8 @@ class DeltaishTable:
                     notMatchedPredicates=_desc(wnm),
                     notMatchedBySourcePredicates=_desc(wnmbs),
                 ),
-            ],
-            read_version=snap.version,
-        )
+                [evolved_md_action] if evolved_md_action else (),
+            )
 
     @contextmanager
     def _pinned(self, df: DataFrame):
@@ -4024,96 +3977,7 @@ class DeltaishTable:
         recorded as cdc ``delete`` actions in both modes — without
         them a rewriting/DV delete cannot be attributed per-row, and
         the feed readers refuse such commits (same rule as MERGE)."""
-        if mode not in ("copy_on_write", "merge_on_read"):
-            raise ValueError(f"unknown delete mode {mode!r}")
-        snap = self._snapshot()
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        is_match = F.coalesce(cond.cast("boolean"), F.lit(False))
-        pcols = tuple(snap.metadata.get("partitionColumns", ()))
-        # data skipping: the find-touched scan reads only files whose
-        # stats could hold a matching row (see files_matching_predicate)
-        all_files = self.files_matching_predicate(condition, snap=snap)
-        if not all_files:
-            return snap.version
-        cdf = self._cdf_enabled(snap)
-
-        if mode == "merge_on_read":
-            tagged = self._read_snapshot_files(
-                snap, all_files, keep_tags=True
-            )
-            # one materialized row set for all three consumers
-            # (touched-file collect, DV pack, CDC write) — without the
-            # checkpoint a nondeterministic condition (rand(),
-            # current_timestamp) could surface a file in the second
-            # evaluation that was absent from the first, KeyError-ing
-            # uri_to_rel or dropping positions (ADVICE r5; update()
-            # already does this)
-            with self._pinned(tagged.filter(is_match)) as matches:
-                actions, n_dvs = self._dv_mask_actions(snap, matches)
-                if actions is None:
-                    return snap.version  # no-op
-                if cdf:
-                    actions.extend(
-                        {"cdc": c}
-                        for c in self._write_cdc_files(
-                            matches.drop("__fp", "__ri").withColumn(
-                                "_change_type", F.lit("delete")
-                            ),
-                            snap=snap,
-                        )
-                    )
-            actions.append(
-                dlog.commit_info(
-                    "DELETE",
-                    mode="merge-on-read",
-                    numDeletionVectors=n_dvs,
-                )
-            )
-            return self._commit_next(actions, read_version=snap.version)
-
-        tagged = self._read_snapshot_files(snap, all_files, keep_tags=True)
-        touched = sorted(
-            {
-                self._uri_to_rel(r["__fp"])
-                for r in tagged.filter(is_match)
-                .select("__fp")
-                .distinct()
-                .collect()
-            }
-        )
-        if not touched:
-            return snap.version  # nothing matches: no-op, no commit
-        rt = self._rt_enabled(snap)
-        target = self._read_snapshot_files(
-            snap, touched, with_row_ids=rt
-        )
-        # row tracking: survivors carry their id AND commit version
-        # into the rewritten file (delete modifies neither)
-        kept = self._rt_to_physical(target.filter(~is_match), snap)
-        # r10 OPT (guide §1.2): no pre-flight limit(1).count() job —
-        # _write_files already skips zero-row part files, so an
-        # all-rows-deleted rewrite yields adds == [] through the same
-        # write job that a non-empty rewrite needs anyway.
-        adds = self._write_files(kept, pcols, snap=snap)
-        cdc_actions = []
-        if cdf:
-            cdc_actions = self._write_cdc_files(
-                target.filter(is_match)
-                .drop("_row_id", "_row_commit_version")
-                .withColumn("_change_type", F.lit("delete")),
-                snap=snap,
-            )
-        return self._commit_next(
-            [
-                *({"add": a} for a in adds),
-                *({"remove": self._tombstone(p)} for p in touched),
-                *({"cdc": c} for c in cdc_actions),
-                dlog.commit_info(
-                    "DELETE", numTouchedFiles=len(touched)
-                ),
-            ],
-            read_version=snap.version,
-        )
+        return self._modify_rows("DELETE", condition, None, mode)
 
     def update(
         self, condition, set_map: dict, mode: str = "copy_on_write"
@@ -4138,103 +4002,163 @@ class DeltaishTable:
         update_preimage/update_postimage cdc pairs, and the feed
         readers refuse a pre-CDF UPDATE (same attribution rule as
         MERGE/DELETE)."""
+        return self._modify_rows("UPDATE", condition, set_map, mode)
+
+    def _modify_rows(
+        self, op: str, condition, set_map: dict | None, mode: str
+    ) -> int:
+        """The one row-level engine behind delete() and update(); a
+        DELETE is the case with no post-image (``set_map`` None)."""
         if mode not in ("copy_on_write", "merge_on_read"):
-            raise ValueError(f"unknown update mode {mode!r}")
+            raise ValueError(f"unknown {op.lower()} mode {mode!r}")
         snap = self._snapshot()
         cond = F.expr(condition) if isinstance(condition, str) else condition
         is_match = F.coalesce(cond.cast("boolean"), F.lit(False))
         gen = self._generated_exprs(snap)
-        idents = self._identity_meta(snap)
-        for c in set_map:
-            if c in gen:
-                raise ValueError(
-                    f"column {c!r} is GENERATED ALWAYS AS "
-                    f"({gen[c]}); it is recomputed, not assigned"
-                )
-            if c in idents:
-                raise ValueError(
-                    f"column {c!r} is GENERATED ALWAYS AS IDENTITY; "
-                    "explicit values are not accepted"
-                )
-        pcols = tuple(snap.metadata.get("partitionColumns", ()))
-        # data skipping: scan only stat-candidate files (conservative;
-        # the exact is_match filter below stays authoritative)
-        all_files = self.files_matching_predicate(condition, snap=snap)
-        if not all_files:
+        exprs = None
+        if set_map is not None:
+            idents = self._identity_meta(snap)
+            for c in set_map:
+                if c in gen:
+                    raise ValueError(
+                        f"column {c!r} is GENERATED ALWAYS AS "
+                        f"({gen[c]}); it is recomputed, not assigned"
+                    )
+                if c in idents:
+                    raise ValueError(
+                        f"column {c!r} is GENERATED ALWAYS AS IDENTITY; "
+                        "explicit values are not accepted"
+                    )
+            exprs = {
+                c: (F.expr(e) if isinstance(e, str) else e)
+                for c, e in set_map.items()
+            }
+        # data skipping: the find-touched scan reads only files whose
+        # stats could hold a matching row (conservative; the exact
+        # is_match filter below stays authoritative)
+        cands = self.files_matching_predicate(condition, snap=snap)
+        if not cands:
             return snap.version
-        exprs = {
-            c: (F.expr(e) if isinstance(e, str) else e)
-            for c, e in set_map.items()
-        }
+        rt = self._rt_enabled(snap)
+        cdf = self._cdf_enabled(snap)
+        set_cols = {} if set_map is None else {"setColumns": sorted(set_map)}
 
-        if mode == "merge_on_read":
-            rt = self._rt_enabled(snap)
-            tagged = self._read_snapshot_files(
-                snap, all_files, keep_tags=True, with_row_ids=rt
+        def post_image(df, m=None):
+            # SET applied where ``m`` (every row when None), generated
+            # columns recomputed from the UPDATED values (deterministic
+            # exprs: unmatched rows recompute to their current values);
+            # row ids survive, a modified row's commit version nulls to
+            # its new file's defaultRowCommitVersion (this commit)
+            def pick(new, c):
+                return new if m is None else F.when(m, new).otherwise(F.col(c))
+
+            out = df.select(
+                *[
+                    pick(exprs[c], c).alias(c) if c in exprs else F.col(c)
+                    for c in df.columns
+                ]
             )
-            with self._pinned(tagged.filter(is_match)) as matches:
-                if matches.isEmpty():
-                    return snap.version
-                pre = matches.drop("__fp", "__ri")
-                post = pre.select(
+            if gen:
+                out = out.select(
                     *[
-                        exprs[c].alias(c) if c in exprs else F.col(c)
-                        for c in pre.columns
+                        F.expr(gen[c]).alias(c) if c in gen else F.col(c)
+                        for c in out.columns
                     ]
                 )
-                if gen:
-                    post = post.select(
-                        *[
-                            F.expr(gen[c]).alias(c) if c in gen else F.col(c)
-                            for c in post.columns
-                        ]
-                    )
-                if rt:
-                    # updated rows keep their id in the NEW file; commit
-                    # version nulls to this commit's default
-                    post = post.withColumn(
-                        "_row_commit_version", F.lit(None).cast("long")
-                    )
-                pre = pre.drop("_row_id", "_row_commit_version")
-                self._enforce_checks(post, snap)
-                actions, n_dvs = self._dv_mask_actions(snap, matches)
-                # the updated rows land as NEW files; the old positions
-                # are bitmap-masked — data written ∝ rows updated
-                actions.extend(
-                    {"add": a}
-                    for a in self._write_files(
-                        self._rt_to_physical(post, snap), pcols, snap=snap
-                    )
+            if rt:
+                out = out.withColumn(
+                    "_row_commit_version",
+                    pick(F.lit(None).cast("long"), "_row_commit_version"),
                 )
-                if self._cdf_enabled(snap):
-                    actions.extend(
-                        {"cdc": c}
-                        for c in self._write_cdc_files(
-                            pre.withColumn(
-                                "_change_type", F.lit("update_preimage")
-                            ).unionByName(
-                                post.drop(
-                                    "_row_id", "_row_commit_version"
-                                ).withColumn(
-                                    "_change_type",
-                                    F.lit("update_postimage"),
-                                )
-                            ),
-                            snap=snap,
-                        )
-                    )
-            actions.append(
-                dlog.commit_info(
-                    "UPDATE",
-                    mode="merge-on-read",
-                    numDeletionVectors=n_dvs,
-                    setColumns=sorted(set_map),
-                )
-            )
-            return self._commit_next(actions, read_version=snap.version)
+            return out
 
-        tagged = self._read_snapshot_files(snap, all_files, keep_tags=True)
-        touched = sorted(
+        def change_rows(pre, post):
+            if post is None:
+                return pre.withColumn("_change_type", F.lit("delete"))
+            return pre.withColumn(
+                "_change_type", F.lit("update_preimage")
+            ).unionByName(
+                post.withColumn("_change_type", F.lit("update_postimage"))
+            )
+
+        if mode == "merge_on_read":
+            tagged = self._read_snapshot_files(
+                snap,
+                cands,
+                keep_tags=True,
+                with_row_ids=rt and exprs is not None,
+            )
+            # one materialized row set for every consumer (touched-file
+            # collect, DV pack, post-image and CDC writes) — without the
+            # checkpoint a nondeterministic condition (rand(),
+            # current_timestamp) could surface a file in a later
+            # evaluation that was absent from the first, KeyError-ing
+            # uri_to_rel or dropping positions (ADVICE r5)
+            with self._pinned(tagged.filter(is_match)) as matches:
+                pre = matches.drop("__fp", "__ri")
+                post = None
+                if exprs is not None:
+                    post = post_image(pre)
+                    # CHECK constraints run before any DV file is written
+                    self._enforce_checks(post, snap)
+                actions, n_dvs = self._dv_mask_actions(snap, matches)
+                if actions is None:
+                    return snap.version  # no-op
+                # the old positions are bitmap-masked; an UPDATE's rows
+                # land as NEW files — data written ∝ rows updated
+                return self._commit_rewrite(
+                    snap,
+                    post,
+                    [],
+                    change_rows(pre, post) if cdf else None,
+                    dlog.commit_info(
+                        op,
+                        mode="merge-on-read",
+                        numDeletionVectors=n_dvs,
+                        **set_cols,
+                    ),
+                    extra=actions,
+                )
+
+        touched = self._touched(snap, cands, is_match)
+        if not touched:
+            return snap.version  # nothing matches: no-op, no commit
+        target = self._read_snapshot_files(snap, touched, with_row_ids=rt)
+        if exprs is None:
+            # survivors carry their row id AND commit version into the
+            # rewritten file (delete modifies neither). No pre-flight
+            # count: _write_files skips zero-row part files, so an
+            # all-rows-deleted rewrite yields no add through the same
+            # write job
+            result, post = target.filter(~is_match), None
+        else:
+            # matched-ness is decided on the OLD values and carried as a
+            # marker — a SET that changes a condition column must not
+            # change which rows count as updated (postimages)
+            updated = post_image(
+                target.withColumn("__m", is_match), F.col("__m")
+            )
+            result = updated.drop("__m")
+            self._enforce_checks(result, snap)
+            post = updated.filter(F.col("__m")).drop("__m")
+        return self._commit_rewrite(
+            snap,
+            result,
+            touched,
+            change_rows(target.filter(is_match), post) if cdf else None,
+            dlog.commit_info(op, numTouchedFiles=len(touched), **set_cols),
+        )
+
+    def _touched(
+        self, snap: dlog.Snapshot, cands: list[str], is_match: Column
+    ) -> list[str]:
+        """The candidate files that own a row where ``is_match`` holds,
+        found by one tagged scan that collects only distinct file
+        URIs."""
+        if not cands:
+            return []
+        tagged = self._read_snapshot_files(snap, cands, keep_tags=True)
+        return sorted(
             {
                 self._uri_to_rel(r["__fp"])
                 for r in tagged.filter(is_match)
@@ -4243,76 +4167,45 @@ class DeltaishTable:
                 .collect()
             }
         )
-        if not touched:
-            return snap.version
-        rt = self._rt_enabled(snap)
-        target = self._read_snapshot_files(
-            snap, touched, with_row_ids=rt
+
+    def _commit_rewrite(
+        self,
+        snap: dlog.Snapshot,
+        result: DataFrame | None,
+        removed: list[str],
+        changes: DataFrame | None,
+        commit_info: dict,
+        extra=(),
+    ) -> int:
+        """The one tail of every row-level write (DELETE, UPDATE, MERGE,
+        replaceWhere): ``result`` is written as new data files (row ids
+        carried into the materialized columns), ``changes`` as the
+        commit's cdc files, and both are committed after ``extra`` with
+        one remove per ``removed`` path. The commit is checked against
+        the snapshot the write read: a data commit since then
+        conflicts."""
+        pcols = tuple(snap.metadata.get("partitionColumns", ()))
+        adds = (
+            []
+            if result is None
+            else self._write_files(
+                self._rt_to_physical(result, snap), pcols, snap=snap
+            )
         )
-        # matched-ness is decided on the OLD values and carried as a
-        # marker — a SET that changes a condition column must not
-        # change which rows count as updated (postimages)
-        marked = target.withColumn("__m", is_match)
-        proj = []
-        for c in target.columns:
-            if c in exprs:
-                proj.append(
-                    F.when(F.col("__m"), exprs[c])
-                    .otherwise(F.col(c))
-                    .alias(c)
-                )
-            else:
-                proj.append(F.col(c))
-        updated = marked.select(*proj, F.col("__m"))
-        if gen:
-            # recompute generated columns from the UPDATED row values
-            # (deterministic exprs: unmatched rows recompute to their
-            # current values)
-            updated = updated.select(
-                *[
-                    F.expr(gen[c]).alias(c) if c in gen else F.col(c)
-                    for c in target.columns
-                ],
-                F.col("__m"),
+        cdcs = (
+            []
+            if changes is None
+            else self._write_cdc_files(
+                changes.drop("_row_id", "_row_commit_version"), snap=snap
             )
-        if rt:
-            # row ids survive the update; the commit version of a
-            # MODIFIED row nulls out, falling back to the new file's
-            # defaultRowCommitVersion (= this UPDATE's commit)
-            updated = updated.withColumn(
-                "_row_commit_version",
-                F.when(F.col("__m"), F.lit(None).cast("long")).otherwise(
-                    F.col("_row_commit_version")
-                ),
-            )
-        result = updated.drop("__m")
-        self._enforce_checks(result, snap)
-        adds = self._write_files(
-            self._rt_to_physical(result, snap), pcols, snap=snap
         )
-        cdc_actions = []
-        if self._cdf_enabled(snap):
-            pre = (
-                target.filter(is_match)
-                .drop("_row_id", "_row_commit_version")
-                .withColumn("_change_type", F.lit("update_preimage"))
-            )
-            post = (
-                updated.filter(F.col("__m"))
-                .drop("__m", "_row_id", "_row_commit_version")
-                .withColumn("_change_type", F.lit("update_postimage"))
-            )
-            cdc_actions = self._write_cdc_files(pre.unionByName(post), snap=snap)
         return self._commit_next(
             [
+                *extra,
                 *({"add": a} for a in adds),
-                *({"remove": self._tombstone(p)} for p in touched),
-                *({"cdc": c} for c in cdc_actions),
-                dlog.commit_info(
-                    "UPDATE",
-                    numTouchedFiles=len(touched),
-                    setColumns=sorted(set_map),
-                ),
+                *({"remove": self._tombstone(p)} for p in removed),
+                *({"cdc": c} for c in cdcs),
+                commit_info,
             ],
             read_version=snap.version,
         )
@@ -4421,17 +4314,7 @@ class DeltaishTable:
                     "clustering replaces partitioning; run optimize() "
                     "unscoped"
                 )
-            try:
-                parser = (
-                    self.spark._jsparkSession.sessionState().sqlParser()
-                )
-                ir = (
-                    self._ir_from_catalyst(parser.parseExpression(where))
-                    if isinstance(where, str)
-                    else self._ir_from_node(where._jc.node())
-                )
-            except Exception:  # noqa: BLE001
-                ir = ("true",)
+            ir = self._predicate_ir(where)
             bad = self._ir_columns(ir) - pcols_set
             # any sub-expression that degraded to ('true',) vanishes
             # from the column set — 'p = 1 AND lower(c) = "a"' must
@@ -4444,9 +4327,7 @@ class DeltaishTable:
                     "(delta-spark's rule: a data predicate could "
                     "split a file across the boundary)"
                 )
-            in_scope = set(
-                self.files_matching_predicate(where, snap=snap)
-            )
+            in_scope = set(self._files_for_ir(ir, snap))
         if snap.domains.get(self.CLUSTERING_DOMAIN):
             ccols = self._clustering_logical(snap)
             if ccols:
@@ -4541,15 +4422,24 @@ class DeltaishTable:
     ) -> DataFrame:
         """``df`` range-partitioned into ``n_files`` on the Morton curve
         of ``zcols``, each normalized to [0, 2^bits): min/max scaling
-        for numerics, hashing for strings (no locality to keep). Each
-        partition is sorted by (``pcols``, z) — the partition columns
-        lead, so a partitioned write needs no sort of its own."""
+        for numerics (dates and timestamps on their epoch value),
+        hashing for strings (no locality to keep). Each partition is
+        sorted by (``pcols``, z) — the partition columns lead, so a
+        partitioned write needs no sort of its own."""
         dtypes = dict(df.dtypes)
         numeric = [c for c in zcols if dtypes[c] != "string"]
+
+        def key(c):
+            if dtypes[c] == "date":
+                return F.unix_date(F.col(c))
+            if dtypes[c].startswith("timestamp"):
+                return F.unix_micros(F.col(c).cast("timestamp"))
+            return F.col(c)
+
         bounds = (
             df.agg(
                 *[
-                    f(c).alias(f"{n}_{c}")
+                    f(key(c)).alias(f"{n}_{c}")
                     for c in numeric
                     for n, f in (("mn", F.min), ("mx", F.max))
                 ]
@@ -4570,7 +4460,7 @@ class DeltaishTable:
                     F.least(
                         F.lit(2**bits - 1),
                         F.floor(
-                            (F.col(c) - F.lit(lo)) / F.lit(span) * (2**bits - 1)
+                            (key(c) - F.lit(lo)) / F.lit(span) * (2**bits - 1)
                         ),
                     ).cast("long")
                 )
@@ -5230,7 +5120,7 @@ class DeltaishTable:
         out: list[dict] = []
         try:
             changes.write.mode("overwrite").parquet(staging)
-            for fn in os.listdir(staging):
+            for fn in sorted(os.listdir(staging)):
                 if not fn.endswith(".parquet"):
                     continue
                 rel = f"{self.CDF_DIR}/cdc-{uuid.uuid4().hex}.parquet"

@@ -3062,6 +3062,192 @@ def test_merge_job_counts(spark, tmp_path):
     assert upsert <= 6 and expire <= 5 and clauses <= 7
 
 
+def test_dml_job_counts(spark, tmp_path):
+    """Spark jobs per row-level write, counted by job tag as
+    tools/plan_audit.py counts them, on 4 range files. Copy-on-write
+    DELETE and UPDATE run in at most 3 jobs (4 with CDF); merge-on-read
+    DELETE in at most 5 (6 with CDF) and UPDATE, on the table the
+    DELETE just gave DVs, in at most 8 (9 with CDF); overwrite_where in
+    at most 5. A change that adds a collect or a re-evaluation shows
+    up here."""
+    base = _orders(spark).repartitionByRange(4, "o_orderkey")
+    dcond = F.col("o_orderkey").between(100, 900)
+    ucond = F.col("o_orderkey").between(500, 2000)
+    set_ = {"o_totalprice": F.col("o_totalprice") * F.lit(1.01)}
+    limits = {
+        ("copy_on_write", False): (3, 3),
+        ("copy_on_write", True): (4, 4),
+        ("merge_on_read", False): (5, 8),
+        ("merge_on_read", True): (6, 9),
+    }
+    for (mode, cdf), (max_delete, max_update) in limits.items():
+        t = DeltaishTable.create(spark, str(tmp_path / f"{mode}{cdf}"), base)
+        if cdf:
+            t.enable_change_data_feed()
+        tag = f"dml.{mode}.{cdf}"
+        deletes = _jobs_of(
+            spark, f"{tag}.delete", lambda: t.delete(dcond, mode=mode)
+        )
+        updates = _jobs_of(
+            spark, f"{tag}.update", lambda: t.update(ucond, set_, mode=mode)
+        )
+        assert deletes <= max_delete and updates <= max_update, (
+            mode, cdf, deletes, updates
+        )
+    t = DeltaishTable.create(spark, str(tmp_path / "ow"), base)
+    src = _orders(spark).filter(dcond).withColumn("o_totalprice", F.lit(1.0))
+    assert (
+        _jobs_of(
+            spark, "dml.overwrite_where", lambda: t.overwrite_where(src, dcond)
+        )
+        <= 5
+    )
+
+
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_dml_modes_agree(spark, tmp_path, op):
+    """The row-level engine's two modes agree: copy-on-write and
+    merge-on-read leave the same rows, row ids and change feed, on a
+    table with CDF and row tracking on that already carries deletion
+    vectors. The UPDATE assigns a column its own condition reads, so
+    matched-ness must be decided on the old values in both modes."""
+    cond = F.col("o_custkey") % 3 == 0
+    set_ = {
+        "o_custkey": F.col("o_custkey") + 1,
+        "o_totalprice": F.col("o_totalprice") * 2,
+    }
+    base = (
+        _orders(spark, 300)
+        .repartition(3, "o_orderkey")
+        .sortWithinPartitions("o_orderkey")
+    )
+    out = []
+    for mode in ("copy_on_write", "merge_on_read"):
+        t = DeltaishTable.create(spark, str(tmp_path / mode), base)
+        t.enable_change_data_feed()
+        t.enable_row_tracking()
+        t.delete(F.col("o_orderkey") % 7 == 0, mode="merge_on_read")
+        v0 = t.version
+        if op == "delete":
+            v = t.delete(cond, mode=mode)
+        else:
+            v = t.update(cond, set_, mode=mode)
+        assert v == v0 + 1
+        out.append(
+            (
+                _rows(t.read_with_row_ids()),
+                _rows(t.read_change_feed(v0, v).drop("_commit_timestamp")),
+            )
+        )
+    assert out[0] == out[1]
+    assert out[0][1], "the write must change rows"
+
+
+def test_mor_update_checks_constraints_before_writing_dvs(spark, tmp_path):
+    """A merge-on-read UPDATE that violates a CHECK constraint fails
+    before any deletion-vector file or data file is written, and
+    commits nothing."""
+    t = DeltaishTable.create(spark, str(tmp_path / "t"), _orders(spark, 50))
+    t.add_check_constraint("positive_price", "o_totalprice > 0")
+    v = t.version
+    listing = sorted(os.listdir(t.path))
+    with pytest.raises(ValueError, match="positive_price"):
+        t.update(
+            F.col("o_orderkey") % 2 == 0,
+            {"o_totalprice": F.lit(-1.0)},
+            mode="merge_on_read",
+        )
+    assert t.version == v
+    assert sorted(os.listdir(t.path)) == listing
+
+
+def test_zorder_on_temporal_columns(spark, tmp_path):
+    """Z-ORDER scales date and timestamp z-columns on their epoch
+    value: clustering sf0.001 orders on (o_orderdate, o_orderkey) —
+    o_orderdate is a timestamp — and on a date column keeps every
+    row."""
+    src = load_table(spark, SF_DIR, "orders").withColumn(
+        "d", F.to_date("o_orderdate")
+    )
+    assert dict(src.dtypes)["o_orderdate"].startswith("timestamp")
+    t = DeltaishTable.create(spark, str(tmp_path / "t"), src.repartition(4))
+    t.zorder_by(["o_orderdate", "o_orderkey"], n_files=4)
+    assert _rows(t.read()) == _rows(src)
+    t.zorder_by(["d", "o_custkey"], n_files=2)
+    assert _rows(t.read()) == _rows(src)
+    assert len(t._snapshot().files) == 2
+
+
+def test_write_commit_order_is_reproducible(spark, tmp_path):
+    """A write's files are committed in sorted staging order: two tables
+    created from the same frame log the same sequence of adds
+    (partition values and stats) and backfill the same row ids."""
+    src = (
+        _orders(spark)
+        .repartition(4, "o_orderkey")
+        .sortWithinPartitions("o_orderkey")
+    )
+    seqs, ids = [], []
+    for name in ("a", "b"):
+        t = DeltaishTable.create(
+            spark, str(tmp_path / name), src, partition_by=["o_orderstatus"]
+        )
+        t.enable_row_tracking()
+        seqs.append(
+            [
+                (a["add"]["partitionValues"], a["add"]["stats"])
+                for a in dlog.read_commit(t.path, 0)
+                if "add" in a
+            ]
+        )
+        ids.append(_rows(t.read_with_row_ids()))
+    assert len(seqs[0]) > 3
+    assert seqs[0] == seqs[1]
+    assert ids[0] == ids[1]
+
+
+def test_files_matching_runs_the_predicate_evaluator(spark, tmp_path):
+    """files_matching(col, lo, hi) is the range predicate through the
+    one skipping evaluator: an all-NULL column matches no range, a
+    timestamp bound meets a date column's stats at midnight, and
+    Decimal bounds meet a decimal partition column.
+    files_matching_predicate and read_pruned agree with it."""
+    from datetime import date, datetime
+    from decimal import Decimal
+
+    src = spark.createDataFrame(
+        [
+            (1, Decimal("9.50"), date(2024, 1, 1), "b"),
+            (2, Decimal("25.00"), date(2024, 1, 2), "c"),
+            (3, Decimal("100.00"), date(2024, 3, 1), None),
+            (4, Decimal("200.00"), date(2024, 3, 2), None),
+        ],
+        "k long, price decimal(10,2), d date, s string",
+    )
+    t = DeltaishTable.create(
+        spark, str(tmp_path / "t"), src, partition_by=["price"]
+    )
+    by_k = {
+        json.loads(a["stats"])["minValues"]["k"]: p
+        for p, a in t._snapshot().files.items()
+    }
+    assert sorted(by_k) == [1, 2, 3, 4]
+
+    def files(*ks):
+        return sorted(by_k[k] for k in ks)
+
+    lo, hi = Decimal("10"), Decimal("30")
+    assert sorted(t.files_matching("price", lo, hi)) == files(2)
+    assert sorted(
+        t.files_matching_predicate(F.col("price").between(lo, hi))
+    ) == files(2)
+    assert [r.k for r in t.read_pruned("price", lo, hi).collect()] == [2]
+    assert sorted(t.files_matching("s", "a", "z")) == files(1, 2)
+    midnight = datetime(2024, 1, 2)
+    assert sorted(t.files_matching("d", midnight, midnight)) == files(2)
+    assert sorted(t.files_matching("k", 1, 4)) == files(1, 2, 3, 4)
+
+
 def test_merge_into_commit_metrics_and_noop(spark, tmp_path):
     """The merge_into() commitInfo carries numTargetRowsUpdated /
     Deleted / Inserted, equal to the rows the merge changed (read back

@@ -124,6 +124,34 @@ def test_minikernel_reads_deletion_vectors(spark, tmp_path):
     _agree(t)
 
 
+def test_minikernel_reads_updates_and_replace_where(spark, tmp_path):
+    """Every row-level rewrite, not only DELETE: after a copy-on-write
+    UPDATE, a merge-on-read UPDATE (deletion vectors plus new files)
+    and an overwrite_where, the mini-kernel's read matches the
+    engine's."""
+    df = _orders(spark, 80)
+    t = DeltaishTable.create(
+        spark, str(tmp_path / "t"), df, partition_by=["o_orderstatus"]
+    )
+    t.update(
+        F.col("o_orderkey") % 3 == 0,
+        {"o_totalprice": F.col("o_totalprice") + 1},
+    )
+    _agree(t)
+    t.update(
+        F.col("o_orderkey") % 5 == 0,
+        {"o_custkey": F.col("o_custkey") + 1_000_000},
+        mode="merge_on_read",
+    )
+    assert any(a.get("deletionVector") for a in t._snapshot().files.values())
+    _agree(t)
+    region = F.col("o_orderkey") < 100
+    t.overwrite_where(
+        df.filter(region).withColumn("o_totalprice", F.lit(2.5)), region
+    )
+    assert _agree(t) == 80
+
+
 def test_minikernel_reads_column_mapping_and_rename(spark, tmp_path):
     df = _orders(spark, 40)
     t = DeltaishTable.create(spark, str(tmp_path / "t"), df)
