@@ -193,18 +193,12 @@ class DeltaishTable:
                 if f["name"] in id_hwms:
                     md[cls.IDENTITY_HWM] = id_hwms[f["name"]]
                 f["metadata"] = md
-        min_writer = 2
-        if generated_columns:
-            min_writer = 4
+        feats = {"generatedColumns"} if generated_columns else set()
         if identity_columns:
-            min_writer = 6
+            feats.add("identityColumns")
+        proto = cls._protocol_for(cls._BASE_PROTOCOL, feats)
         actions = [
-            {
-                "protocol": {
-                    "minReaderVersion": 1,
-                    "minWriterVersion": min_writer,
-                }
-            },
+            {"protocol": proto or dict(cls._BASE_PROTOCOL)},
             {
                 "metaData": {
                     "id": uuid.uuid4().hex,
@@ -231,94 +225,142 @@ class DeltaishTable:
     # implement (an unknown feature means an invariant this writer
     # would silently break). Readers IGNORE unknown writer features —
     # that asymmetry is the spec's.
+    #
+    # The one feature table: every feature this engine implements ->
+    # (legacy writer floor, legacy reader floor, reader-writer). A
+    # floor is the protocol version that implied the feature before
+    # table features existed (writer v7 / reader v3, where only
+    # LISTED features are active); a reader-writer feature also lands
+    # in readerFeatures. ``_protocol_for`` is the only reader of the
+    # floors.
+    _FEATURES = {
+        "appendOnly": (2, None, False),
+        "invariants": (2, None, False),
+        "checkConstraints": (3, None, False),
+        "changeDataFeed": (4, None, False),
+        "generatedColumns": (4, None, False),
+        "columnMapping": (5, 2, True),
+        "identityColumns": (6, None, False),
+        "deletionVectors": (None, None, True),
+        "timestampNtz": (None, None, True),
+        "v2Checkpoint": (None, None, True),
+        "vacuumProtocolCheck": (None, None, True),
+        "typeWidening": (None, None, True),
+        "inCommitTimestamp": (None, None, False),
+        "domainMetadata": (None, None, False),
+        "rowTracking": (None, None, False),
+        "clustering": (None, None, False),
+        "allowColumnDefaults": (None, None, False),
+    }
+    _SUPPORTED_WRITER_FEATURES = frozenset(_FEATURES)
     _SUPPORTED_READER_FEATURES = frozenset(
-        {"columnMapping", "deletionVectors", "timestampNtz",
-         "v2Checkpoint", "vacuumProtocolCheck", "typeWidening"}
+        f for f, (_, _, rw) in _FEATURES.items() if rw
     )
-    _SUPPORTED_WRITER_FEATURES = frozenset(
-        {
-            "appendOnly",
-            "invariants",
-            "checkConstraints",
-            "generatedColumns",
-            "identityColumns",
-            "changeDataFeed",
-            "columnMapping",
-            "deletionVectors",
-            "timestampNtz",
-            "inCommitTimestamp",
-            "domainMetadata",
-            "rowTracking",
-            "clustering",
-            "allowColumnDefaults",
-            "v2Checkpoint",
-            "vacuumProtocolCheck",
-            "typeWidening",
-        }
-    )
+    # the protocol of a table no feature has upgraded
+    _BASE_PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
-    # Legacy writer protocol versions imply feature sets; upgrading a
-    # table to the table-features protocol (minWriterVersion 7) MUST
-    # enumerate them, or a spec-compliant external writer would stop
-    # honoring the features the version used to imply (at v7, only
-    # LISTED features are active).
-    _LEGACY_WRITER_FEATURES = (
-        (2, ("appendOnly", "invariants")),
-        (3, ("checkConstraints",)),
-        (4, ("changeDataFeed", "generatedColumns")),
-        (5, ("columnMapping",)),
-        (6, ("identityColumns",)),
-    )
+    @classmethod
+    def _protocol_for(cls, protocol: dict, features) -> dict | None:
+        """The protocol that makes every one of ``features`` active on
+        top of ``protocol``, or None when they all already are.
 
-    def _bump_writer_version(
-        self, snap: dlog.Snapshot, floor: int, feature: str
-    ) -> dict | None:
-        """A protocol action making ``feature`` active for external
-        writers (None when it already is). Features activated by
-        table properties carry a legacy writer-version floor so
-        external writers that don't implement them refuse instead of
-        committing without honoring them — CHECK constraints are v3,
-        CDF/generated columns v4, identity v6.
+        On a LEGACY protocol (writer < 7) where every missing feature
+        has a writer floor, the version floors rise. Otherwise the
+        writer moves to v7 and lists the features its legacy version
+        implied first — at v7 only listed features are active, so an
+        unlisted one would let a compliant external writer stop
+        honoring it. A missing reader-writer feature is added to
+        readerFeatures at reader v3; below v3 the reader rises to the
+        feature's legacy floor when it has one, else to v3 with the
+        features its legacy version implied listed (v2 implied column
+        mapping)."""
+        proto = dict(protocol or cls._BASE_PROTOCOL)
+        rv = int(proto.get("minReaderVersion", 1))
+        wv = int(proto.get("minWriterVersion", 2))
+        wf = set(proto.get("writerFeatures") or [])
+        rf = set(proto.get("readerFeatures") or [])
 
-        On a LEGACY protocol (minWriterVersion < 7) the version floor
-        itself implies the feature, so the action just raises the
-        version. On a TABLE-FEATURES protocol (v7) only LISTED
-        features are active — a version bump alone would let a
-        compliant external writer commit without honoring the
-        feature — so the action appends ``feature`` to
-        writerFeatures instead (enabling CHECK/CDF after e.g.
-        clustering or row tracking upgraded the table to v7)."""
-        proto = dict(snap.protocol or {})
-        cur = int(proto.get("minWriterVersion", 2))
-        if cur >= 7:
-            if feature in (proto.get("writerFeatures") or []):
-                return None
-            return {
-                "protocol": self._protocol_with_features(snap, {feature})
-            }
-        if cur >= floor:
+        def implied(floor, version):  # by a legacy protocol version
+            return floor is not None and floor <= version
+
+        def active(f):
+            w_floor, r_floor, rw = cls._FEATURES[f]
+            w_on = f in wf if wv >= 7 else implied(w_floor, wv)
+            r_on = f in rf if rv >= 3 else implied(r_floor, rv)
+            return w_on and (r_on or not rw)
+
+        missing = [f for f in sorted(features) if not active(f)]
+        if not missing:
             return None
-        proto["minWriterVersion"] = floor
-        return {"protocol": proto}
-
-    def _protocol_with_features(
-        self, snap: dlog.Snapshot, new_features: set[str]
-    ) -> dict:
-        """The protocol action for an upgrade to writer v7 carrying
-        ``new_features``: prior explicit writerFeatures are kept, and
-        when the prior protocol was a LEGACY version its implied
-        features are expanded into the list first."""
-        proto = dict(snap.protocol or {})
-        old_v = int(proto.get("minWriterVersion", 2))
-        feats = set(proto.get("writerFeatures", []) or [])
-        if old_v < 7:
-            for v, fl in self._LEGACY_WRITER_FEATURES:
-                if old_v >= v:
-                    feats.update(fl)
-        feats.update(new_features)
-        proto["minWriterVersion"] = 7
-        proto["writerFeatures"] = sorted(feats)
+        floors = [cls._FEATURES[f][0] for f in missing]
+        if wv < 7 and None not in floors:
+            proto["minWriterVersion"] = max(wv, *floors)
+        else:
+            if wv < 7:
+                wf |= {
+                    f
+                    for f, (floor, _, _) in cls._FEATURES.items()
+                    if implied(floor, wv)
+                }
+            proto["minWriterVersion"] = 7
+            proto["writerFeatures"] = sorted(wf | set(missing))
+        rw = [f for f in missing if cls._FEATURES[f][2]]
+        r_floors = [cls._FEATURES[f][1] for f in rw]
+        if rw and rv < 3 and None not in r_floors:
+            proto["minReaderVersion"] = max(rv, *r_floors)
+        elif rw:
+            if rv < 3:
+                rf |= {
+                    f
+                    for f, (_, floor, _) in cls._FEATURES.items()
+                    if implied(floor, rv)
+                }
+            proto["minReaderVersion"] = 3
+            proto["readerFeatures"] = sorted(rf | set(rw))
         return proto
+
+    def _alter(
+        self,
+        snap: dlog.Snapshot,
+        op: str,
+        params: dict,
+        *,
+        meta: dict | None = None,
+        features=(),
+        actions=(),
+        version_stamp=None,
+    ) -> int:
+        """The one metadata-only commit (ALTER TABLE and its kin),
+        checked against ``snap``: the protocol upgrade that makes
+        ``features`` active (none when they already are), a metaData
+        action carrying the ``meta`` fields (configuration,
+        schemaString, partitionColumns) over ``snap``'s, the extra
+        ``actions`` (domainMetadata, backfilled adds), then
+        commitInfo(op, **params). The commit that turns in-commit
+        timestamps on leads with its commitInfo stamped with the
+        enablement timestamp (the ICT rule: readers find the timestamp
+        without scanning the file)."""
+        out: list[dict] = []
+        proto = self._protocol_for(snap.protocol, features)
+        if proto:
+            out.append({"protocol": proto})
+        if meta is not None:
+            out.append({"metaData": {**snap.metadata, **meta}})
+        out.extend(actions)
+        ci = dlog.commit_info(op, **params)
+        conf = (meta or {}).get("configuration")
+        if self._ict_on(conf) and not self._ict_on(
+            snap.metadata.get("configuration")
+        ):
+            ci["commitInfo"]["inCommitTimestamp"] = int(
+                conf[self.ICT_TIMESTAMP]
+            )
+            out.insert(0, ci)
+        else:
+            out.append(ci)
+        return self._commit_next(
+            out, read_version=snap.version, version_stamp=version_stamp
+        )
 
     @staticmethod
     def _v2_checkpoints_on(snap: dlog.Snapshot) -> bool:
@@ -337,32 +379,16 @@ class DeltaishTable:
         understand the manifest/sidecar layout would miss the
         checkpointed state entirely."""
         snap = self._snapshot()
-        proto = snap.protocol or {}
         if self._v2_checkpoints_on(snap):
             return snap.version
-        new = self._protocol_with_features(snap, {"v2Checkpoint"})
-        rf = set(proto.get("readerFeatures") or []) | {"v2Checkpoint"}
-        # reader v3 activates only LISTED reader features, so a legacy
-        # reader version's implication must be expanded (v2 implied
-        # column mapping)
-        if int(proto.get("minReaderVersion", 1)) == 2:
-            rf.add("columnMapping")
-        new["minReaderVersion"] = 3
-        new["readerFeatures"] = sorted(rf)
         conf = dict(snap.metadata.get("configuration", {}) or {})
         conf["delta.checkpointPolicy"] = "v2"
-        md = dict(snap.metadata)
-        md["configuration"] = conf
-        return self._commit_next(
-            [
-                {"protocol": new},
-                {"metaData": md},
-                dlog.commit_info(
-                    "SET TBLPROPERTIES",
-                    properties={"delta.checkpointPolicy": "v2"},
-                ),
-            ],
-            read_version=snap.version,
+        return self._alter(
+            snap,
+            "SET TBLPROPERTIES",
+            {"properties": {"delta.checkpointPolicy": "v2"}},
+            meta={"configuration": conf},
+            features={"v2Checkpoint"},
         )
 
     def enable_vacuum_protocol_check(self) -> int:
@@ -374,24 +400,15 @@ class DeltaishTable:
         still references. Our vacuum() honors it; declaring it makes
         EXTERNAL engines honor it too."""
         snap = self._snapshot()
-        proto = snap.protocol or {}
-        if "vacuumProtocolCheck" in (proto.get("writerFeatures") or []):
+        if "vacuumProtocolCheck" in (
+            snap.protocol.get("writerFeatures") or []
+        ):
             return snap.version
-        new = self._protocol_with_features(snap, {"vacuumProtocolCheck"})
-        rf = set(proto.get("readerFeatures") or []) | {"vacuumProtocolCheck"}
-        if int(proto.get("minReaderVersion", 1)) == 2:
-            rf.add("columnMapping")
-        new["minReaderVersion"] = 3
-        new["readerFeatures"] = sorted(rf)
-        return self._commit_next(
-            [
-                {"protocol": new},
-                dlog.commit_info(
-                    "SET TBLPROPERTIES",
-                    properties={"feature": "vacuumProtocolCheck"},
-                ),
-            ],
-            read_version=snap.version,
+        return self._alter(
+            snap,
+            "SET TBLPROPERTIES",
+            {"properties": {"feature": "vacuumProtocolCheck"}},
+            features={"vacuumProtocolCheck"},
         )
 
     def checkpoint_v2(self, sidecars: int = 2) -> int:
@@ -424,28 +441,24 @@ class DeltaishTable:
         protocol records the writer feature."""
         snap = self._snapshot()
         conf = dict(snap.metadata.get("configuration", {}) or {})
-        if str(conf.get(self.ICT_ENABLE, "false")).lower() == "true":
+        if self._ict_on(conf):
             raise ValueError("in-commit timestamps already enabled")
-        now_ms = int(time.time() * 1000)
-        v = snap.version + 1
         conf[self.ICT_ENABLE] = "true"
-        conf[self.ICT_VERSION] = str(v)
-        conf[self.ICT_TIMESTAMP] = str(now_ms)
-        md = dict(snap.metadata)
-        md["configuration"] = conf
-        proto = self._protocol_with_features(
-            snap, {"inCommitTimestamp"}
+        conf[self.ICT_VERSION] = str(snap.version + 1)
+        conf[self.ICT_TIMESTAMP] = str(int(time.time() * 1000))
+        return self._alter(
+            snap,
+            "SET TBLPROPERTIES",
+            {"properties": {self.ICT_ENABLE: "true"}},
+            meta={"configuration": conf},
+            features={"inCommitTimestamp"},
         )
-        ci = dlog.commit_info(
-            "SET TBLPROPERTIES", properties={self.ICT_ENABLE: "true"}
-        )
-        ci["commitInfo"]["inCommitTimestamp"] = now_ms
-        # ICT rule: commitInfo leads the commit so readers find the
-        # timestamp without scanning the whole file
-        return self._commit_next(
-            [ci, {"protocol": proto}, {"metaData": md}],
-            read_version=snap.version,
-        )
+
+    @classmethod
+    def _ict_on(cls, conf: dict | None) -> bool:
+        """Whether a table configuration has in-commit timestamps on."""
+        on = (conf or {}).get(cls.ICT_ENABLE, "false")
+        return str(on).lower() == "true"
 
     @staticmethod
     def _ci_ts(ci: dict) -> int:
@@ -516,30 +529,25 @@ class DeltaishTable:
                 f"domain {domain!r} is reserved (delta.* domains belong "
                 "to protocol features; use their dedicated APIs)"
             )
-        snap = self._snapshot()
-        actions: list[dict] = []
-        proto = snap.protocol or {}
-        if "domainMetadata" not in (proto.get("writerFeatures") or []):
-            actions.append(
-                {
-                    "protocol": self._protocol_with_features(
-                        snap, {"domainMetadata"}
-                    )
-                }
-            )
-        actions.append(
-            {
-                "domainMetadata": {
-                    "domain": domain,
-                    "configuration": configuration,
-                    "removed": False,
-                }
+        return self._alter(
+            self._snapshot(),
+            "SET DOMAIN METADATA",
+            {"domain": domain},
+            features={"domainMetadata"},
+            actions=[self._domain_action(domain, configuration)],
+        )
+
+    @staticmethod
+    def _domain_action(domain: str, configuration: str | None) -> dict:
+        """A domainMetadata action; ``configuration=None`` tombstones
+        the domain."""
+        return {
+            "domainMetadata": {
+                "domain": domain,
+                "configuration": configuration or "",
+                "removed": configuration is None,
             }
-        )
-        actions.append(
-            dlog.commit_info("SET DOMAIN METADATA", domain=domain)
-        )
-        return self._commit_next(actions, read_version=snap.version)
+        }
 
     def remove_domain_metadata(self, domain: str) -> int:
         """Tombstone a metadata domain (the spec's removed=true form —
@@ -549,18 +557,11 @@ class DeltaishTable:
         snap = self._snapshot()
         if domain not in snap.domains:
             raise ValueError(f"no such domain {domain!r}")
-        return self._commit_next(
-            [
-                {
-                    "domainMetadata": {
-                        "domain": domain,
-                        "configuration": "",
-                        "removed": True,
-                    }
-                },
-                dlog.commit_info("REMOVE DOMAIN METADATA", domain=domain),
-            ],
-            read_version=snap.version,
+        return self._alter(
+            snap,
+            "REMOVE DOMAIN METADATA",
+            {"domain": domain},
+            actions=[self._domain_action(domain, None)],
         )
 
     def domain_metadata(self, domain: str) -> str | None:
@@ -587,12 +588,7 @@ class DeltaishTable:
         conf[self.RT_ENABLE] = "true"
         conf[self.RT_ID_COL] = f"_row-id-col-{uuid.uuid4().hex}"
         conf[self.RT_VER_COL] = f"_row-version-col-{uuid.uuid4().hex}"
-        md = dict(snap.metadata)
-        md["configuration"] = conf
-        proto = self._protocol_with_features(
-            snap, {"rowTracking", "domainMetadata"}
-        )
-        actions: list[dict] = [{"protocol": proto}, {"metaData": md}]
+        actions: list[dict] = []
         hwm = -1
         for p in sorted(snap.files):
             a = dict(snap.files[p])
@@ -603,22 +599,18 @@ class DeltaishTable:
             hwm += n
             actions.append({"add": a})
         actions.append(
-            {
-                "domainMetadata": {
-                    "domain": self.RT_DOMAIN,
-                    "configuration": json.dumps(
-                        {"rowIdHighWaterMark": hwm}
-                    ),
-                    "removed": False,
-                }
-            }
-        )
-        actions.append(
-            dlog.commit_info(
-                "SET TBLPROPERTIES", properties={self.RT_ENABLE: "true"}
+            self._domain_action(
+                self.RT_DOMAIN, json.dumps({"rowIdHighWaterMark": hwm})
             )
         )
-        return self._commit_next(actions, read_version=snap.version)
+        return self._alter(
+            snap,
+            "SET TBLPROPERTIES",
+            {"properties": {self.RT_ENABLE: "true"}},
+            meta={"configuration": conf},
+            features={"rowTracking", "domainMetadata"},
+            actions=actions,
+        )
 
     def read_with_row_ids(self, version: int | None = None) -> DataFrame:
         """The snapshot with ``_row_id`` / ``_row_commit_version``
@@ -666,15 +658,9 @@ class DeltaishTable:
                     a = {"add": add}
             out.append(a)
         out.append(
-            {
-                "domainMetadata": {
-                    "domain": self.RT_DOMAIN,
-                    "configuration": json.dumps(
-                        {"rowIdHighWaterMark": hwm}
-                    ),
-                    "removed": False,
-                }
-            }
+            self._domain_action(
+                self.RT_DOMAIN, json.dumps({"rowIdHighWaterMark": hwm})
+            )
         )
         return out
 
@@ -731,8 +717,7 @@ class DeltaishTable:
         """When ICT is enabled, stamp the commit's commitInfo with
         max(wall clock, previous ICT + 1) — strictly increasing even
         under clock regression — and move commitInfo to the front."""
-        conf = snap.metadata.get("configuration", {}) or {}
-        if str(conf.get(self.ICT_ENABLE, "false")).lower() != "true":
+        if not self._ict_on(snap.metadata.get("configuration")):
             return actions
         prev = self._last_ict(snap.version)
         ict = int(time.time() * 1000)
@@ -1428,17 +1413,13 @@ class DeltaishTable:
             self._violations_or_raise(
                 self._read_snapshot_files(snap, cand), {name: expr}
             )
-        md = dict(snap.metadata)
         conf[key] = expr
-        md["configuration"] = conf
-        proto = self._bump_writer_version(snap, 3, "checkConstraints")
-        return self._commit_next(
-            [
-                *([proto] if proto else []),
-                {"metaData": md},
-                dlog.commit_info("ADD CONSTRAINT", name=name, expr=expr),
-            ],
-            read_version=snap.version,
+        return self._alter(
+            snap,
+            "ADD CONSTRAINT",
+            {"name": name, "expr": expr},
+            meta={"configuration": conf},
+            features={"checkConstraints"},
         )
 
     def set_table_properties(self, props: dict[str, str]) -> int:
@@ -1507,17 +1488,11 @@ class DeltaishTable:
                 conf.pop(k, None)
             else:
                 conf[k] = str(v)
-        md = dict(snap.metadata)
-        md["configuration"] = conf
-        return self._commit_next(
-            [
-                {"metaData": md},
-                dlog.commit_info(
-                    "SET TBLPROPERTIES",
-                    properties={k: str(v) for k, v in props.items()},
-                ),
-            ],
-            read_version=snap.version,
+        return self._alter(
+            snap,
+            "SET TBLPROPERTIES",
+            {"properties": {k: str(v) for k, v in props.items()}},
+            meta={"configuration": conf},
         )
 
     def drop_check_constraint(self, name: str) -> int:
@@ -1527,13 +1502,11 @@ class DeltaishTable:
         if key not in conf:
             raise ValueError(f"no such constraint {name!r}")
         del conf[key]
-        md = dict(snap.metadata)
-        md["configuration"] = conf
-        return self._commit_next(
-            [
-                {"metaData": md},
-                dlog.commit_info("DROP CONSTRAINT", name=name),
-            ]
+        return self._alter(
+            snap,
+            "DROP CONSTRAINT",
+            {"name": name},
+            meta={"configuration": conf},
         )
 
     def _violations_or_raise(self, df: DataFrame, constraints: dict) -> None:
@@ -1658,44 +1631,12 @@ class DeltaishTable:
             f["metadata"] = md
         conf[self.MAPPING_MODE] = "name"
         conf[self.MAPPING_MAX_ID] = str(len(sj["fields"]))
-        md_action = dict(snap.metadata)
-        md_action["schemaString"] = json.dumps(sj)
-        md_action["configuration"] = conf
-        old_proto = snap.protocol or {}
-        if int(old_proto.get("minWriterVersion", 2)) >= 7:
-            # table-features protocol: only LISTED features are
-            # active — a version floor alone would let an external
-            # writer skip physicalizing column names (writing
-            # logical-named files that read back as null), so the
-            # feature must be enumerated
-            proto = self._protocol_with_features(snap, {"columnMapping"})
-            if int(proto.get("minReaderVersion", 1)) >= 3:
-                proto["readerFeatures"] = sorted(
-                    set(proto.get("readerFeatures") or [])
-                    | {"columnMapping"}
-                )
-            else:
-                proto["minReaderVersion"] = max(
-                    int(proto.get("minReaderVersion", 1)), 2
-                )
-        else:
-            proto = dict(old_proto)
-            proto["minReaderVersion"] = max(
-                int(proto.get("minReaderVersion", 1)), 2
-            )
-            proto["minWriterVersion"] = max(
-                int(proto.get("minWriterVersion", 2)), 5
-            )
-        return self._commit_next(
-            [
-                {"protocol": proto},
-                {"metaData": md_action},
-                dlog.commit_info(
-                    "SET TBLPROPERTIES",
-                    properties={self.MAPPING_MODE: "name"},
-                ),
-            ],
-            read_version=snap.version,
+        return self._alter(
+            snap,
+            "SET TBLPROPERTIES",
+            {"properties": {self.MAPPING_MODE: "name"}},
+            meta={"schemaString": json.dumps(sj), "configuration": conf},
+            features={"columnMapping"},
         )
 
     # Widenings the typeWidening table feature permits AND Spark's
@@ -1753,24 +1694,6 @@ class DeltaishTable:
         md_field["delta.typeChanges"] = changes
         field["type"] = new_type
         field["metadata"] = md_field
-        md = dict(snap.metadata)
-        md["schemaString"] = json.dumps(sj)
-        actions: list[dict] = []
-        proto = snap.protocol or {}
-        if "typeWidening" not in (proto.get("writerFeatures") or []):
-            new_proto = self._protocol_with_features(snap, {"typeWidening"})
-            rf = set(proto.get("readerFeatures") or []) | {"typeWidening"}
-            if int(proto.get("minReaderVersion", 1)) == 2:
-                rf.add("columnMapping")
-            new_proto["minReaderVersion"] = 3
-            new_proto["readerFeatures"] = sorted(rf)
-            actions.append({"protocol": new_proto})
-        actions.append({"metaData": md})
-        actions.append(
-            dlog.commit_info(
-                "ALTER COLUMN", column=col, fromType=cur, toType=new_type
-            )
-        )
 
         def _stamp(acts: list[dict], v: int) -> list[dict]:
             # tableVersion must be the version the ALTER actually
@@ -1792,8 +1715,13 @@ class DeltaishTable:
                 a["metaData"]["schemaString"] = json.dumps(sjv)
             return acts
 
-        return self._commit_next(
-            actions, read_version=snap.version, version_stamp=_stamp
+        return self._alter(
+            snap,
+            "ALTER COLUMN",
+            {"column": col, "fromType": cur, "toType": new_type},
+            meta={"schemaString": json.dumps(sj)},
+            features={"typeWidening"},
+            version_stamp=_stamp,
         )
 
     def rename_column(self, old: str, new: str) -> int:
@@ -1826,18 +1754,15 @@ class DeltaishTable:
         for f in sj["fields"]:
             if f["name"] == old:
                 f["name"] = new
-        md = dict(snap.metadata)
-        md["schemaString"] = json.dumps(sj)
-        md["partitionColumns"] = [
-            new if c == old else c
-            for c in snap.metadata.get("partitionColumns", [])
-        ]
-        return self._commit_next(
-            [
-                {"metaData": md},
-                dlog.commit_info("RENAME COLUMN", old=old, new=new),
-            ],
-            read_version=snap.version,
+        pcols = snap.metadata.get("partitionColumns", [])
+        return self._alter(
+            snap,
+            "RENAME COLUMN",
+            {"old": old, "new": new},
+            meta={
+                "schemaString": json.dumps(sj),
+                "partitionColumns": [new if c == old else c for c in pcols],
+            },
         )
 
     def drop_column(self, name: str) -> int:
@@ -1876,14 +1801,11 @@ class DeltaishTable:
                 "domain would point at a missing column)"
             )
         sj["fields"] = [f for f in sj["fields"] if f["name"] != name]
-        md = dict(snap.metadata)
-        md["schemaString"] = json.dumps(sj)
-        return self._commit_next(
-            [
-                {"metaData": md},
-                dlog.commit_info("DROP COLUMNS", columns=[name]),
-            ],
-            read_version=snap.version,
+        return self._alter(
+            snap,
+            "DROP COLUMNS",
+            {"columns": [name]},
+            meta={"schemaString": json.dumps(sj)},
         )
 
     def append(
@@ -2245,7 +2167,7 @@ class DeltaishTable:
             # domains — resetting them would drop writer-feature gates
             # (row tracking, ICT) while keeping the configuration that
             # depends on them
-            {"protocol": dict(snap.protocol or {"minReaderVersion": 1, "minWriterVersion": 2})},
+            {"protocol": dict(snap.protocol or self._BASE_PROTOCOL)},
             {"metaData": md},
             *(
                 {
@@ -2292,7 +2214,7 @@ class DeltaishTable:
         md = dict(snap.metadata)
         md["id"] = uuid.uuid4().hex
         actions: list[dict] = [
-            {"protocol": dict(snap.protocol or {"minReaderVersion": 1, "minWriterVersion": 2})},
+            {"protocol": dict(snap.protocol or self._BASE_PROTOCOL)},
             {"metaData": md},
             *(
                 {
@@ -2439,7 +2361,8 @@ class DeltaishTable:
                 os.path.join(self.path, f"deletion_vector_{u}.bin"), "wb"
             ) as f:
                 f.write(bytes(buf))
-        actions: list[dict] = self._dv_protocol_actions(snap)
+        proto = self._protocol_for(snap.protocol, {"deletionVectors"})
+        actions: list[dict] = [{"protocol": proto}] if proto else []
         for rel, dv in descriptors.items():
             new_add = dict(snap.files[rel])
             new_add["deletionVector"] = dv
@@ -2450,30 +2373,6 @@ class DeltaishTable:
             {"remove": self._tombstone(p)} for p in full_removes
         )
         return actions, len(descriptors)
-
-    def _dv_protocol_actions(self, snap: dlog.Snapshot) -> list[dict]:
-        """The protocol upgrade the first DV write must commit
-        (minReaderVersion 3 / minWriterVersion 7 + the feature
-        flags), or [] if the table already declares it."""
-        proto = snap.protocol or {}
-        if "deletionVectors" in (proto.get("readerFeatures") or []):
-            return []
-        return [
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(
-                        set(proto.get("readerFeatures") or [])
-                        | {"deletionVectors"}
-                    ),
-                    "writerFeatures": sorted(
-                        set(proto.get("writerFeatures") or [])
-                        | {"deletionVectors"}
-                    ),
-                }
-            }
-        ]
 
     @staticmethod
     def _tombstone(path: str, data_change: bool = True) -> dict:
@@ -2888,16 +2787,9 @@ class DeltaishTable:
         # string comparison of the two orders WRONG (' ' < 'T'), which
         # would falsely prune files. _cmp_pair normalizes both sides
         # once they are typed.
-        m = re.fullmatch(
-            r"(\d{4}-\d{2}-\d{2})[ T](\d{2}:\d{2}:\d{2})(\.\d+)?", s
-        )
-        if m:
-            frac = (m.group(3) or "")[:7]
-            return datetime.fromisoformat(
-                f"{m.group(1)}T{m.group(2)}{frac}"
-            )
-        if re.fullmatch(r"\d{4}-\d{2}-\d{2}", s):
-            return date.fromisoformat(s)
+        t = DeltaishTable._parse_temporal(s)
+        if t is not None:
+            return t
         # last resort: numbers parse; any OTHER unrecognized object
         # rendering raises so the caller keeps the file — a temporal
         # string that missed the regex (Instant's 'Z', a non-UTC
@@ -2910,6 +2802,52 @@ class DeltaishTable:
             raise ValueError(
                 f"unrecognized literal rendering: {s!r}"
             ) from None
+
+    @staticmethod
+    def _parse_temporal(s: str) -> date | datetime | None:
+        """An ISO-style date ('2024-01-02') or timestamp
+        ('2024-01-02 03:00:00[.f]', ' ' or 'T' separated) rendering as
+        date / datetime; None for any other string. An out-of-range
+        field raises ValueError."""
+        m = re.fullmatch(
+            r"(\d{4}-\d{2}-\d{2})[ T](\d{2}:\d{2}:\d{2})(\.\d+)?", s
+        )
+        if m:
+            frac = (m.group(3) or "")[:7]
+            return datetime.fromisoformat(
+                f"{m.group(1)}T{m.group(2)}{frac}"
+            )
+        if re.fullmatch(r"\d{4}-\d{2}-\d{2}", s):
+            return date.fromisoformat(s)
+        return None
+
+    def _typed_ir(self, ir, dtypes: dict):
+        """``ir`` with each literal compared to a date or timestamp
+        column typed as Spark casts it: on a timestamp column a string
+        parses by ``_parse_temporal`` and a date is midnight; on a date
+        column a string parses to its day. A string that does not
+        parse keeps the file (the comparison becomes ("true",))."""
+        kind = ir[0]
+        if kind in ("and", "or"):
+            return (kind, [self._typed_ir(c, dtypes) for c in ir[1]])
+        if kind not in ("cmp", "ne", "ne_ns"):
+            return ir
+        dt, v = dtypes.get(ir[-2]), ir[-1]
+        ts = isinstance(dt, (T.TimestampType, T.TimestampNTZType))
+        if not (ts or isinstance(dt, T.DateType)):
+            return ir
+        if isinstance(v, str):
+            try:
+                v = self._parse_temporal(v)
+            except ValueError:
+                v = None
+            if v is None:
+                return ("true",)
+            if not ts and isinstance(v, datetime):
+                v = v.date()
+        if ts and not isinstance(v, datetime) and isinstance(v, date):
+            v = datetime.combine(v, datetime.min.time())
+        return (*ir[:-1], v)
 
     def _ir_from_catalyst(self, ex):
         cls = ex.getClass().getSimpleName()
@@ -3213,7 +3151,9 @@ class DeltaishTable:
         partition values could satisfy ``ir``. Per column it evaluates
         (min, max, nullCount, numRecords); a NULL partition value is an
         all-NULL column, a missing one is unknown (kept). Decimal stats
-        (stored as strings) and partition values compare as floats."""
+        (stored as strings) and partition values compare as floats;
+        date and timestamp literals are first typed by their column
+        (``_typed_ir``)."""
         if ir == ("true",):
             return list(snap.files)
         pcols = set(snap.metadata.get("partitionColumns", ()))
@@ -3224,6 +3164,7 @@ class DeltaishTable:
         decimals = {
             c for c, t in dtypes.items() if isinstance(t, T.DecimalType)
         }
+        ir = self._typed_ir(ir, dtypes)
         out = []
         for path, add in snap.files.items():
             stats = add.get("stats")
@@ -4314,12 +4255,16 @@ class DeltaishTable:
                     "clustering replaces partitioning; run optimize() "
                     "unscoped"
                 )
-            ir = self._predicate_ir(where)
+            ir = self._typed_ir(
+                self._predicate_ir(where),
+                {f.name: f.dataType for f in self._schema_for(snap).fields},
+            )
             bad = self._ir_columns(ir) - pcols_set
             # any sub-expression that degraded to ('true',) vanishes
-            # from the column set — 'p = 1 AND lower(c) = "a"' must
-            # be rejected like a fully-unsupported predicate, not
-            # silently compact all of p=1
+            # from the column set — 'p = 1 AND lower(c) = "a"' (or a
+            # date literal that does not parse) must be rejected like
+            # a fully-unsupported predicate, not silently compact all
+            # of p=1
             if bad or self._ir_degraded(ir):
                 raise ValueError(
                     "OPTIMIZE WHERE accepts only partition-column "
@@ -4526,44 +4471,20 @@ class DeltaishTable:
         # the domain stores PHYSICAL names (stable under RENAME
         # COLUMN; delta-spark's convention — see _clustering_logical)
         pmap = self._column_mapping(snap)
-        actions: list[dict] = []
-        if cols:
-            actions.append(
-                {
-                    "protocol": self._protocol_with_features(
-                        snap, {"clustering", "domainMetadata"}
-                    )
-                }
-            )
-            actions.append(
-                {
-                    "domainMetadata": {
-                        "domain": self.CLUSTERING_DOMAIN,
-                        "configuration": json.dumps(
-                            {
-                                "clusteringColumns": [
-                                    [pmap.get(c, c)] for c in cols
-                                ]
-                            }
-                        ),
-                        "removed": False,
-                    }
-                }
-            )
-        else:
-            actions.append(
-                {
-                    "domainMetadata": {
-                        "domain": self.CLUSTERING_DOMAIN,
-                        "configuration": "",
-                        "removed": True,
-                    }
-                }
-            )
-        actions.append(
-            dlog.commit_info("CLUSTER BY", clusteringColumns=cols)
+        cfg = json.dumps(
+            {"clusteringColumns": [[pmap.get(c, c)] for c in cols]}
         )
-        return self._commit_next(actions, read_version=snap.version)
+        return self._alter(
+            snap,
+            "CLUSTER BY",
+            {"clusteringColumns": cols},
+            features={"clustering", "domainMetadata"} if cols else (),
+            actions=[
+                self._domain_action(
+                    self.CLUSTERING_DOMAIN, cfg if cols else None
+                )
+            ],
+        )
 
     def zorder_by(
         self,
@@ -4695,29 +4616,13 @@ class DeltaishTable:
                 md = dict(f.get("metadata", {}) or {})
                 md[self.COLUMN_DEFAULT] = sql_expr
                 f["metadata"] = md
-        md_action = dict(snap.metadata)
-        md_action["schemaString"] = json.dumps(
-            schema, separators=(",", ":")
+        return self._alter(
+            snap,
+            "ALTER COLUMN",
+            {"column": col, "setDefault": sql_expr},
+            meta={"schemaString": json.dumps(schema, separators=(",", ":"))},
+            features={"allowColumnDefaults"},
         )
-        actions: list[dict] = []
-        proto = snap.protocol or {}
-        if "allowColumnDefaults" not in (
-            proto.get("writerFeatures") or []
-        ):
-            actions.append(
-                {
-                    "protocol": self._protocol_with_features(
-                        snap, {"allowColumnDefaults"}
-                    )
-                }
-            )
-        actions.append({"metaData": md_action})
-        actions.append(
-            dlog.commit_info(
-                "ALTER COLUMN", column=col, setDefault=sql_expr
-            )
-        )
-        return self._commit_next(actions, read_version=snap.version)
 
     def drop_column_default(self, col: str) -> int:
         """ALTER COLUMN ... DROP DEFAULT: removes CURRENT_DEFAULT;
@@ -4735,16 +4640,11 @@ class DeltaishTable:
                 found = True
         if not found:
             raise ValueError(f"column {col!r} has no default")
-        md_action = dict(snap.metadata)
-        md_action["schemaString"] = json.dumps(
-            schema, separators=(",", ":")
-        )
-        return self._commit_next(
-            [
-                {"metaData": md_action},
-                dlog.commit_info("ALTER COLUMN", column=col, dropDefault=True),
-            ],
-            read_version=snap.version,
+        return self._alter(
+            snap,
+            "ALTER COLUMN",
+            {"column": col, "dropDefault": True},
+            meta={"schemaString": json.dumps(schema, separators=(",", ":"))},
         )
 
     def fsck(self, dry_run: bool = False) -> list[str]:
@@ -5081,19 +4981,12 @@ class DeltaishTable:
         if str(conf.get(self.CDF_PROP, "false")).lower() == "true":
             return snap.version
         conf[self.CDF_PROP] = "true"
-        md = dict(snap.metadata)
-        md["configuration"] = conf
-        proto = self._bump_writer_version(snap, 4, "changeDataFeed")
-        return self._commit_next(
-            [
-                *([proto] if proto else []),
-                {"metaData": md},
-                dlog.commit_info(
-                    "SET TBLPROPERTIES",
-                    properties={self.CDF_PROP: "true"},
-                ),
-            ],
-            read_version=snap.version,
+        return self._alter(
+            snap,
+            "SET TBLPROPERTIES",
+            {"properties": {self.CDF_PROP: "true"}},
+            meta={"configuration": conf},
+            features={"changeDataFeed"},
         )
 
     def _write_cdc_files(

@@ -3864,7 +3864,8 @@ def deltalog_inline_dv_audit(spark, sf_dir):
         snap = t._snapshot()
         # handwrite inline DVs: per file, the positions of rows with
         # o_orderkey % 3 == 0 in the file's own row order
-        actions = t._dv_protocol_actions(snap)
+        proto = t._protocol_for(snap.protocol, {"deletionVectors"})
+        actions = [{"protocol": proto}] if proto else []
         import pyarrow.parquet as pq
 
         for rel, add in snap.files.items():

@@ -495,3 +495,52 @@ def test_dv_build_is_distributed_no_row_level_collect(spark, tmp_path):
         for a in snap.files.values()
     )
     assert card == 7
+
+
+@pytest.mark.parametrize("start", ["check_and_cdf", "column_mapped"])
+def test_first_dv_write_keeps_legacy_implied_features(spark, tmp_path, start):
+    """The first deletion-vector write upgrades a legacy protocol to
+    (3, 7), and at v7 only LISTED features are active: the upgrade
+    must list every feature the legacy versions implied. From (1, 4)
+    with a CHECK constraint and the change feed, writerFeatures keeps
+    checkConstraints and changeDataFeed (or an external writer would
+    stop enforcing the CHECK and writing the feed); from a
+    column-mapped (2, 5) table, columnMapping stays in BOTH lists (or
+    an external reader would read physical column names)."""
+    t = DeltaishTable.create(spark, str(tmp_path / "t"), _orders(spark, 30))
+    if start == "check_and_cdf":
+        t.add_check_constraint("pos", "o_totalprice > 0")
+        t.enable_change_data_feed()
+        assert t._snapshot().protocol == {
+            "minReaderVersion": 1,
+            "minWriterVersion": 4,
+        }
+    else:
+        t.enable_column_mapping()
+        t.rename_column("o_totalprice", "price")
+        assert t._snapshot().protocol == {
+            "minReaderVersion": 2,
+            "minWriterVersion": 5,
+        }
+    keys = sorted(r.o_orderkey for r in t.read().collect())
+    t.delete(F.col("o_orderkey") == keys[0], mode="merge_on_read")
+    proto = t._snapshot().protocol
+    implied = {"appendOnly", "invariants", "checkConstraints",
+               "changeDataFeed", "generatedColumns"}
+    assert (proto["minReaderVersion"], proto["minWriterVersion"]) == (3, 7)
+    if start == "check_and_cdf":
+        assert proto["writerFeatures"] == sorted(implied | {"deletionVectors"})
+        assert proto["readerFeatures"] == ["deletionVectors"]
+        with pytest.raises(ValueError, match="CHECK constraint"):
+            t.append(
+                _orders(spark, 1).withColumn(
+                    "o_totalprice", -F.col("o_totalprice")
+                )
+            )
+    else:
+        assert proto["writerFeatures"] == sorted(
+            implied | {"columnMapping", "deletionVectors"}
+        )
+        assert proto["readerFeatures"] == ["columnMapping", "deletionVectors"]
+        assert t.read().columns == ["o_orderkey", "price"]
+    assert sorted(r.o_orderkey for r in t.read().collect()) == keys[1:]

@@ -3248,6 +3248,74 @@ def test_files_matching_runs_the_predicate_evaluator(spark, tmp_path):
     assert sorted(t.files_matching("k", 1, 4)) == files(1, 2, 3, 4)
 
 
+
+def test_temporal_literals_are_typed_by_their_column(spark, tmp_path):
+    """A literal compared with a date or timestamp column is typed as
+    Spark casts it before the skipping evaluator compares it with the
+    stats: a string on a timestamp column is a timestamp (not text,
+    where the stats' 'T' sorts after the literal's ' '), a date on a
+    timestamp column is midnight, a string on a date column is its day.
+    A string that does not parse keeps every file. files_matching,
+    files_matching_predicate, read_pruned and DELETE all agree with
+    Spark's own filter."""
+    from datetime import date, datetime
+
+    schema = "id int, ts timestamp, d date"
+    rows = [(1, datetime(2024, 1, 2, 5), date(2024, 1, 2)),
+            (2, datetime(2024, 1, 1), date(2024, 1, 1))]
+
+    def table(name):
+        t = DeltaishTable.create(
+            spark, str(tmp_path / name), spark.createDataFrame(rows[:1], schema)
+        )
+        t.append(spark.createDataFrame(rows[1:], schema))
+        return t
+
+    t = table("t")
+    file_of = {
+        json.loads(a["stats"])["minValues"]["id"]: p
+        for p, a in t._snapshot().files.items()
+    }
+    assert sorted(file_of) == [1, 2]
+
+    def ids_of(files):
+        return sorted(k for k, p in file_of.items() if p in files)
+
+    def spark_ids(cond):
+        return sorted(r.id for r in t.read().filter(cond).collect())
+
+    for cond in [
+        "ts <= '2024-01-02 10:00:00'",
+        "ts > '2024-01-02'",
+        "ts = '2024-01-02T05:00:00'",
+        F.col("ts") > F.lit(date(2024, 1, 2)),
+        F.col("ts") <= F.lit("2024-01-02 10:00:00"),
+        "d >= '2024-01-02 10:00:00'",
+        F.col("d") >= F.lit("2024-01-02 10:00:00"),
+        F.col("d") < F.lit("2024-01-02T00:00:00"),
+    ]:
+        want = spark_ids(cond)
+        assert want, cond
+        assert ids_of(t.files_matching_predicate(cond)) == want, cond
+    # a string that does not parse as the column's type keeps the file
+    assert ids_of(t.files_matching_predicate("ts = 'noon'")) == [1, 2]
+    assert ids_of(t.files_matching_predicate("d <> 'x'")) == [1, 2]
+    for col, lo, hi, want in [
+        ("ts", "2024-01-02 00:00:00", "2024-01-02 10:00:00", [1]),
+        ("ts", date(2024, 1, 2), date(2024, 1, 3), [1]),
+        ("d", "2024-01-01 12:00:00", "2024-01-01 23:00:00", [2]),
+    ]:
+        assert ids_of(t.files_matching(col, lo, hi)) == want
+        assert [r.id for r in t.read_pruned(col, lo, hi).collect()] == want
+    for name, cond, left in [
+        ("d1", "ts <= '2024-01-02 10:00:00'", []),
+        ("d2", F.col("ts") > F.lit(date(2024, 1, 2)), [2]),
+        ("d3", "d >= '2024-01-02 10:00:00'", [2]),
+    ]:
+        td = table(name)
+        td.delete(cond)
+        assert sorted(r.id for r in td.read().collect()) == left, name
+
 def test_merge_into_commit_metrics_and_noop(spark, tmp_path):
     """The merge_into() commitInfo carries numTargetRowsUpdated /
     Deleted / Inserted, equal to the rows the merge changed (read back
@@ -5992,6 +6060,126 @@ def test_concurrent_protocol_upgrades_conflict(spark, tmp_path, monkeypatch):
     assert "vacuumProtocolCheck" in proto["writerFeatures"]
     assert "v2Checkpoint" in proto["writerFeatures"]
 
+
+
+def test_drop_check_constraint_conflicts_with_concurrent_metadata(
+    spark, tmp_path, monkeypatch
+):
+    """DROP CONSTRAINT computes its metaData from its read snapshot, so
+    a table-property change that lands between that snapshot and the
+    commit must make it fail (MetadataChangedException), not be
+    silently overwritten; a rerun on the fresh snapshot keeps both."""
+    t = DeltaishTable.create(spark, str(tmp_path / "t"), _orders(spark, 10))
+    t.add_check_constraint("pos", "o_totalprice > 0")
+    orig = t._commit_next
+    fired = {"done": False}
+
+    def rival_first(actions, *a, **kw):
+        # the rival lands after the drop read its snapshot
+        if not fired["done"]:
+            fired["done"] = True
+            DeltaishTable(spark, t.path).set_table_properties({"owner": "x"})
+        return orig(actions, *a, **kw)
+
+    monkeypatch.setattr(t, "_commit_next", rival_first)
+    with pytest.raises(ConcurrentCommitError, match="metadata"):
+        t.drop_check_constraint("pos")
+    monkeypatch.undo()
+    conf = t._snapshot().metadata["configuration"]
+    assert conf == {"delta.constraints.pos": "o_totalprice > 0", "owner": "x"}
+    t.drop_check_constraint("pos")
+    assert t._snapshot().metadata["configuration"] == {"owner": "x"}
+
+
+def _proto(rv, wv, rf=None, wf=None):
+    p = {"minReaderVersion": rv, "minWriterVersion": wv}
+    if rf is not None:
+        p["readerFeatures"] = sorted(rf)
+    if wf is not None:
+        p["writerFeatures"] = sorted(wf)
+    return p
+
+
+_L4 = ["appendOnly", "invariants", "checkConstraints", "changeDataFeed",
+       "generatedColumns"]
+_L5 = _L4 + ["columnMapping"]
+_V37 = _proto(3, 7, ["vacuumProtocolCheck"],
+              ["appendOnly", "invariants", "vacuumProtocolCheck"])
+_W37 = _V37["writerFeatures"]
+_CM, _DV, _DM = "columnMapping", "deletionVectors", "domainMetadata"
+_GI = ["generatedColumns", "identityColumns"]
+
+
+@pytest.mark.parametrize(
+    "start, features, expected",
+    [
+        (_proto(1, 2), ["checkConstraints"], _proto(1, 3)),
+        (_proto(1, 2), [_CM], _proto(2, 5)),
+        (_proto(1, 2), [_DV],
+         _proto(3, 7, [_DV], ["appendOnly", "invariants", _DV])),
+        (_proto(1, 2), [_DM],
+         _proto(1, 7, None, ["appendOnly", "invariants", _DM])),
+        (_proto(1, 2), _GI, _proto(1, 6)),
+        (_proto(1, 2), [_CM, _DV],
+         _proto(3, 7, [_CM, _DV], ["appendOnly", "invariants", _CM, _DV])),
+        (_proto(1, 2), ["appendOnly"], None),
+        (_proto(1, 4), ["checkConstraints"], None),
+        (_proto(1, 4), [_CM], _proto(2, 5)),
+        (_proto(1, 4), [_DV], _proto(3, 7, [_DV], _L4 + [_DV])),
+        (_proto(1, 4), [_DM], _proto(1, 7, None, _L4 + [_DM])),
+        (_proto(1, 4), _GI, _proto(1, 6)),
+        (_proto(1, 4), [_CM, _DV], _proto(3, 7, [_CM, _DV], _L4 + [_CM, _DV])),
+        (_proto(2, 5), ["checkConstraints", _CM], None),
+        (_proto(2, 5), [_DV], _proto(3, 7, [_CM, _DV], _L5 + [_DV])),
+        (_proto(2, 5), [_DM], _proto(2, 7, None, _L5 + [_DM])),
+        (_proto(2, 5), _GI, _proto(2, 6)),
+        (_proto(2, 5), [_CM, _DV], _proto(3, 7, [_CM, _DV], _L5 + [_DV])),
+        (_proto(2, 5), ["typeWidening", "clustering", _DM],
+         _proto(3, 7, [_CM, "typeWidening"],
+                _L5 + ["typeWidening", "clustering", _DM])),
+        (_V37, ["checkConstraints"],
+         _proto(3, 7, ["vacuumProtocolCheck"], _W37 + ["checkConstraints"])),
+        (_V37, [_CM], _proto(3, 7, ["vacuumProtocolCheck", _CM], _W37 + [_CM])),
+        (_V37, [_DV], _proto(3, 7, ["vacuumProtocolCheck", _DV], _W37 + [_DV])),
+        (_V37, [_DM], _proto(3, 7, ["vacuumProtocolCheck"], _W37 + [_DM])),
+        (_V37, _GI, _proto(3, 7, ["vacuumProtocolCheck"], _W37 + _GI)),
+        (_V37, [_CM, _DV],
+         _proto(3, 7, ["vacuumProtocolCheck", _CM, _DV], _W37 + [_CM, _DV])),
+        (_V37, ["vacuumProtocolCheck", "appendOnly", "invariants"], None),
+    ],
+)
+def test_protocol_for(start, features, expected):
+    """The one protocol rule, over legacy (1,2), (1,4), (2,5) and a
+    (3,7) table-features start: legacy floors rise while every missing
+    feature has one; otherwise writer v7 lists the implied features;
+    reader-writer features land in readerFeatures at v3 (reader v2
+    expands to columnMapping) or raise the reader to their floor; an
+    already active set gives None."""
+    assert DeltaishTable._protocol_for(start, features) == expected
+    if expected is not None:
+        assert DeltaishTable._protocol_for(expected, features) is None
+
+
+def test_protocol_versions_are_written_only_by_protocol_for():
+    """Source pin: no method other than _protocol_for writes a
+    minWriterVersion literal into an action, so every protocol upgrade
+    (ALTER, create, the first DV write) goes through the one rule."""
+    import inspect
+    import re
+
+    from lakehouse_for_data_streaming_and_analysis_spark.delta import (
+        table as table_mod,
+    )
+
+    writes = re.compile(r"""["']minWriterVersion["']\s*(:|\]\s*=)\s*\d""")
+    assert writes.search(inspect.getsource(DeltaishTable._protocol_for))
+    fns = [f for _, f in inspect.getmembers(table_mod, inspect.isfunction)]
+    for name, member in vars(DeltaishTable).items():
+        fn = getattr(member, "__func__", member)
+        if inspect.isfunction(fn) and name != "_protocol_for":
+            fns.append(fn)
+    for fn in fns:
+        assert not writes.search(inspect.getsource(fn)), fn.__name__
 
 def test_type_widening_version_stamp_survives_interleave(spark, tmp_path):
     """r7 ADVICE: delta.typeChanges tableVersion must be the version
