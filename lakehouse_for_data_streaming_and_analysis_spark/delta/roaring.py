@@ -38,40 +38,37 @@ _ARRAY_MAX = 4096
 # ------------------------------------------------------- 32-bit codec
 
 
-def serialize32(values: list[int]) -> bytes:
-    """Standard-format bytes for a sorted list of uint32 values.
-    Emits the no-run cookie with array/bitmap containers only."""
-    if any(v < 0 or v > 0xFFFFFFFF for v in values):
-        raise ValueError("roaring32: value out of uint32 range")
-    containers: dict[int, list[int]] = {}
-    for v in sorted(set(values)):
-        containers.setdefault(v >> 16, []).append(v & 0xFFFF)
-    keys = sorted(containers)
-    n = len(keys)
-    out = bytearray()
-    out += struct.pack("<II", _SERIAL_COOKIE_NO_RUN, n)
-    for k in keys:
-        out += struct.pack("<HH", k, len(containers[k]) - 1)
-    # offset header (always present under the no-run cookie)
-    header_len = 8 + 4 * n + 4 * n
-    pos = header_len
-    sizes = []
-    for k in keys:
-        card = len(containers[k])
-        sz = 8192 if card > _ARRAY_MAX else 2 * card
-        sizes.append(sz)
-    for sz in sizes:
+def _container(lows: list[int]) -> bytes:
+    """One container's bytes for sorted distinct 16-bit values: an
+    array container up to 4096 values, a bitmap container above."""
+    if len(lows) > _ARRAY_MAX:
+        bits = bytearray(8192)
+        for v in lows:
+            bits[v >> 3] |= 1 << (v & 7)
+        return bytes(bits)
+    return struct.pack(f"<{len(lows)}H", *lows)
+
+
+def _frame32(containers: list[tuple[int, int, bytes]]) -> bytes:
+    """Standard-format bytes for ready containers ``(key, cardinality,
+    payload)`` in increasing key order, under the no-run cookie (which
+    always carries the offset header)."""
+    n = len(containers)
+    out = bytearray(struct.pack("<II", _SERIAL_COOKIE_NO_RUN, n))
+    for k, card, payload in containers:
+        want = 8192 if card > _ARRAY_MAX else 2 * card
+        if not 0 < card <= 65536 or len(payload) != want:
+            raise ValueError(
+                f"roaring32: container {k} has {len(payload)} bytes for "
+                f"cardinality {card}"
+            )
+        out += struct.pack("<HH", k, card - 1)
+    pos = 8 + 8 * n
+    for _, _, payload in containers:
         out += struct.pack("<I", pos)
-        pos += sz
-    for k in keys:
-        vals = containers[k]
-        if len(vals) > _ARRAY_MAX:
-            bits = bytearray(8192)
-            for v in vals:
-                bits[v >> 3] |= 1 << (v & 7)
-            out += bits
-        else:
-            out += struct.pack(f"<{len(vals)}H", *vals)
+        pos += len(payload)
+    for _, _, payload in containers:
+        out += payload
     return bytes(out)
 
 
@@ -173,20 +170,40 @@ def deserialize32(buf: bytes, base: int = 0) -> tuple[list[int], int]:
 # ------------------------------------- 64-bit RoaringBitmapArray blob
 
 
+def frame_rbm_array(chunks: list[tuple[int, int, bytes]]) -> bytes:
+    """The DV data blob from ready roaring containers, one per
+    65,536-row chunk: ``(chunk, cardinality, payload)`` where ``chunk``
+    is ``position >> 16`` and ``payload`` is the container (sorted
+    little-endian uint16 lows up to 4096 values, else the 8 KiB
+    bitmap). Chunks are grouped into 32-bit bitmaps by ``chunk >> 16``
+    (the high 32 bits of the position). Every payload is checked
+    against its cardinality."""
+    by_key: dict[int, list[tuple[int, int, bytes]]] = {}
+    for chunk, card, payload in sorted(chunks, key=lambda c: c[0]):
+        if chunk < 0:
+            raise ValueError("deletion vector: negative row position")
+        by_key.setdefault(chunk >> 16, []).append(
+            (chunk & 0xFFFF, card, payload)
+        )
+    out = bytearray(struct.pack("<I", MAGIC))
+    out += struct.pack("<q", len(by_key))
+    for k in sorted(by_key):
+        out += struct.pack("<I", k)
+        out += _frame32(by_key[k])
+    return bytes(out)
+
+
 def serialize_rbm_array(positions: list[int]) -> bytes:
     """The DV data blob: magic + portable RoaringBitmapArray of the
     given 64-bit row positions."""
     if any(p < 0 for p in positions):
         raise ValueError("deletion vector: negative row position")
-    by_key: dict[int, list[int]] = {}
+    chunks: dict[int, list[int]] = {}
     for p in sorted(set(positions)):
-        by_key.setdefault(p >> 32, []).append(p & 0xFFFFFFFF)
-    out = bytearray(struct.pack("<I", MAGIC))
-    out += struct.pack("<q", len(by_key))
-    for k in sorted(by_key):
-        out += struct.pack("<I", k)
-        out += serialize32(by_key[k])
-    return bytes(out)
+        chunks.setdefault(p >> 16, []).append(p & 0xFFFF)
+    return frame_rbm_array(
+        [(c, len(lows), _container(lows)) for c, lows in chunks.items()]
+    )
 
 
 def deserialize_rbm_array(blob: bytes) -> list[int]:
@@ -232,15 +249,19 @@ def checksum(data: bytes) -> int:
     return zlib.crc32(data) & 0xFFFFFFFF
 
 
-def pack_dv_entry(positions: list[int]) -> tuple[bytes, int]:
+def frame_entry(data: bytes) -> tuple[bytes, int]:
     """One on-disk DV entry: ``<dataSize: 4B BE><data><crc32: 4B BE>``
     where data = magic + portable bitmaps. Returns (entry bytes,
     sizeInBytes for the descriptor — the data length)."""
-    data = serialize_rbm_array(positions)
     return (
         struct.pack(">I", len(data)) + data + struct.pack(">I", checksum(data)),
         len(data),
     )
+
+
+def pack_dv_entry(positions: list[int]) -> tuple[bytes, int]:
+    """``frame_entry`` of the given row positions."""
+    return frame_entry(serialize_rbm_array(positions))
 
 
 def unpack_dv_entry(buf: bytes, offset: int, size_in_bytes: int) -> list[int]:
@@ -309,115 +330,66 @@ def b85_decode(text: str) -> bytes:
 # ----------------------------------------------- descriptor resolution
 
 
-def validate_descriptor(table_path: str, dv: dict) -> None:
-    """Frame-validate a deletionVector descriptor WITHOUT decoding
-    its positions: storage type known, base85 uuid well-formed, the
-    DV file present with the right version byte, the entry's stored
-    dataSize matching the descriptor. O(1) IO per descriptor — cheap
-    enough to run driver-side for every referenced file, so a
-    malformed or vacuumed descriptor raises a loud ValueError at plan
-    time instead of a wrapped executor exception mid-scan (the
-    strict-decode-or-refuse contract; the O(positions) bitmap decode
-    itself stays on the executors)."""
+def read_descriptors(table_path: str, dvs: list[dict]) -> list[list[int]]:
+    """Deleted row positions for each deletionVector descriptor, given
+    the table root ('u' paths resolve against it). Pure file IO, no
+    Spark needed; a DV file that several descriptors share is read
+    once. Every frame field (on-disk version byte, dataSize vs
+    sizeInBytes, CRC-32, magic, bitmap framing) is validated, and
+    unknown storage types refuse."""
     import os
-    import struct as _struct
     import uuid as _uuid
 
-    st = dv.get("storageType")
-    if st == "i":
-        data = b85_decode(dv["pathOrInlineDv"])
-        size = int(dv.get("sizeInBytes", len(data)))
-        if size > len(data):
-            raise ValueError(
-                "deletion vector: inline sizeInBytes exceeds decoded "
-                "payload"
+    files: dict[str, bytes] = {}
+    out = []
+    for dv in dvs:
+        st = dv.get("storageType")
+        if st == "i":
+            data = b85_decode(dv["pathOrInlineDv"])
+            size = int(dv.get("sizeInBytes", len(data)))
+            if size > len(data):
+                raise ValueError(
+                    "deletion vector: inline sizeInBytes exceeds decoded "
+                    "payload"
+                )
+            out.append(deserialize_rbm_array(data[:size]))
+            continue
+        if st == "u":
+            enc = dv["pathOrInlineDv"]
+            if len(enc) < 20:
+                raise ValueError(
+                    "deletion vector: pathOrInlineDv shorter than a base85 "
+                    "uuid"
+                )
+            u = _uuid.UUID(bytes=b85_decode(enc[-20:]))
+            path = os.path.join(
+                table_path, enc[:-20], f"deletion_vector_{u}.bin"
             )
-        return
-    if st == "u":
-        enc = dv["pathOrInlineDv"]
-        if len(enc) < 20:
-            raise ValueError(
-                "deletion vector: pathOrInlineDv shorter than a base85 "
-                "uuid"
+        elif st == "p":
+            path = dv["pathOrInlineDv"]
+        else:
+            raise NotImplementedError(
+                f"deletion vector storageType {st!r} is not supported"
             )
-        u = _uuid.UUID(bytes=b85_decode(enc[-20:]))
-        path = os.path.join(
-            table_path, enc[:-20], f"deletion_vector_{u}.bin"
+        buf = files.get(path)
+        if buf is None:
+            if not os.path.exists(path):
+                raise ValueError(
+                    f"deletion vector file missing: {path} (vacuumed?)"
+                )
+            with open(path, "rb") as f:
+                buf = files[path] = f.read()
+            if not buf or buf[0] != 1:
+                raise ValueError(
+                    "deletion vector: unknown on-disk format version "
+                    f"{buf[0] if buf else '<empty>'}"
+                )
+        out.append(
+            unpack_dv_entry(buf, int(dv["offset"]), int(dv["sizeInBytes"]))
         )
-    elif st == "p":
-        path = dv["pathOrInlineDv"]
-    else:
-        raise NotImplementedError(
-            f"deletion vector storageType {st!r} is not supported"
-        )
-    if not os.path.exists(path):
-        raise ValueError(
-            f"deletion vector file missing: {path} (vacuumed?)"
-        )
-    offset = int(dv["offset"])
-    with open(path, "rb") as f:
-        head = f.read(1)
-        if not head or head[0] != 1:
-            raise ValueError(
-                "deletion vector: unknown on-disk format version "
-                f"{head[0] if head else '<empty>'}"
-            )
-        f.seek(offset)
-        frame = f.read(4)
-    if len(frame) < 4:
-        raise ValueError("deletion vector: offset past end of file")
-    (data_size,) = _struct.unpack(">I", frame)
-    if data_size != int(dv["sizeInBytes"]):
-        raise ValueError(
-            f"deletion vector: stored dataSize {data_size} != "
-            f"descriptor sizeInBytes {dv['sizeInBytes']}"
-        )
+    return out
 
 
 def read_descriptor(table_path: str, dv: dict) -> list[int]:
-    """Deleted row positions for a deletionVector descriptor, given
-    the table root ('u' paths resolve against it). Pure file IO —
-    callable from Python DataSource workers, no Spark needed. Every
-    frame field is validated; unknown storage types refuse."""
-    import os
-    import uuid as _uuid
-
-    st = dv.get("storageType")
-    if st == "i":
-        data = b85_decode(dv["pathOrInlineDv"])
-        size = int(dv.get("sizeInBytes", len(data)))
-        if size > len(data):
-            raise ValueError(
-                "deletion vector: inline sizeInBytes exceeds decoded "
-                "payload"
-            )
-        return deserialize_rbm_array(data[:size])
-    if st == "u":
-        enc = dv["pathOrInlineDv"]
-        if len(enc) < 20:
-            raise ValueError(
-                "deletion vector: pathOrInlineDv shorter than a base85 "
-                "uuid"
-            )
-        u = _uuid.UUID(bytes=b85_decode(enc[-20:]))
-        path = os.path.join(
-            table_path, enc[:-20], f"deletion_vector_{u}.bin"
-        )
-    elif st == "p":
-        path = dv["pathOrInlineDv"]
-    else:
-        raise NotImplementedError(
-            f"deletion vector storageType {st!r} is not supported"
-        )
-    if not os.path.exists(path):
-        raise ValueError(
-            f"deletion vector file missing: {path} (vacuumed?)"
-        )
-    with open(path, "rb") as f:
-        buf = f.read()
-    if not buf or buf[0] != 1:
-        raise ValueError(
-            "deletion vector: unknown on-disk format version "
-            f"{buf[0] if buf else '<empty>'}"
-        )
-    return unpack_dv_entry(buf, int(dv["offset"]), int(dv["sizeInBytes"]))
+    """``read_descriptors`` of one descriptor."""
+    return read_descriptors(table_path, [dv])[0]

@@ -17,10 +17,11 @@ import math
 import os
 import re
 import shutil
+import struct
 import time
 import uuid
 from collections.abc import Callable
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from datetime import date, datetime, timedelta
 from decimal import Decimal
 from urllib.parse import quote, unquote
@@ -84,11 +85,20 @@ def file_footer_stats(path: str, indexed: set[str] | None = None) -> dict:
             try:
                 mn, mx = st.min, st.max
             except Exception:
-                # pyarrow cannot decode min/max for every physical
-                # type (observed: some FLBA decimals); per-column
-                # stats are OPTIONAL in the protocol — a file without
-                # them simply never skips, it never corrupts
-                continue
+                # pyarrow decodes no min/max for INT32/INT64-backed
+                # decimals (Spark's layout up to precision 18); their
+                # raw integers are the unscaled values. Any other
+                # undecodable type keeps no min/max: per-column stats
+                # are OPTIONAL in the protocol — a file without them
+                # simply never skips, it never corrupts
+                if st.logical_type.type != "DECIMAL" or (
+                    col.physical_type not in ("INT32", "INT64")
+                ):
+                    continue
+                scale = md.schema.column(ci).scale
+                mn, mx = (
+                    Decimal(v).scaleb(-scale) for v in (st.min_raw, st.max_raw)
+                )
             if name not in mins or mn < mins[name]:
                 mins[name] = mn
             if name not in maxs or mx > maxs[name]:
@@ -2266,96 +2276,119 @@ class DeltaishTable:
         return roaring.read_descriptor(self.path, dv)
 
     def _dv_mask_actions(
-        self, snap: dlog.Snapshot, matches: DataFrame
+        self, snap: dlog.Snapshot, matches: DataFrame, cands: list[str]
     ) -> tuple[list[dict] | None, int]:
         """The commit actions that mask freshly-dead row positions
         with deletion vectors. ``matches`` is the tagged DataFrame of
         rows to mask (``__fp`` file URI / ``__ri`` row index, from a
-        ``keep_tags=True`` snapshot scan).
+        ``keep_tags=True`` scan of the candidate files ``cands``).
 
-        SCALE: the roaring bitmaps are serialized PER FILE ON THE
-        EXECUTORS (``groupBy(__fp).applyInPandas``); the driver
-        collects (a) the touched-file list — O(files) — and (b) one
-        compressed entry per touched file — O(total DV bytes, the
-        artifact being written anyway) — never the O(matched rows)
-        (file, position) pair set (VERDICT r4 "What's wrong" #2).
-        Existing DV positions of the touched files are unioned in
-        executor-side too, re-entering as a (uri, position) frame
-        bounded by the PRIOR deleted-row count of just those files.
+        The bitmaps are built in ONE JVM aggregate grouped by (file,
+        65,536-row chunk) over the new matches plus the candidate
+        files' prior DV positions (decoded on the driver, as every
+        DV-aware scan decodes them). Each chunk comes back as a
+        ready roaring container — its sorted low 16 bits up to 4096
+        values, else the 8 KiB bitmap of two ``bitmap_construct_agg``
+        buckets, whose byte layout is the bitmap container's — and
+        ``roaring.frame_rbm_array`` frames them. The driver receives
+        at most one container per touched chunk, O(DV bytes) and never
+        the (file, position) pairs (DECISIONS §56). A flag marks new
+        rows: a candidate file none of whose chunks gained one keeps
+        its DV unchanged.
 
         Per touched file the commit carries a remove + re-add with the
         merged DV, or a pure remove when every row of the file is now
         dead. Returns (actions incl. any protocol upgrade, number of
         DVs written); actions is ``None`` when nothing matched (the
         caller's no-op signal)."""
-        touched_uris = [
-            r["__fp"] for r in matches.select("__fp").distinct().collect()
-        ]
-        if not touched_uris:
-            return None, 0
-        uri_to_rel = {u: self._uri_to_rel(u) for u in touched_uris}
         old_dvs = {
-            rel: snap.files[rel].get("deletionVector")
-            for rel in uri_to_rel.values()
+            rel: snap.files[rel]["deletionVector"]
+            for rel in cands
+            if snap.files[rel].get("deletionVector")
         }
-        old_dvs = {rel: dv for rel, dv in old_dvs.items() if dv}
-        pos = matches.select("__fp", "__ri")
+        rows = matches.select("__fp", "__ri", F.lit(True).alias("__new"))
         if old_dvs:
-            pos = pos.unionByName(
-                self._dv_pos_df(old_dvs)
-                .withColumnRenamed("__dv_fp", "__fp")
-                .withColumnRenamed("__dv_ri", "__ri")
+            rows = rows.unionByName(
+                self._dv_pos_df(old_dvs).select(
+                    F.col("__dv_fp").alias("__fp"),
+                    F.col("__dv_ri").alias("__ri"),
+                    F.lit(False).alias("__new"),
+                )
+            )
+        low = "(__ri & 65535)"
+
+        def bucket(cmp):
+            # one 32,768-bit half of the chunk's bitmap container
+            return F.expr(
+                f"bitmap_construct_agg(CASE WHEN {low} {cmp} 32768 "
+                f"THEN bitmap_bit_position({low} + 1) END)"
             )
 
-        def _pack(pdf):
-            import pandas as pd
-
-            positions = sorted({int(x) for x in pdf["__ri"]})
-            entry, size = roaring.pack_dv_entry(positions)
-            return pd.DataFrame(
-                {
-                    "__fp": [pdf["__fp"].iloc[0]],
-                    "entry": [entry],
-                    "size": [size],
-                    "card": [len(positions)],
-                }
+        card = F.expr("bitmap_count(__b0) + bitmap_count(__b1)")
+        chunks = (
+            rows.groupBy("__fp", F.shiftright("__ri", 16).alias("chunk"))
+            .agg(
+                F.max("__new").alias("new"),
+                F.sort_array(F.collect_set(F.expr(low))).alias("lows"),
+                bucket("<").alias("__b0"),
+                bucket(">=").alias("__b1"),
             )
-
-        packed = sorted(
-            pos.groupBy("__fp")
-            .applyInPandas(
-                _pack, "__fp string, entry binary, size long, card long"
+            .select(
+                "__fp",
+                "chunk",
+                "new",
+                card.alias("card"),
+                F.when(card <= 4096, F.col("lows")).alias("lows"),
+                F.when(card > 4096, F.concat("__b0", "__b1")).alias("bits"),
             )
-            .collect(),
-            key=lambda r: uri_to_rel[r["__fp"]],
+            .collect()
         )
+        by_file: dict[str, list[tuple[int, int, bytes]]] = {}
+        touched = set()
+        for r in chunks:
+            lows = r["lows"]
+            by_file.setdefault(r["__fp"], []).append(
+                (
+                    r["chunk"],
+                    r["card"],
+                    bytes(r["bits"])
+                    if lows is None
+                    else struct.pack(f"<{len(lows)}H", *lows),
+                )
+            )
+            if r["new"]:
+                touched.add(r["__fp"])
+        if not touched:
+            return None, 0
         # one uuid-named DV file holding every touched file's bitmap
         # (the delta-spark layout: many DVs, one physical file per
-        # commit), concatenated driver-side from the executor entries
+        # commit)
         u = uuid.uuid4()
         buf = bytearray(b"\x01")
         descriptors: dict[str, dict] = {}
         full_removes: list[str] = []
-        for r in packed:
-            rel = uri_to_rel[r["__fp"]]
+        for rel, uri in sorted((self._uri_to_rel(fp), fp) for fp in touched):
+            n_dead = sum(c[1] for c in by_file[uri])
             stats = snap.files[rel].get("stats")
             n_rec = (
                 json.loads(stats).get("numRecords")
                 if isinstance(stats, str)
                 else (stats or {}).get("numRecords")
             ) if stats else None
-            if n_rec is not None and r["card"] >= n_rec:
+            if n_rec is not None and n_dead >= n_rec:
                 full_removes.append(rel)  # every row dead: drop file
                 continue
-            off = len(buf)
-            buf += bytes(r["entry"])
+            entry, size = roaring.frame_entry(
+                roaring.frame_rbm_array(by_file[uri])
+            )
             descriptors[rel] = {
                 "storageType": "u",
                 "pathOrInlineDv": roaring.b85_encode(u.bytes),
-                "offset": off,
-                "sizeInBytes": int(r["size"]),
-                "cardinality": int(r["card"]),
+                "offset": len(buf),
+                "sizeInBytes": size,
+                "cardinality": n_dead,
             }
+            buf += entry
         if descriptors:
             with open(
                 os.path.join(self.path, f"deletion_vector_{u}.bin"), "wb"
@@ -2398,45 +2431,23 @@ class DeltaishTable:
 
     def _dv_pos_df(self, dv_map: dict[str, dict]) -> DataFrame:
         """(file URI, row index) pairs deleted by the given
-        deletionVector descriptors — the anti-join side of a DV-aware
-        scan. The bitmaps are DECODED ON THE EXECUTORS (mapInPandas
-        over one descriptor row per file; ``roaring.read_descriptor``
-        is pure file IO against the table's shared storage, the same
-        access delta-spark's scan does), so neither the driver's
-        memory nor the plan carries the deleted-row positions — only
-        O(files) descriptor rows. Inline ('i') DVs decode from the
-        descriptor itself; 'u'/'p' DVs read their file per batch."""
-        table_path = self.path
-        desc_rows = []
-        for rel, dv in dv_map.items():
-            # strict-decode-or-refuse happens at PLAN time: frame-
-            # validate each descriptor driver-side (O(1) IO each) so a
-            # malformed/vacuumed DV raises a plain ValueError here
-            # instead of a wrapped executor exception mid-scan
-            roaring.validate_descriptor(table_path, dv)
-            desc_rows.append((self._file_uri(rel), json.dumps(dv)))
-
-        def _decode(batches):
-            import pandas as pd
-
-            from lakehouse_for_data_streaming_and_analysis_spark.delta import (
-                roaring as _roaring,
-            )
-
-            for pdf in batches:
-                for uri, dv_json in zip(pdf["uri"], pdf["dv"]):
-                    pos = _roaring.read_descriptor(
-                        table_path, json.loads(dv_json)
-                    )
-                    yield pd.DataFrame(
-                        {"__dv_fp": [uri] * len(pos), "__dv_ri": pos}
-                    )
-
-        desc = self._local_df(desc_rows, "uri string, dv string")
-        # one descriptor per task up to 32; a single one needs no shuffle
-        n = min(len(desc_rows), 32)
-        desc = desc.repartition(n) if n > 1 else desc.coalesce(1)
-        return desc.mapInPandas(_decode, "__dv_fp string, __dv_ri long")
+        deletionVector descriptors: the anti-join side of a DV-aware
+        scan, and the prior positions a DV write unions in. The
+        bitmaps are decoded ON THE DRIVER (``roaring.read_descriptors``
+        validates every frame field and the CRC, so a malformed or
+        vacuumed DV refuses here, before any job) and reach Spark as
+        one (file URI, positions array) Arrow row per file, exploded in
+        the JVM — no Python worker. The frame holds at most the deleted
+        rows of the files read; the scan broadcasts it, which collects
+        it to the driver anyway (DECISIONS §56)."""
+        rels = list(dv_map)
+        positions = roaring.read_descriptors(
+            self.path, [dv_map[r] for r in rels]
+        )
+        return self._local_df(
+            [(self._file_uri(r), p) for r, p in zip(rels, positions)],
+            "__dv_fp string, __dv_ris array<bigint>",
+        ).select("__dv_fp", F.explode("__dv_ris").alias("__dv_ri"))
 
     def _read_snapshot_files(
         self,
@@ -3909,10 +3920,11 @@ class DeltaishTable:
         bitmap of their deleted row positions, so deleting 0.1% of a
         100 TB table writes kilobytes of bitmap, zero data bytes —
         reads anti-join the positions out, and OPTIMIZE/purge()
-        materializes them later. The bitmaps are serialized per file
-        ON THE EXECUTORS; the driver collects only the touched-file
-        list and the compressed per-file entries (O(DV bytes), never
-        O(matched rows) — see _dv_mask_actions).
+        materializes them later. The bitmaps are built in one JVM
+        aggregate per (file, 65,536-row chunk); the driver collects at
+        most one roaring container per touched chunk (O(DV bytes),
+        never the matched (file, position) pairs — see
+        _dv_mask_actions).
 
         Under ``delta.enableChangeDataFeed`` the deleted rows are
         recorded as cdc ``delete`` actions in both modes — without
@@ -4029,20 +4041,26 @@ class DeltaishTable:
                 keep_tags=True,
                 with_row_ids=rt and exprs is not None,
             )
-            # one materialized row set for every consumer (touched-file
-            # collect, DV pack, post-image and CDC writes) — without the
+            # one materialized row set for every consumer (DV build,
+            # CHECK constraints, post-image and CDC writes) — without the
             # checkpoint a nondeterministic condition (rand(),
-            # current_timestamp) could surface a file in a later
-            # evaluation that was absent from the first, KeyError-ing
-            # uri_to_rel or dropping positions (ADVICE r5)
-            with self._pinned(tagged.filter(is_match)) as matches:
+            # current_timestamp) could mask rows in the DV that differ
+            # from the ones written or recorded. A DELETE
+            # without the change feed has one consumer, the DV build's
+            # single aggregate, and needs no pin.
+            pin = (
+                self._pinned
+                if exprs is not None or cdf
+                else nullcontext
+            )
+            with pin(tagged.filter(is_match)) as matches:
                 pre = matches.drop("__fp", "__ri")
                 post = None
                 if exprs is not None:
                     post = post_image(pre)
                     # CHECK constraints run before any DV file is written
                     self._enforce_checks(post, snap)
-                actions, n_dvs = self._dv_mask_actions(snap, matches)
+                actions, n_dvs = self._dv_mask_actions(snap, matches, cands)
                 if actions is None:
                     return snap.version  # no-op
                 # the old positions are bitmap-masked; an UPDATE's rows

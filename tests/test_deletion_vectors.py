@@ -6,8 +6,10 @@ deleted."""
 
 from __future__ import annotations
 
+import json
 import os
 import struct
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -461,40 +463,228 @@ def test_restore_to_dv_version(spark, tmp_path):
         t.restore(v_dv)
 
 
-def test_dv_build_is_distributed_no_row_level_collect(spark, tmp_path):
-    """Scale pin (VERDICT r4 'What's wrong' #2): the MOR DELETE/UPDATE
-    deletion-vector build must serialize bitmaps per file on the
-    executors and never collect an O(matched rows) (file, position)
-    pair set to the driver.  Two halves: (a) source pin — the
-    row-level ``select("__fp", "__ri").collect()`` shape is gone from
-    delta/table.py; (b) behavior pin — a MOR delete whose DV merges
-    prior DV positions still reads back exactly right (the executor
-    path owns the union too)."""
-    import inspect
-
-    from lakehouse_for_data_streaming_and_analysis_spark.delta import table as table_mod
-
-    src = inspect.getsource(table_mod)
-    assert 'select("__fp", "__ri").collect()' not in src
-    assert "applyInPandas" in inspect.getsource(
-        table_mod.DeltaishTable._dv_mask_actions
+def _dv_entry_bytes(t, dv):
+    """The raw on-disk entry a 'u' descriptor points at."""
+    path = os.path.join(
+        t.path,
+        f"deletion_vector_{uuid.UUID(bytes=R.b85_decode(dv['pathOrInlineDv']))}.bin",
     )
+    with open(path, "rb") as f:
+        f.seek(dv["offset"])
+        return f.read(dv["sizeInBytes"] + 8)
 
-    df = _orders(spark, 30).repartition(3)
-    t = DeltaishTable.create(spark, str(tmp_path / "t"), df)
-    keys = sorted(r.o_orderkey for r in t.read().collect())
-    t.delete(F.col("o_orderkey").isin(*keys[:4]), mode="merge_on_read")
-    # second MOR delete must union the first DVs executor-side
-    t.delete(F.col("o_orderkey").isin(*keys[4:7]), mode="merge_on_read")
-    live = sorted(r.o_orderkey for r in t.read().collect())
-    assert live == keys[7:]
-    # merged descriptors: cardinalities sum to 7 across files
+
+_PYTHON_NODES = ("MapInPandas", "FlatMapGroupsInPandas", "EvalPython")
+
+
+def test_dv_build_is_distributed_no_row_level_collect(
+    spark, tmp_path, monkeypatch
+):
+    """Scale pin: a merge-on-read DELETE builds its bitmaps in one JVM
+    aggregate whose collect returns at most one row per (touched file,
+    65,536-row chunk), never the (file, position) pairs; neither the
+    DELETE nor a DV-aware read plans a Python-worker node; the DELETE
+    runs at most 2 Spark jobs, the aggregate's two stages (3 once the
+    files carry DVs: the scan then broadcasts them), counted by job
+    tag; and a second DELETE unions the prior DVs."""
+    sc = spark.sparkContext
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    # two files of 70,000 ids in order: chunks 0 and 1 each, and a
+    # row's index is its id minus its file's first id
+    t = DeltaishTable.create(
+        spark, str(tmp_path / "t"), spark.range(0, 70_000).coalesce(1)
+    )
+    t.append(spark.range(70_000, 140_000).coalesce(1))
+    first_id = {
+        p: json.loads(a["stats"])["minValues"]["id"]
+        for p, a in t._snapshot().files.items()
+    }
+    assert sorted(first_id.values()) == [0, 70_000]
+    collects = []
+    real_collect = DataFrame.collect
+
+    def spy(df):
+        rows = real_collect(df)
+        collects.append(
+            (df.columns, df._jdf.queryExecution().executedPlan().toString(),
+             len(rows))
+        )
+        return rows
+
+    def delete(tag, cond):
+        collects.clear()
+        sc.addJobTag(tag)
+        try:
+            with monkeypatch.context() as m:
+                m.setattr(DataFrame, "collect", spy)
+                t.delete(cond, mode="merge_on_read")
+        finally:
+            sc.removeJobTag(tag)
+        assert len(collects) == 1, [c[0] for c in collects]
+        cols, plan, n = collects[0]
+        assert "chunk" in cols
+        assert not any(x in plan for x in _PYTHON_NODES), plan
+        return n, len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+
+    # every 97th row: both chunks of both files
+    n, jobs = delete("dv.first", F.col("id") % 97 == 0)
+    assert n == 4 and jobs <= 2, (n, jobs)
+    # a range in the first file only: stats skip the second file, and
+    # the first file's chunk 1 comes back from its prior DV alone
+    n, jobs = delete("dv.second", F.col("id").between(10, 20))
+    assert n == 2 and jobs <= 3, (n, jobs)
+
+    read = t.read()
+    plan = read._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan
+    assert not any(x in plan for x in _PYTHON_NODES), plan
+    dead = {i for i in range(140_000) if i % 97 == 0 or 10 <= i <= 20}
+    assert read.count() == 140_000 - len(dead)
     snap = t._snapshot()
-    card = sum(
-        (a.get("deletionVector") or {}).get("cardinality", 0)
-        for a in snap.files.values()
+    assert sum(
+        a["deletionVector"]["cardinality"] for a in snap.files.values()
+    ) == len(dead)
+    for p, first in first_id.items():
+        dv = snap.files[p]["deletionVector"]
+        want = sorted(i - first for i in dead if first <= i < first + 70_000)
+        assert t.dv_positions(dv) == want
+        assert _dv_entry_bytes(t, dv) == R.pack_dv_entry(want)[0]
+
+
+# the edges the chunk aggregate must get right: both halves of a
+# chunk's bitmap, the array/bitmap container boundary, a bitmap with
+# only its upper half set, and positions past 2**32
+_EDGE_POSITIONS = (
+    [0, 1, 32767, 32768, 65535, 65536]
+    + [2 * 65536 + i for i in range(0, 8192, 2)]  # exactly 4096
+    + [3 * 65536 + i for i in range(4097)]  # 4097: bitmap
+    + [4 * 65536 + 32768 + i for i in range(4097)]  # upper half only
+    + [2**32 + 5, 2**32 + 2 * 65536 + 32768, 2**33 + 1]
+)
+
+
+def _jvm_containers(positions):
+    """The containers the JVM aggregate hands back: sorted lows up to
+    4096 values, else two 4 KiB halves of the chunk's bitmap."""
+    chunks = {}
+    for p in sorted(set(positions)):
+        chunks.setdefault(p >> 16, []).append(p & 0xFFFF)
+    out = []
+    for c, lows in chunks.items():
+        if len(lows) <= 4096:
+            payload = struct.pack(f"<{len(lows)}H", *lows)
+        else:
+            halves = [bytearray(4096), bytearray(4096)]
+            for v in lows:
+                b = v % 32768  # bitmap_bit_position(v + 1)
+                halves[v >= 32768][b >> 3] |= 1 << (b & 7)
+            payload = bytes(halves[0] + halves[1])
+        out.append((c, len(lows), payload))
+    return out
+
+
+def test_frame_rbm_array_matches_serialize():
+    """The container framer gives the bytes serialize_rbm_array gives
+    for the same positions, in any chunk order, and refuses a payload
+    that does not fit its cardinality."""
+    import random
+
+    random.seed(11)
+    cases = [
+        [],
+        _EDGE_POSITIONS,
+        random.sample(range(300_000), 9000),
+        [2**32 - 1, 2**32, 2**32 + 65535, 2**32 + 65536],
+    ]
+    for pos in cases:
+        chunks = _jvm_containers(pos)
+        random.shuffle(chunks)
+        assert R.frame_rbm_array(chunks) == R.serialize_rbm_array(pos)
+        assert R.frame_entry(R.frame_rbm_array(chunks)) == R.pack_dv_entry(
+            pos
+        )
+    with pytest.raises(ValueError, match="cardinality"):
+        R.frame_rbm_array([(0, 3, struct.pack("<2H", 1, 2))])
+    with pytest.raises(ValueError, match="cardinality"):
+        R.frame_rbm_array([(0, 4097, bytes(4096))])
+
+
+def test_dv_chunk_aggregate_matches_pack_dv_entry(spark, tmp_path):
+    """The JVM chunk aggregate behind every DV write gives entries
+    byte-identical to pack_dv_entry(sorted(positions)) at the chunk
+    edges and past 2**32 (fed synthetic positions; the file's
+    numRecords is raised so no file reads as fully deleted), a second
+    write unions the prior DV, and a candidate file whose DV gains no
+    new row keeps its DV."""
+    import dataclasses
+
+    t = DeltaishTable.create(
+        spark, str(tmp_path / "t"), _orders(spark, 20).repartition(2)
     )
-    assert card == 7
+    snap = t._snapshot()
+    f1, f2 = sorted(snap.files)
+    big = json.dumps({"numRecords": 2**40})
+    snap = dataclasses.replace(
+        snap, files={p: dict(a, stats=big) for p, a in snap.files.items()}
+    )
+
+    def mask(snap, by_file):
+        rows = [
+            (t._file_uri(p), pos) for p, ps in by_file.items() for pos in ps
+        ]
+        matches = spark.createDataFrame(rows, "__fp string, __ri bigint")
+        actions, _ = t._dv_mask_actions(snap, matches, [f1, f2])
+        adds = {a["add"]["path"]: a["add"] for a in actions if "add" in a}
+        files = dict(snap.files)
+        files.update(adds)
+        return dataclasses.replace(snap, files=files), adds
+
+    first = _EDGE_POSITIONS[::2]
+    snap, adds = mask(snap, {f1: first, f2: [3, 70_000]})
+    assert set(adds) == {f1, f2}
+    dv = adds[f1]["deletionVector"]
+    assert dv["cardinality"] == len(first)
+    assert _dv_entry_bytes(t, dv) == R.pack_dv_entry(first)[0]
+
+    # second write: f1 gains the other half, f2 is a candidate whose
+    # DV gains nothing and keeps it (no remove, no add)
+    snap, adds = mask(snap, {f1: _EDGE_POSITIONS[1::2]})
+    assert set(adds) == {f1}
+    dv = adds[f1]["deletionVector"]
+    assert dv["cardinality"] == len(_EDGE_POSITIONS)
+    assert _dv_entry_bytes(t, dv) == R.pack_dv_entry(_EDGE_POSITIONS)[0]
+    assert t.dv_positions(dv) == sorted(_EDGE_POSITIONS)
+
+
+def test_read_descriptors_reads_a_shared_file_once(tmp_path, monkeypatch):
+    """Descriptors that share one DV file cost one read of it, and a
+    corrupt entry still refuses."""
+    import builtins
+
+    e1, s1 = R.pack_dv_entry([1, 2])
+    e2, s2 = R.pack_dv_entry([70_000])
+    u = uuid.uuid4()
+    (tmp_path / f"deletion_vector_{u}.bin").write_bytes(b"\x01" + e1 + e2)
+    enc = R.b85_encode(u.bytes)
+    dvs = [
+        {"storageType": "u", "pathOrInlineDv": enc, "offset": 1,
+         "sizeInBytes": s1},
+        {"storageType": "u", "pathOrInlineDv": enc, "offset": 1 + len(e1),
+         "sizeInBytes": s2},
+    ]
+    opened = []
+    real_open = builtins.open
+
+    def spy(path, *a, **kw):
+        opened.append(str(path))
+        return real_open(path, *a, **kw)
+
+    monkeypatch.setattr(builtins, "open", spy)
+    assert R.read_descriptors(str(tmp_path), dvs) == [[1, 2], [70_000]]
+    assert len(opened) == 1
+    monkeypatch.undo()
+    with pytest.raises(ValueError, match="dataSize"):
+        R.read_descriptor(str(tmp_path), dict(dvs[1], sizeInBytes=s2 + 1))
 
 
 @pytest.mark.parametrize("start", ["check_and_cdf", "column_mapped"])

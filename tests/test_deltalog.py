@@ -3066,8 +3066,8 @@ def test_dml_job_counts(spark, tmp_path):
     """Spark jobs per row-level write, counted by job tag as
     tools/plan_audit.py counts them, on 4 range files. Copy-on-write
     DELETE and UPDATE run in at most 3 jobs (4 with CDF); merge-on-read
-    DELETE in at most 5 (6 with CDF) and UPDATE, on the table the
-    DELETE just gave DVs, in at most 8 (9 with CDF); overwrite_where in
+    DELETE in at most 2 (4 with CDF) and UPDATE, on the table the
+    DELETE just gave DVs, in at most 5 (6 with CDF); overwrite_where in
     at most 5. A change that adds a collect or a re-evaluation shows
     up here."""
     base = _orders(spark).repartitionByRange(4, "o_orderkey")
@@ -3077,8 +3077,8 @@ def test_dml_job_counts(spark, tmp_path):
     limits = {
         ("copy_on_write", False): (3, 3),
         ("copy_on_write", True): (4, 4),
-        ("merge_on_read", False): (5, 8),
-        ("merge_on_read", True): (6, 9),
+        ("merge_on_read", False): (2, 5),
+        ("merge_on_read", True): (4, 6),
     }
     for (mode, cdf), (max_delete, max_update) in limits.items():
         t = DeltaishTable.create(spark, str(tmp_path / f"{mode}{cdf}"), base)
@@ -3246,6 +3246,43 @@ def test_files_matching_runs_the_predicate_evaluator(spark, tmp_path):
     midnight = datetime(2024, 1, 2)
     assert sorted(t.files_matching("d", midnight, midnight)) == files(2)
     assert sorted(t.files_matching("k", 1, 4)) == files(1, 2, 3, 4)
+
+
+def test_decimal_footer_stats_prune(spark, tmp_path):
+    """Spark writes decimals up to precision 18 as INT32/INT64, whose
+    min/max pyarrow does not decode: the footer stats scale the raw
+    unscaled integers like the FIXED_LEN_BYTE_ARRAY path does, so a
+    predicate on a decimal data column prunes files."""
+    from decimal import Decimal
+
+    schema = "k long, a decimal(10,2), b decimal(5,1), c decimal(30,2)"
+    rows = [
+        [(1, Decimal("-7.50"), Decimal("-3.5"), Decimal("-1.00")),
+         (2, Decimal("1.25"), Decimal("2.0"), Decimal("5.25"))],
+        [(3, Decimal("100.00"), Decimal("50.5"), Decimal("700.00"))],
+    ]
+    t = DeltaishTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame(rows[0], schema).coalesce(1),
+    )
+    t.append(spark.createDataFrame(rows[1], schema).coalesce(1))
+    stats = {
+        (s := json.loads(a["stats"]))["minValues"]["k"]: (p, s)
+        for p, a in t._snapshot().files.items()
+    }
+    (p1, s1), (p3, s3) = stats[1], stats[3]
+    assert s1["minValues"] == {"k": 1, "a": "-7.50", "b": "-3.5", "c": "-1.00"}
+    assert s1["maxValues"] == {"k": 2, "a": "1.25", "b": "2.0", "c": "5.25"}
+    assert s3["minValues"]["a"] == s3["maxValues"]["a"] == "100.00"
+    for col, lo, hi in (("a", "50", "150"), ("b", "10", "60")):
+        assert t.files_matching(col, Decimal(lo), Decimal(hi)) == [p3]
+        assert t.files_matching_predicate(
+            F.col(col).between(Decimal(lo), Decimal(hi))
+        ) == [p3]
+    assert t.files_matching("a", Decimal("-8"), Decimal("0")) == [p1]
+    pruned = t.read_pruned("b", Decimal(10), Decimal(60))
+    assert [r.k for r in pruned.collect()] == [3]
 
 
 
@@ -6033,33 +6070,34 @@ def test_commit_next_protocol_change_gate(spark, tmp_path):
 
 
 def test_concurrent_protocol_upgrades_conflict(spark, tmp_path, monkeypatch):
-    """The exact ADVICE scenario: enable_v2_checkpoints vs
-    enable_vacuum_protocol_check racing from one snapshot. The loser
-    must FAIL (not drop the winner's feature); a rerun on the fresh
-    snapshot then carries BOTH features."""
+    """enable_v2_checkpoints vs enable_vacuum_protocol_check racing
+    from one snapshot. The rival
+    lands after the loser read its snapshot and before the loser's
+    commit, so the loser must FAIL on the protocol change it did not
+    see (ProtocolChangedException), not drop the winner's feature; a
+    rerun on the fresh snapshot then carries BOTH features."""
     src = _orders(spark, 30)
     t = DeltaishTable.create(spark, str(tmp_path / "t"), src)
-    orig = dlog.write_commit
+    orig = t._commit_next
     fired = {"done": False}
 
-    def hook(path, v, actions, *a, **kw):
-        # sneak the other upgrade in just before ours would land
-        if not fired["done"] and any("protocol" in x for x in actions):
+    def rival_first(actions, *a, **kw):
+        # the rival lands after the upgrade read its snapshot
+        if not fired["done"]:
             fired["done"] = True
             DeltaishTable(spark, t.path).enable_vacuum_protocol_check()
-        return orig(path, v, actions, *a, **kw)
+        return orig(actions, *a, **kw)
 
-    monkeypatch.setattr(dlog, "write_commit", hook)
-    with pytest.raises(ConcurrentCommitError, match="protocol"):
+    monkeypatch.setattr(t, "_commit_next", rival_first)
+    with pytest.raises(ConcurrentCommitError, match="ProtocolChangedException"):
         t.enable_v2_checkpoints()
-    monkeypatch.setattr(dlog, "write_commit", orig)
+    monkeypatch.undo()
     proto = t._snapshot().protocol
     assert "vacuumProtocolCheck" in proto["writerFeatures"]  # winner intact
     t.enable_v2_checkpoints()  # rerun on fresh snapshot
     proto = t._snapshot().protocol
     assert "vacuumProtocolCheck" in proto["writerFeatures"]
     assert "v2Checkpoint" in proto["writerFeatures"]
-
 
 
 def test_drop_check_constraint_conflicts_with_concurrent_metadata(
