@@ -1,5 +1,5 @@
-"""Roaring bitmaps for Delta deletion vectors — pure stdlib, from the
-public specs.
+"""Roaring bitmaps for Delta deletion vectors, from the public specs:
+stdlib for the framing, numpy for decoding containers.
 
 Two layers, both implemented strictly enough that ANY deviation from
 our reading of the spec fails loudly instead of decoding wrong:
@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import struct
 import zlib
+
+import numpy as np
 
 MAGIC = 1681511377  # RoaringBitmapArray portable magic (PROTOCOL.md)
 
@@ -72,9 +74,10 @@ def _frame32(containers: list[tuple[int, int, bytes]]) -> bytes:
     return bytes(out)
 
 
-def deserialize32(buf: bytes, base: int = 0) -> tuple[list[int], int]:
-    """(sorted uint32 values, bytes consumed) from a standard-format
-    stream starting at ``base``. Validates every structural field."""
+def _decode32(buf, base: int = 0) -> tuple[np.ndarray, int]:
+    """(sorted uint32 values as int64, bytes consumed) from a
+    standard-format stream starting at ``base``. Validates every
+    structural field; each container decodes as one numpy step."""
     if len(buf) - base < 4:
         raise ValueError("roaring32: truncated cookie")
     (cookie32,) = struct.unpack_from("<I", buf, base)
@@ -94,96 +97,98 @@ def deserialize32(buf: bytes, base: int = 0) -> tuple[list[int], int]:
         off = base + 4 + nb
     else:
         raise ValueError(f"roaring32: bad cookie {cookie}")
-    keys, cards = [], []
-    for i in range(n):
-        if len(buf) < off + 4:
-            raise ValueError("roaring32: truncated descriptive header")
-        k, cm1 = struct.unpack_from("<HH", buf, off)
-        keys.append(k)
-        cards.append(cm1 + 1)
-        off += 4
+    if len(buf) < off + 4 * n:
+        raise ValueError("roaring32: truncated descriptive header")
+    header = struct.unpack_from(f"<{2 * n}H", buf, off)
+    keys, cards = header[0::2], [c + 1 for c in header[1::2]]
+    off += 4 * n
     has_offsets = run_flags is None or n >= _NO_OFFSET_THRESHOLD
-    offsets = []
+    offsets: tuple[int, ...] = ()
     if has_offsets:
-        for i in range(n):
-            if len(buf) < off + 4:
-                raise ValueError("roaring32: truncated offset header")
-            (o,) = struct.unpack_from("<I", buf, off)
-            offsets.append(base + o)
-            off += 4
-    values: list[int] = []
+        if len(buf) < off + 4 * n:
+            raise ValueError("roaring32: truncated offset header")
+        offsets = tuple(
+            base + o for o in struct.unpack_from(f"<{n}I", buf, off)
+        )
+        off += 4 * n
+    parts: list[np.ndarray] = []
     pos = off
     for i in range(n):
-        if has_offsets:
-            if offsets[i] != pos:
-                # offsets are relative to the stream start; trust but
-                # verify — a mismatch means our framing assumption is
-                # wrong for this producer, refuse to guess
-                raise ValueError(
-                    f"roaring32: container {i} offset {offsets[i]} != "
-                    f"cursor {pos}"
-                )
+        if has_offsets and offsets[i] != pos:
+            # offsets are relative to the stream start; trust but
+            # verify — a mismatch means our framing assumption is
+            # wrong for this producer, refuse to guess
+            raise ValueError(
+                f"roaring32: container {i} offset {offsets[i]} != "
+                f"cursor {pos}"
+            )
         is_run = run_flags is not None and (
             run_flags[i >> 3] >> (i & 7)
         ) & 1
-        hi = keys[i] << 16
         card = cards[i]
         if is_run:
+            if len(buf) < pos + 2:
+                raise ValueError("roaring32: truncated run container")
             (n_runs,) = struct.unpack_from("<H", buf, pos)
             pos += 2
-            total = 0
-            for _ in range(n_runs):
-                start, length = struct.unpack_from("<HH", buf, pos)
-                pos += 4
-                values.extend(hi | v for v in range(start, start + length + 1))
-                total += length + 1
-            if total != card:
+            if len(buf) < pos + 4 * n_runs:
+                raise ValueError("roaring32: truncated run container")
+            runs = np.frombuffer(buf, "<u2", 2 * n_runs, pos).astype(np.int64)
+            pos += 4 * n_runs
+            starts, lengths = runs[0::2], runs[1::2] + 1
+            if int(lengths.sum()) != card:
                 raise ValueError(
                     "roaring32: run container cardinality mismatch"
                 )
+            # each run start repeated over its length, plus 0..len-1
+            first = np.repeat(np.cumsum(lengths) - lengths, lengths)
+            vals = np.repeat(starts, lengths) + np.arange(card) - first
         elif card > _ARRAY_MAX:
-            chunk = buf[pos : pos + 8192]
-            if len(chunk) < 8192:
+            if len(buf) < pos + 8192:
                 raise ValueError("roaring32: truncated bitmap container")
+            bits = np.frombuffer(buf, np.uint8, 8192, pos)
             pos += 8192
-            total = 0
-            for byte_i, b in enumerate(chunk):
-                while b:
-                    low = b & (-b)
-                    values.append(hi | (byte_i << 3) | low.bit_length() - 1)
-                    total += 1
-                    b ^= low
-            if total != card:
+            vals = np.flatnonzero(np.unpackbits(bits, bitorder="little"))
+            if len(vals) != card:
                 raise ValueError(
                     "roaring32: bitmap container cardinality mismatch"
                 )
         else:
-            end = pos + 2 * card
-            if len(buf) < end:
+            if len(buf) < pos + 2 * card:
                 raise ValueError("roaring32: truncated array container")
-            vals = struct.unpack_from(f"<{card}H", buf, pos)
-            pos = end
-            values.extend(hi | v for v in vals)
-    return values, pos - base
+            vals = np.frombuffer(buf, "<u2", card, pos)
+            pos += 2 * card
+        parts.append(vals.astype(np.int64) | (keys[i] << 16))
+    out = np.concatenate(parts) if parts else np.empty(0, np.int64)
+    return out, pos - base
+
+
+def deserialize32(buf: bytes, base: int = 0) -> tuple[list[int], int]:
+    """``_decode32`` with the values as a list."""
+    vals, used = _decode32(buf, base)
+    return vals.tolist(), used
 
 
 # ------------------------------------- 64-bit RoaringBitmapArray blob
 
 
-def frame_rbm_array(chunks: list[tuple[int, int, bytes]]) -> bytes:
-    """The DV data blob from ready roaring containers, one per
-    65,536-row chunk: ``(chunk, cardinality, payload)`` where ``chunk``
-    is ``position >> 16`` and ``payload`` is the container (sorted
-    little-endian uint16 lows up to 4096 values, else the 8 KiB
-    bitmap). Chunks are grouped into 32-bit bitmaps by ``chunk >> 16``
-    (the high 32 bits of the position). Every payload is checked
-    against its cardinality."""
+def frame_rbm_array(chunks: list[tuple[int, int, list[int] | bytes]]) -> bytes:
+    """The DV data blob from one entry per 65,536-row chunk:
+    ``(chunk, cardinality, values)`` where ``chunk`` is ``position >>
+    16`` and ``values`` the chunk's sorted distinct low 16 bits, or
+    the ready 8 KiB bitmap container as ``bytes``. Chunks are grouped
+    into 32-bit bitmaps by ``chunk >> 16`` (the high 32 bits of the
+    position). Every container is checked against its cardinality."""
     by_key: dict[int, list[tuple[int, int, bytes]]] = {}
-    for chunk, card, payload in sorted(chunks, key=lambda c: c[0]):
+    for chunk, card, vals in sorted(chunks, key=lambda c: c[0]):
         if chunk < 0:
             raise ValueError("deletion vector: negative row position")
         by_key.setdefault(chunk >> 16, []).append(
-            (chunk & 0xFFFF, card, payload)
+            (
+                chunk & 0xFFFF,
+                card,
+                vals if isinstance(vals, bytes) else _container(vals),
+            )
         )
     out = bytearray(struct.pack("<I", MAGIC))
     out += struct.pack("<q", len(by_key))
@@ -202,13 +207,13 @@ def serialize_rbm_array(positions: list[int]) -> bytes:
     for p in sorted(set(positions)):
         chunks.setdefault(p >> 16, []).append(p & 0xFFFF)
     return frame_rbm_array(
-        [(c, len(lows), _container(lows)) for c, lows in chunks.items()]
+        [(c, len(lows), lows) for c, lows in chunks.items()]
     )
 
 
-def deserialize_rbm_array(blob: bytes) -> list[int]:
-    """Sorted 64-bit row positions from a DV data blob. Magic and
-    framing are validated; any surprise raises."""
+def _decode_rbm_array(blob) -> np.ndarray:
+    """Sorted 64-bit row positions (int64) from a DV data blob. Magic
+    and framing are validated; any surprise raises."""
     if len(blob) < 12:
         raise ValueError("deletion vector: blob too short")
     (magic,) = struct.unpack_from("<I", blob, 0)
@@ -221,7 +226,7 @@ def deserialize_rbm_array(blob: bytes) -> list[int]:
     if n_bitmaps < 0:
         raise ValueError("deletion vector: negative bitmap count")
     pos = 12
-    out: list[int] = []
+    parts: list[np.ndarray] = []
     last_key = -1
     for _ in range(n_bitmaps):
         if len(blob) < pos + 4:
@@ -231,15 +236,20 @@ def deserialize_rbm_array(blob: bytes) -> list[int]:
             raise ValueError("deletion vector: bitmap keys not increasing")
         last_key = key
         pos += 4
-        vals, used = deserialize32(blob, pos)
+        vals, used = _decode32(blob, pos)
         pos += used
-        out.extend((key << 32) | v for v in vals)
+        parts.append(vals | (key << 32))
     if pos != len(blob):
         raise ValueError(
             f"deletion vector: {len(blob) - pos} trailing byte(s) after "
             "the last bitmap — unrecognized framing"
         )
-    return out
+    return np.concatenate(parts) if parts else np.empty(0, np.int64)
+
+
+def deserialize_rbm_array(blob: bytes) -> list[int]:
+    """Sorted 64-bit row positions from a DV data blob, as a list."""
+    return _decode_rbm_array(blob).tolist()
 
 
 # ------------------------------------------------------ DV file layout
@@ -264,7 +274,7 @@ def pack_dv_entry(positions: list[int]) -> tuple[bytes, int]:
     return frame_entry(serialize_rbm_array(positions))
 
 
-def unpack_dv_entry(buf: bytes, offset: int, size_in_bytes: int) -> list[int]:
+def _unpack_entry(buf: bytes, offset: int, size_in_bytes: int) -> np.ndarray:
     """Decode the entry at ``offset``; every frame field is verified
     against the descriptor before any bitmap decoding happens."""
     if len(buf) < offset + 4:
@@ -279,11 +289,16 @@ def unpack_dv_entry(buf: bytes, offset: int, size_in_bytes: int) -> list[int]:
     end = start + data_size
     if len(buf) < end + 4:
         raise ValueError("deletion vector: truncated entry")
-    data = buf[start:end]
+    data = memoryview(buf)[start:end]
     (crc,) = struct.unpack_from(">I", buf, end)
     if crc != checksum(data):
         raise ValueError("deletion vector: checksum mismatch")
-    return deserialize_rbm_array(data)
+    return _decode_rbm_array(data)
+
+
+def unpack_dv_entry(buf: bytes, offset: int, size_in_bytes: int) -> list[int]:
+    """``_unpack_entry`` with the positions as a list."""
+    return _unpack_entry(buf, offset, size_in_bytes).tolist()
 
 
 # --------------------------------------------------------- base85 ids
@@ -330,8 +345,9 @@ def b85_decode(text: str) -> bytes:
 # ----------------------------------------------- descriptor resolution
 
 
-def read_descriptors(table_path: str, dvs: list[dict]) -> list[list[int]]:
-    """Deleted row positions for each deletionVector descriptor, given
+def read_descriptors(table_path: str, dvs: list[dict]) -> list[np.ndarray]:
+    """Deleted row positions (sorted int64 arrays) for each
+    deletionVector descriptor, given
     the table root ('u' paths resolve against it). Pure file IO, no
     Spark needed; a DV file that several descriptors share is read
     once. Every frame field (on-disk version byte, dataSize vs
@@ -352,7 +368,7 @@ def read_descriptors(table_path: str, dvs: list[dict]) -> list[list[int]]:
                     "deletion vector: inline sizeInBytes exceeds decoded "
                     "payload"
                 )
-            out.append(deserialize_rbm_array(data[:size]))
+            out.append(_decode_rbm_array(data[:size]))
             continue
         if st == "u":
             enc = dv["pathOrInlineDv"]
@@ -385,11 +401,11 @@ def read_descriptors(table_path: str, dvs: list[dict]) -> list[list[int]]:
                     f"{buf[0] if buf else '<empty>'}"
                 )
         out.append(
-            unpack_dv_entry(buf, int(dv["offset"]), int(dv["sizeInBytes"]))
+            _unpack_entry(buf, int(dv["offset"]), int(dv["sizeInBytes"]))
         )
     return out
 
 
 def read_descriptor(table_path: str, dv: dict) -> list[int]:
-    """``read_descriptors`` of one descriptor."""
-    return read_descriptors(table_path, [dv])[0]
+    """``read_descriptors`` of one descriptor, as a list."""
+    return read_descriptors(table_path, [dv])[0].tolist()

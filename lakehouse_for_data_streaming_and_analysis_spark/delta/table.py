@@ -17,7 +17,6 @@ import math
 import os
 import re
 import shutil
-import struct
 import time
 import uuid
 from collections.abc import Callable
@@ -82,23 +81,25 @@ def file_footer_stats(path: str, indexed: set[str] | None = None) -> dict:
                 ncs[name] = ncs.get(name, 0) + int(nc)
             if st is None or not st.has_min_max:
                 continue
-            try:
-                mn, mx = st.min, st.max
-            except Exception:
+            if col.physical_type in ("INT32", "INT64") and (
+                st.logical_type.type == "DECIMAL"
+            ):
                 # pyarrow decodes no min/max for INT32/INT64-backed
                 # decimals (Spark's layout up to precision 18); their
-                # raw integers are the unscaled values. Any other
-                # undecodable type keeps no min/max: per-column stats
-                # are OPTIONAL in the protocol — a file without them
-                # simply never skips, it never corrupts
-                if st.logical_type.type != "DECIMAL" or (
-                    col.physical_type not in ("INT32", "INT64")
-                ):
-                    continue
+                # raw integers are the unscaled values
                 scale = md.schema.column(ci).scale
                 mn, mx = (
                     Decimal(v).scaleb(-scale) for v in (st.min_raw, st.max_raw)
                 )
+            else:
+                try:
+                    mn, mx = st.min, st.max
+                except Exception:
+                    # any other undecodable type keeps no min/max:
+                    # per-column stats are OPTIONAL in the protocol — a
+                    # file without them simply never skips, it never
+                    # corrupts
+                    continue
             if name not in mins or mn < mins[name]:
                 mins[name] = mn
             if name not in maxs or mx > maxs[name]:
@@ -141,6 +142,8 @@ class DeltaishTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = os.path.abspath(path)
+        # (descriptor key, frame) of the last _dv_pos_df call
+        self._dv_frame: tuple[tuple, DataFrame] | None = None
 
     # ------------------------------------------------------------ lifecycle
 
@@ -2285,16 +2288,18 @@ class DeltaishTable:
 
         The bitmaps are built in ONE JVM aggregate grouped by (file,
         65,536-row chunk) over the new matches plus the candidate
-        files' prior DV positions (decoded on the driver, as every
-        DV-aware scan decodes them). Each chunk comes back as a
-        ready roaring container — its sorted low 16 bits up to 4096
-        values, else the 8 KiB bitmap of two ``bitmap_construct_agg``
-        buckets, whose byte layout is the bitmap container's — and
+        files' prior DV positions (the frame the scan of ``cands``
+        already decoded). Each chunk comes back as a ready roaring
+        container — its sorted low 16 bits up to 4096 values, else
+        the 8 KiB bitmap of two ``bitmap_construct_agg`` buckets,
+        whose byte layout is the bitmap container's — and
         ``roaring.frame_rbm_array`` frames them. The driver receives
-        at most one container per touched chunk, O(DV bytes) and never
-        the (file, position) pairs (DECISIONS §56). A flag marks new
-        rows: a candidate file none of whose chunks gained one keeps
-        its DV unchanged.
+        one container per chunk that holds a new match or a prior
+        deleted position of a candidate file: O(DV bytes) of the
+        touched and DV'd candidate files, never the (file, position)
+        pairs (DECISIONS §56). A flag marks new rows: a candidate file
+        none of whose chunks gained one keeps its DV unchanged, and
+        its containers are dropped.
 
         Per touched file the commit carries a remove + re-add with the
         merged DV, or a pure remove when every row of the file is now
@@ -2343,17 +2348,14 @@ class DeltaishTable:
             )
             .collect()
         )
-        by_file: dict[str, list[tuple[int, int, bytes]]] = {}
+        by_file: dict[str, list[tuple[int, int, list[int] | bytes]]] = {}
         touched = set()
         for r in chunks:
-            lows = r["lows"]
             by_file.setdefault(r["__fp"], []).append(
                 (
                     r["chunk"],
                     r["card"],
-                    bytes(r["bits"])
-                    if lows is None
-                    else struct.pack(f"<{len(lows)}H", *lows),
+                    r["lows"] if r["bits"] is None else bytes(r["bits"]),
                 )
             )
             if r["new"]:
@@ -2433,21 +2435,46 @@ class DeltaishTable:
         """(file URI, row index) pairs deleted by the given
         deletionVector descriptors: the anti-join side of a DV-aware
         scan, and the prior positions a DV write unions in. The
-        bitmaps are decoded ON THE DRIVER (``roaring.read_descriptors``
-        validates every frame field and the CRC, so a malformed or
-        vacuumed DV refuses here, before any job) and reach Spark as
-        one (file URI, positions array) Arrow row per file, exploded in
-        the JVM — no Python worker. The frame holds at most the deleted
-        rows of the files read; the scan broadcasts it, which collects
-        it to the driver anyway (DECISIONS §56)."""
+        bitmaps are decoded ON THE DRIVER into one int64 array per
+        file (``roaring.read_descriptors`` validates every frame field
+        and the CRC, so a malformed or vacuumed DV refuses here,
+        before any job) and reach Spark as one (file URI, positions)
+        Arrow row per file, exploded in the JVM — no Python worker.
+        The driver holds 8 bytes per deleted row of the files read,
+        the size of the broadcast the scan builds from this frame
+        (DECISIONS §56). The last frame is kept: a merge-on-read
+        DELETE or UPDATE scans and unions the same descriptors, and
+        decodes them once."""
+        import numpy as np
+        import pyarrow as pa
+
+        key = tuple(
+            sorted(
+                (rel, dv["storageType"], dv["pathOrInlineDv"],
+                 dv.get("offset"), dv["sizeInBytes"])
+                for rel, dv in dv_map.items()
+            )
+        )
+        if self._dv_frame is not None and self._dv_frame[0] == key:
+            return self._dv_frame[1]
         rels = list(dv_map)
         positions = roaring.read_descriptors(
             self.path, [dv_map[r] for r in rels]
         )
-        return self._local_df(
-            [(self._file_uri(r), p) for r, p in zip(rels, positions)],
-            "__dv_fp string, __dv_ris array<bigint>",
+        offsets = np.zeros(len(rels) + 1, np.int32)
+        np.cumsum([len(p) for p in positions], out=offsets[1:])
+        df = self.spark.createDataFrame(
+            pa.table(
+                {
+                    "__dv_fp": [self._file_uri(r) for r in rels],
+                    "__dv_ris": pa.ListArray.from_arrays(
+                        offsets, np.concatenate(positions)
+                    ),
+                }
+            )
         ).select("__dv_fp", F.explode("__dv_ris").alias("__dv_ri"))
+        self._dv_frame = (key, df)
+        return df
 
     def _read_snapshot_files(
         self,

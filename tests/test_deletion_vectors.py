@@ -481,12 +481,14 @@ def test_dv_build_is_distributed_no_row_level_collect(
     spark, tmp_path, monkeypatch
 ):
     """Scale pin: a merge-on-read DELETE builds its bitmaps in one JVM
-    aggregate whose collect returns at most one row per (touched file,
-    65,536-row chunk), never the (file, position) pairs; neither the
-    DELETE nor a DV-aware read plans a Python-worker node; the DELETE
-    runs at most 2 Spark jobs, the aggregate's two stages (3 once the
-    files carry DVs: the scan then broadcasts them), counted by job
-    tag; and a second DELETE unions the prior DVs."""
+    aggregate whose collect returns one row per 65,536-row chunk that
+    holds a new match or a prior deleted position of a candidate file,
+    never the (file, position) pairs; neither the DELETE nor a
+    DV-aware read plans a Python-worker node; the DELETE runs at most
+    2 Spark jobs, the aggregate's two stages (3 once the files carry
+    DVs: the scan then broadcasts them), counted by job tag, and
+    decodes the prior DVs once for its scan and its aggregate; and a
+    later DELETE unions the prior DVs."""
     sc = spark.sparkContext
     DataFrame = type(spark.range(1))  # the concrete (classic) class
     # two files of 70,000 ids in order: chunks 0 and 1 each, and a
@@ -511,16 +513,26 @@ def test_dv_build_is_distributed_no_row_level_collect(
         )
         return rows
 
+    real_read = R.read_descriptors
+    decodes = []
+
+    def count_decodes(path, dvs):
+        decodes.append(len(dvs))
+        return real_read(path, dvs)
+
     def delete(tag, cond):
         collects.clear()
+        decodes.clear()
         sc.addJobTag(tag)
         try:
             with monkeypatch.context() as m:
                 m.setattr(DataFrame, "collect", spy)
+                m.setattr(R, "read_descriptors", count_decodes)
                 t.delete(cond, mode="merge_on_read")
         finally:
             sc.removeJobTag(tag)
         assert len(collects) == 1, [c[0] for c in collects]
+        assert len(decodes) <= 1, decodes
         cols, plan, n = collects[0]
         assert "chunk" in cols
         assert not any(x in plan for x in _PYTHON_NODES), plan
@@ -532,13 +544,25 @@ def test_dv_build_is_distributed_no_row_level_collect(
     # a range in the first file only: stats skip the second file, and
     # the first file's chunk 1 comes back from its prior DV alone
     n, jobs = delete("dv.second", F.col("id").between(10, 20))
-    assert n == 2 and jobs <= 3, (n, jobs)
+    assert n == 2 and jobs <= 3 and decodes == [1], (n, jobs, decodes)
+    # stats cannot prune ``id * 2``: both DV'd files are candidates,
+    # only the first gains a row, and the second's chunks come back
+    # from its prior DV alone and are dropped
+    before = t._snapshot().files
+    n, jobs = delete("dv.third", F.col("id") * 2 == 10)
+    assert n == 4 and jobs <= 3 and decodes == [2], (n, jobs, decodes)
+    after = t._snapshot().files
+    assert [p for p in after if after[p] != before[p]] == [
+        p for p in first_id if first_id[p] == 0
+    ]
 
     read = t.read()
     plan = read._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" in plan
     assert not any(x in plan for x in _PYTHON_NODES), plan
-    dead = {i for i in range(140_000) if i % 97 == 0 or 10 <= i <= 20}
+    dead = {
+        i for i in range(140_000) if i % 97 == 0 or 10 <= i <= 20 or i == 5
+    }
     assert read.count() == 140_000 - len(dead)
     snap = t._snapshot()
     assert sum(
@@ -680,7 +704,8 @@ def test_read_descriptors_reads_a_shared_file_once(tmp_path, monkeypatch):
         return real_open(path, *a, **kw)
 
     monkeypatch.setattr(builtins, "open", spy)
-    assert R.read_descriptors(str(tmp_path), dvs) == [[1, 2], [70_000]]
+    got = R.read_descriptors(str(tmp_path), dvs)
+    assert [a.tolist() for a in got] == [[1, 2], [70_000]]
     assert len(opened) == 1
     monkeypatch.undo()
     with pytest.raises(ValueError, match="dataSize"):
